@@ -4409,8 +4409,10 @@ def extract_image_profile(media: DataFrame) -> DataFrame:
                 rows.append(
                     (media_id,) + meta + (n, entropy, head, feat, h64, h256)
                 )
+            # object dtype: a batch mixing hashes and NULLs would otherwise
+            # infer float64 and round the 64-bit hashes (to 1024 at 2^62)
             yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_PROFILE_SCHEMA]
+                rows, columns=[f.name for f in IMAGE_PROFILE_SCHEMA], dtype=object
             )
 
     return media.select("media_id", "payload").mapInPandas(

@@ -206,8 +206,6 @@ def attach_phash(media: DataFrame, *, nbits: int = 64) -> DataFrame:
     low = _LOWFREQ if nbits == 64 else _LOWFREQ_WIDE
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hashes = []
-
         def one(p):
             w = (
                 phash_from_gray(_decode_gray(bytes(p)), low=low)
@@ -219,7 +217,11 @@ def attach_phash(media: DataFrame, *, nbits: int = 64) -> DataFrame:
             return w[0] if nbits == 64 else w
 
         for pdf in it:
-            hashes = [one(p) for p in pdf["payload"]]
+            # object dtype: hashes mixed with NULLs would infer float64
+            # and round the 64-bit words
+            hashes = pd.Series(
+                [one(p) for p in pdf["payload"]], index=pdf.index, dtype=object
+            )
             yield pd.DataFrame({"media_id": pdf["media_id"], "phash": hashes})
 
     schema = PHASH_SCHEMA if nbits == 64 else PHASH256_SCHEMA

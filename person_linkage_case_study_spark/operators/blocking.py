@@ -54,6 +54,19 @@ class PairStats(NamedTuple):
     str_bytes_r: int = 0
 
 
+def string_payload_sql(df: DataFrame, exclude: Sequence[str] = ()) -> str:
+    """Σ ``length()`` over ``df``'s string columns not in ``exclude``, as
+    ONE SQL expression of type BIGINT (one gateway call to bind, however
+    many columns); a NULL string contributes 0 (it occupies no
+    variable-width section)."""
+    terms = [
+        f"coalesce(CAST(length(`{f.name}`) AS BIGINT), 0)"
+        for f in df.schema.fields
+        if f.dataType.typeName() == "string" and f.name not in exclude
+    ]
+    return " + ".join(terms) or "CAST(0 AS BIGINT)"
+
+
 def blocked_pairs(
     left: DataFrame,
     right: DataFrame,
@@ -136,20 +149,6 @@ def estimate_pair_stats(
     contribute nothing (``length(NULL)`` is NULL, skipped by ``sum``) —
     correct, since a NULL occupies no variable-width section."""
     keys = list(block_on)
-
-    def _str_payload(df: DataFrame, *, exclude_keys: bool):
-        cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() == "string"
-            and not (exclude_keys and f.name in keys)
-        ]
-        if not cols:
-            return F.lit(0).cast("long")
-        total = F.coalesce(F.length(cols[0]).cast("long"), F.lit(0))
-        for c in cols[1:]:
-            total = total + F.coalesce(F.length(c).cast("long"), F.lit(0))
-        return total
     # rows NULL in any blocking key never join — exclude them up front so
     # they land in neither the pair total nor the row totals (the NULL
     # group would otherwise survive the FULL OUTER join as an unmatched
@@ -172,7 +171,7 @@ def estimate_pair_stats(
         *keys,
         F.lit(1).alias("__l"),
         F.lit(0).alias("__r"),
-        _str_payload(left, exclude_keys=False).alias("__pl"),
+        F.expr(string_payload_sql(left)).alias("__pl"),
         F.lit(0).cast("long").alias("__pr"),
     ).unionByName(
         right.filter(not_null).select(
@@ -180,7 +179,7 @@ def estimate_pair_stats(
             F.lit(0).alias("__l"),
             F.lit(1).alias("__r"),
             F.lit(0).cast("long").alias("__pl"),
-            _str_payload(right, exclude_keys=True).alias("__pr"),
+            F.expr(string_payload_sql(right, exclude=keys)).alias("__pr"),
         )
     )
     per_key = tagged.groupBy(*keys).agg(
@@ -208,15 +207,63 @@ def estimate_pair_stats(
     )
 
 
-def estimate_pair_count(
-    left: DataFrame, right: DataFrame, block_on: Sequence[str]
-) -> int:
-    """K8: pre-join pair-count estimate — per-key counts on each side,
-    joined, Σ count_l × count_r (Splink's
-    ``count_num_comparisons_from_blocking_rule``). Two partial aggs plus a
-    tiny join: never materializes the pairs.
-    """
-    return estimate_pair_stats(left, right, block_on)[0]
+class KeyProfile(NamedTuple):
+    """One side's block statistics for several key sets (see
+    :func:`max_key_multiplicity`)."""
+
+    # key set -> most rows sharing one non-NULL value of those columns
+    max_multiplicity: dict[tuple[str, ...], int]
+    # most string bytes in any one row (every string column, NULL = 0)
+    max_str_payload: int
+
+
+def max_key_multiplicity(
+    df: DataFrame, key_sets: Sequence[Sequence[str]]
+) -> KeyProfile:
+    """For each key set, the most rows of ``df`` that share one non-NULL
+    value of those columns, plus ``df``'s largest per-row string payload
+    (:func:`string_payload_sql` over every string column), from ONE
+    aggregation: a GROUPING SETS aggregate reads ``df`` once for all the
+    key sets, then a global collapse takes each set's largest group.
+
+    This bounds a blocking pass without running it: with ``r`` the
+    reference side's largest multiplicity over the pass's keys, every
+    left row meets at most ``r`` right rows, so the pass's pairs and its
+    hottest key's pairs are both at most ``n_left × r``. The groups are
+    Spark's own grouping keys (floats normalised, NULL-keyed groups
+    dropped), so a key the join treats as one value is never split."""
+    sets = list(dict.fromkeys(tuple(k) for k in key_sets))
+    cols = list(dict.fromkeys(c for s in sets for c in s))
+    grouped = (
+        df.selectExpr(
+            *[f"`{c}`" for c in cols], f"{string_payload_sql(df)} AS __p"
+        )
+        .groupingSets([list(s) for s in sets], *cols)
+        .agg(
+            F.expr("count(1) AS __n"),
+            F.expr("max(__p) AS __p"),
+            F.expr("grouping_id() AS __g"),
+        )
+    )
+
+    def largest_group(key_set: tuple[str, ...]) -> str:
+        # grouping_id sets bit (n-1-i) for every column i NOT in the set
+        gid = sum(
+            1 << (len(cols) - 1 - i) for i, c in enumerate(cols) if c not in key_set
+        )
+        keep = " AND ".join(
+            [f"__g = {gid}"] + [f"`{c}` IS NOT NULL" for c in key_set]
+        )
+        return f"max(CASE WHEN {keep} THEN __n END)"
+
+    row = grouped.selectExpr(
+        *[f"{largest_group(s)} AS __r{i}" for i, s in enumerate(sets)],
+        "max(__p) AS __p",
+    ).first()
+    return KeyProfile(
+        {s: int(row[f"__r{i}"] or 0) for i, s in enumerate(sets)},
+        int(row["__p"] or 0),
+    )
 
 
 def estimate_pair_row_bytes(

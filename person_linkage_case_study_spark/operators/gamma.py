@@ -26,6 +26,14 @@ from pyspark.sql import functions as F
 from ..functions.similarity import JVM_JW_NAME, ensure_jvm_jw, jaro_winkler_udf
 
 
+def _spark_sql_number(v: int | float) -> str:
+    """A Spark SQL literal of the type ``F.lit(v)`` binds: ints plain,
+    floats as CAST('<repr>' AS DOUBLE) (a bare 2.5 parses as DECIMAL)."""
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    return str(v)
+
+
 @dataclass
 class ComparisonLevel:
     """One level of a comparison. ``kind`` ∈ {null, exact, jaro_winkler,
@@ -119,10 +127,11 @@ class Comparison:
         function) or a ``custom`` level (whose ``sql`` template is
         DuckDB dialect by contract) — in which case the caller falls
         back to the Column form. Literal semantics are preserved
-        exactly: gamma ordinals are INT literals as with ``F.lit(int)``,
-        and the JW threshold binds through CAST('<repr>' AS DOUBLE) so
-        it is the identical IEEE double ``F.lit(float)`` bound (a bare
-        SQL float literal would be a DECIMAL)."""
+        exactly: gamma ordinals and int bands are INT literals as with
+        ``F.lit(int)``, and the JW threshold and float bands bind through
+        CAST('<repr>' AS DOUBLE) so each is the identical IEEE double
+        ``F.lit(float)`` bound (a bare SQL float literal would be a
+        DECIMAL)."""
         l = f"`{self.col}{left_suffix}`"
         r = f"`{self.col}{right_suffix}`"
         non_null = [lv for lv in self.levels if lv.kind != "null"]
@@ -137,10 +146,13 @@ class Comparison:
                     return None
                 arms.append(
                     f"WHEN `{jw_col}` >="
-                    f" CAST('{float(lv.threshold)!r}' AS DOUBLE) THEN {gamma}"
+                    f" {_spark_sql_number(float(lv.threshold))} THEN {gamma}"
                 )
             elif lv.kind == "banded":
-                arms.append(f"WHEN abs({l} - {r}) <= {lv.band} THEN {gamma}")
+                arms.append(
+                    f"WHEN abs({l} - {r}) <= {_spark_sql_number(lv.band)}"
+                    f" THEN {gamma}"
+                )
             elif lv.kind == "custom":
                 return None
             elif lv.kind == "else":

@@ -184,6 +184,13 @@ def score_pairs(
     them into a single WholeStageCodegen stage over the blocked join output.
     ``jw_strategy`` is forwarded to :func:`add_gammas` (see its docstring).
     """
+    # re-scoring a scored frame replaces what this call emits (the
+    # selectExpr('*', ...) projections would otherwise add a second,
+    # ambiguous column of each name)
+    emitted = ["match_weight", "match_probability"]
+    if compute_gammas:
+        emitted += [c.gamma_col for c in model.comparisons]
+    pairs = pairs.drop(*emitted)
     df = (
         add_gammas(pairs, model.comparisons, jw_strategy=jw_strategy)
         if compute_gammas

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..operators.blocking import (
+    KeyProfile,
     PairStats,
     blocked_pairs,
     derive_pair_pin,
@@ -33,6 +34,8 @@ from ..operators.blocking import (
     derive_salt,
     estimate_pair_row_bytes,
     estimate_pair_stats,
+    max_key_multiplicity,
+    string_payload_sql,
 )
 from ..operators.dedup import keep_best, max_per_group_with_ties
 from ..operators.joins import anti_join
@@ -40,6 +43,8 @@ from ..operators.scoring import LinkageModel, score_pairs
 from ..session import shuffle_partitions
 
 CENSUS_DAY = "2030-04-01"
+
+CHECKPOINT_MODES = ("local", "reliable", "persist", "off")
 
 
 def switch_first_and_last_names(df: DataFrame) -> DataFrame:
@@ -57,6 +62,21 @@ def switch_first_and_last_names(df: DataFrame) -> DataFrame:
             lcol, fcol
         ).withColumnRenamed("__tmp__", lcol)
     return out
+
+
+#: input transformations that only rename census columns: the pair bound's
+#: census row count and widest-row payload still hold after them
+_ROW_PRESERVING = (None, switch_first_and_last_names)
+
+
+def _bound_applies(pass_cfg: "PassConfig") -> bool:
+    """Whether :meth:`PersonLinkageCascade._bound_rules_out_knobs` may
+    skip this pass's estimate: both knobs derived, census rows kept."""
+    return (
+        pass_cfg.num_partitions is None
+        and pass_cfg.salt_partitions is None
+        and pass_cfg.input_data_transformation in _ROW_PRESERVING
+    )
 
 
 #: the schema :meth:`PersonLinkageCascade.build_pass_links` actually emits
@@ -211,7 +231,8 @@ class PassPlan:
     """A pass's resolved physical knobs (see ``resolve_pass_plan``):
     the effective partition pin and salt for ``blocked_pairs``, plus the
     K8 estimate that derived them (``stats`` is None when the estimate
-    wasn't needed — both knobs explicit and stats not requested)."""
+    wasn't needed — both knobs explicit, or the module's reference
+    profile proved both derive to None — and stats not requested)."""
 
     stats: PairStats | None
     num_partitions: int | None
@@ -267,8 +288,10 @@ class PersonLinkageCascade:
                      shuffle INPUT bytes — cannot see the explosion
                      (the r7 932s-serial regime, SKEW_BENCH_r07).
                      Passes below the explosion gate keep their exact
-                     unpinned plan. With ``collect_stats=False`` the
-                     estimate costs two small aggs per pass.
+                     unpinned plan. With ``collect_stats=False`` a pass
+                     skips the estimate when an upper bound from one
+                     reference profile per module already rules out
+                     every derived knob (see ``resolve_pass_plan``).
     checkpoint:      'local' (default) truncates lineage with
                      localCheckpoint at every pass boundary; 'reliable'
                      uses the SparkContext checkpoint dir (set it first) —
@@ -283,6 +306,11 @@ class PersonLinkageCascade:
                      exponentially in passes, but a 1-pass run pays zero
                      materialization jobs (cascade_mini at sf0.1: ~0.3s
                      saved; the rest of its wall is genuine pair scoring).
+                     'persist' caches each frame MEMORY_AND_DISK without
+                     cutting lineage: the planner then reads accurate
+                     in-memory sizes (the late-pass broadcast flip), but
+                     the plan still grows per pass, so it is for shallow
+                     configs too. Any other mode raises ``ValueError``.
     checkpoint_storage_level: storage level for 'local' checkpoints.
                      None (default) = AUTO-DERIVE from the census row
                      count vs the executor heap
@@ -308,6 +336,10 @@ class PersonLinkageCascade:
         auto_pin: bool = True,
         checkpoint_storage_level: StorageLevel | None = None,
     ) -> None:
+        if checkpoint not in CHECKPOINT_MODES:
+            raise ValueError(
+                f"checkpoint must be one of {CHECKPOINT_MODES}, got {checkpoint!r}"
+            )
         self.jw_strategy = jw_strategy
         self.checkpoint = checkpoint
         self.checkpoint_storage_level = checkpoint_storage_level
@@ -317,6 +349,11 @@ class PersonLinkageCascade:
         self._ckpt_bytes = 0  # largest rows x row_bytes bound fed to it
         self._row_bytes = estimate_checkpoint_row_bytes(LINKS_FRAME_TEMPLATE)
         self._heap_bytes: int | None = None
+        # (rows, largest per-row string payload) of the census, and the
+        # current module's reference profile (see resolve_pass_plan)
+        self._census_profile: tuple[int, int] | None = None
+        self._key_profile: KeyProfile | None = None
+        self._key_profile_resolved = False
         self.auto_pin = auto_pin
         self.spark = spark
         self.census = census.persist(StorageLevel.MEMORY_AND_DISK)
@@ -364,9 +401,30 @@ class PersonLinkageCascade:
             if lvl is not None:
                 return df.localCheckpoint(eager=True, storageLevel=lvl)
             return df.localCheckpoint(eager=True)
-        if self.checkpoint == "off":
-            return df
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+        if self.checkpoint == "persist":
+            return df.persist(StorageLevel.MEMORY_AND_DISK)
+        return df  # 'off'
+
+    def _census_rows_and_payload(self) -> tuple[int, int]:
+        """The census row count and its largest per-row string payload
+        (over every string column, so it bounds any pass's projection,
+        name-switched or not), from ONE aggregation over the persisted
+        census, run once. It is the checkpoint gate's census count."""
+        if self._census_profile is None:
+            row = self.census.selectExpr(
+                "count(1)", f"max({string_payload_sql(self.census)})"
+            ).first()
+            self._census_profile = (int(row[0]), int(row[1] or 0))
+        return self._census_profile
+
+    def _derives_storage(self) -> bool:
+        """Whether the checkpoint storage level is auto-derived (and so
+        may escalate on a pass's pair bound)."""
+        return (
+            self.checkpoint == "local"  # only 'local' consults the level
+            and self.checkpoint_storage_level is None
+            and self.auto_pin
+        )
 
     def _resolve_ckpt_level(self) -> StorageLevel | None:
         """Resolve once, lazily (the census count that feeds the
@@ -381,7 +439,7 @@ class PersonLinkageCascade:
         else:
             from ..session import executor_heap_bytes
 
-            self._ckpt_rows = self.census.count()
+            self._ckpt_rows = self._census_rows_and_payload()[0]
             self._heap_bytes = executor_heap_bytes(self.spark)
             # initial width: the links-frame template (set in __init__ —
             # the frame whose unroll actually OOM'd the 1024x bracket; a
@@ -411,12 +469,7 @@ class PersonLinkageCascade:
         plan) and compares estimated BYTES, not rows — a wide pass
         escalates at fewer rows than a narrow one (r10 verdict
         top-next); ``None`` falls back to the template width."""
-        if (
-            not rows
-            or self.checkpoint != "local"  # only 'local' consults the level
-            or self.checkpoint_storage_level is not None
-            or not self.auto_pin
-        ):
+        if not rows or not self._derives_storage():
             return
         # in 'local' mode start_module's first _truncate already resolved
         # the level, so this seeds _ckpt_rows / _heap_bytes for free
@@ -435,6 +488,8 @@ class PersonLinkageCascade:
     def start_module(self, cfg: ModuleConfig) -> None:
         self._module = cfg
         self._reference_file = self.reference_files[cfg.reference_file_name]
+        self._key_profile = None
+        self._key_profile_resolved = False
         # exclude raw input records already PIKed by earlier modules (J3)
         self._census_to_match = self._truncate(
             anti_join(
@@ -450,11 +505,14 @@ class PersonLinkageCascade:
             "match_probability double, module_name string, pass_name string",
         )
 
+    def _block_on(self, pass_cfg: PassConfig) -> tuple[str, ...]:
+        return tuple(self._module.cut_columns + pass_cfg.blocking_columns)
+
     def _pass_sides(
         self, pass_cfg: PassConfig
     ) -> tuple[DataFrame, DataFrame, list[str]]:
         cfg = self._module
-        block_on = cfg.cut_columns + pass_cfg.blocking_columns
+        block_on = list(self._block_on(pass_cfg))
         columns_needed = list(
             dict.fromkeys(["record_id"] + block_on + cfg.matching_columns)
         )
@@ -538,9 +596,9 @@ class PersonLinkageCascade:
         self, pass_cfg: PassConfig, force_estimate: bool = False
     ) -> PassPlan:
         """The pass's effective physical knobs in ONE place (r9 advice:
-        ``resolve_pass_pin`` and ``run_matching_pass`` used to duplicate
-        this derivation — two copies that could drift, and an auditing
-        caller paid the estimate job twice).
+        the pin and the pass used to duplicate this derivation — two
+        copies that could drift, and an auditing caller paid the
+        estimate job twice).
 
         Each knob is the explicit config value, else (``auto_pin``) the
         one derived from the K8 estimate: :func:`derive_pair_pin` for
@@ -550,14 +608,22 @@ class PersonLinkageCascade:
         useless) and :func:`derive_salt` for the salt (the OTHER half of
         that regime — the pin spreads distinct keys but cannot split ONE
         monster key; SKEW_BENCH_r08's auto row still hard-coded salt).
-        Runs the estimate's two small aggs only when a knob needs
-        deriving (or ``force_estimate`` — stats collection reuses the
-        same job); with both knobs explicit it is free."""
+        Runs the estimate's aggregation only when a knob needs deriving
+        (or ``force_estimate`` — stats collection reuses the same job);
+        with both knobs explicit it is free.
+
+        Without stats, a pass whose knobs are both derived skips the
+        estimate when an upper bound proves every derivation — pin,
+        salt and the checkpoint-storage escalation — returns None
+        (:meth:`_bound_rules_out_knobs`); the plan is then the one the
+        estimate would have derived."""
         pin = pass_cfg.num_partitions
         salt = pass_cfg.salt_partitions
         derive = self.auto_pin and (pin is None or salt is None)
         if not (derive or force_estimate):
             return PassPlan(None, pin, salt)
+        if not force_estimate and self._bound_rules_out_knobs(pass_cfg):
+            return PassPlan(None, None, None)
         census_side, ref_side, block_on = self._pass_sides(pass_cfg)
         stats = estimate_pair_stats(census_side, ref_side, block_on)
         if self.auto_pin:
@@ -570,28 +636,103 @@ class PersonLinkageCascade:
                 census_side, ref_side, block_on, stats=stats
             )
             if pin is None:
-                pin = derive_pair_pin(
-                    stats.pairs,
-                    stats.n_left,
-                    stats.n_right,
-                    shuffle_partitions(self.spark),
-                    pair_row_bytes=row_bytes,
-                    # the cap scales with the fleet (r11): 4096 on this
-                    # box, 32x slots on a real cluster; conf makes the
-                    # dyn-alloc max fleet win over live parallelism (r12)
-                    cap=derive_pin_cap(
-                        self.spark.sparkContext.defaultParallelism,
-                        conf=self.spark.conf,
-                    ),
+                pin = self._derive_pin(
+                    stats.pairs, stats.n_left, stats.n_right, row_bytes
                 )
             if salt is None:
                 salt = derive_salt(stats.max_key_pairs, pair_row_bytes=row_bytes)
         return PassPlan(stats, pin, salt)
 
-    def resolve_pass_pin(self, pass_cfg: PassConfig) -> int | None:
-        """The pass's effective ``blocked_pairs`` partition pin (see
-        ``resolve_pass_plan``, which this delegates to)."""
-        return self.resolve_pass_plan(pass_cfg).num_partitions
+    def _derive_pin(
+        self, pairs: int, n_left: int, n_right: int, row_bytes: int
+    ) -> int | None:
+        return derive_pair_pin(
+            pairs,
+            n_left,
+            n_right,
+            shuffle_partitions(self.spark),
+            pair_row_bytes=row_bytes,
+            # the cap scales with the fleet (r11): 4096 on this box, 32x
+            # slots on a real cluster; conf makes the dyn-alloc max fleet
+            # win over live parallelism (r12)
+            cap=derive_pin_cap(
+                self.spark.sparkContext.defaultParallelism, conf=self.spark.conf
+            ),
+        )
+
+    def _bound_rules_out_knobs(self, pass_cfg: PassConfig) -> bool:
+        """True when the pass's exact estimate cannot change its plan.
+
+        The bound: with ``r`` the largest multiplicity of any non-NULL
+        value of the pass's keys on the reference side, the pass's pairs
+        and its hottest key's pairs are both at most ``n_census × r``
+        (every census row meets at most ``r`` reference rows). The pair
+        row is at most :func:`estimate_pair_row_bytes` of one pair of the
+        widest rows (each side's largest per-row string payload). Every
+        derivation is monotone in pairs and row width, so if pin, salt
+        and storage all derive None at the bound, they derive None at
+        the estimate too — the thresholds stay in the derive functions.
+
+        Applies only without stats, to a pass of the current module's
+        config whose knobs are both derived and whose input
+        transformation keeps the census' rows and string values (none,
+        or the name switch); anything else keeps the exact estimate."""
+        if (
+            self.collect_stats
+            or not _bound_applies(pass_cfg)
+            or pass_cfg not in self._module.passes
+        ):
+            return False
+        profile = self._module_key_profile()
+        if profile is None:
+            return False
+        max_r = profile.max_multiplicity[self._block_on(pass_cfg)]
+        return self._knobs_none_at(pass_cfg, max_r, profile.max_str_payload)
+
+    def _module_key_profile(self) -> KeyProfile | None:
+        """The current module's reference profile — ONE aggregation for
+        every derived-knob pass (:func:`max_key_multiplicity`) — or None
+        when no pass could pass the gate even at ``r = 1`` with an empty
+        reference payload (a census too large for any bound; the RI-scale
+        rungs), in which case the query is not run."""
+        if not self._key_profile_resolved:
+            gated = [p for p in self._module.passes if _bound_applies(p)]
+            if any(self._knobs_none_at(p, 1, 0) for p in gated):
+                self._key_profile = max_key_multiplicity(
+                    self._reference_file, [self._block_on(p) for p in gated]
+                )
+            self._key_profile_resolved = True
+        return self._key_profile
+
+    def _knobs_none_at(
+        self, pass_cfg: PassConfig, max_r: int, ref_payload: int
+    ) -> bool:
+        """Whether pin, salt and storage all derive None for a pass of
+        at most ``n_census × max_r`` pairs whose rows carry at most the
+        census' largest and ``ref_payload`` string bytes per side."""
+        n_census, census_payload = self._census_rows_and_payload()
+        bound = n_census * max_r
+        census_side, ref_side, block_on = self._pass_sides(pass_cfg)
+        # one pair of the widest rows: no pair row of the pass is wider
+        widest = PairStats(bound, 1, 1, bound, census_payload, ref_payload)
+        row_bytes = estimate_pair_row_bytes(
+            census_side, ref_side, block_on, stats=widest
+        )
+        if self._derive_pin(bound, 0, 0, row_bytes) is not None:
+            return False
+        if derive_salt(bound, pair_row_bytes=row_bytes) is not None:
+            return False
+        if not self._derives_storage():
+            return True
+        self._resolve_ckpt_level()
+        # the links frame is the checkpointed one: LINKS_FRAME_TEMPLATE's
+        # width, pinned to build_pass_links' schema by a test
+        return (
+            derive_checkpoint_storage(
+                bound, self._heap_bytes, row_bytes=self._row_bytes
+            )
+            is None
+        )
 
     def run_matching_pass(self, pass_cfg: PassConfig) -> None:
         assert self._module is not None, "start_module first"

@@ -57,10 +57,13 @@ def run_full_pvs_cascade(
     )
     for mod in config.modules:
         if mod.reference_file_name == "hhcomp_reference_file":
-            hhcomp = build_hhcomp_reference_file(
-                census, geobase_reference_file, cascade.confirmed_piks
+            # materialised once: the module's passes, its reference
+            # profile and its confirm step would each re-run the plan
+            hhcomp = cascade._truncate(
+                build_hhcomp_reference_file(
+                    census, geobase_reference_file, cascade.confirmed_piks
+                )
             )
-            hhcomp = add_pseudo_household_id_reference(hhcomp)
             cascade.reference_files["hhcomp_reference_file"] = hhcomp
         cascade.start_module(mod)
         for p in mod.passes:
@@ -99,9 +102,3 @@ def bucket_reference_file(
         reference_file, table, blocking_cols, num_buckets=num_buckets, path=path
     )
     return read_bucketed(spark, table)
-
-
-def add_pseudo_household_id_reference(hhcomp: DataFrame) -> DataFrame:
-    """The HHComp reference file already carries pseudo_household_id from
-    construction; this is a no-op hook kept for symmetry/clarity."""
-    return hhcomp

@@ -18,6 +18,7 @@ from person_linkage_case_study_spark.plans.cascade import (
     CascadeConfig,
     ModuleConfig,
     PassConfig,
+    PassPlan,
     PersonLinkageCascade,
 )
 from person_linkage_case_study_spark.plans.preprocess import (
@@ -809,8 +810,7 @@ def test_auto_pin_resolution(spark):
     explicit_plan = mk(census, ref).resolve_pass_plan(explicit)
     assert explicit_plan.num_partitions == 7
     assert explicit_plan.salt_partitions == 1
-    # resolve_pass_pin delegates (kept API)
-    assert mk(census, ref).resolve_pass_pin(explicit) == 7
+    assert mk(census, ref).resolve_pass_plan(explicit).num_partitions == 7
     # auto_pin=False: manual contract (None stays None, no estimate job)
     off = mk(census, ref, auto_pin=False).resolve_pass_plan(hot_pass)
     assert off.num_partitions is None and off.salt_partitions is None
@@ -831,3 +831,172 @@ def test_auto_pin_resolution(spark):
         .toString()
     )
     assert f", {plan.salt_partitions}) AS __salt" in plan_str
+
+
+def test_unknown_checkpoint_mode_rejected(spark, fixture):
+    census, geobase, *_ = fixture
+    with pytest.raises(ValueError, match="checkpoint"):
+        PersonLinkageCascade(
+            spark, census, {"geobase_reference_file": geobase}, make_model(),
+            checkpoint="lcoal",
+        )
+
+
+def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
+    """run_full_pvs_cascade (default 4-module / 15-pass config) on the
+    hand-built fixture, counting the exact pair estimates the passes run;
+    ``on_pass(cascade, pass_cfg)`` is called before each pass, outside
+    the count."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+    from person_linkage_case_study_spark.plans.pipeline import run_full_pvs_cascade
+
+    census, geobase, name_dob, fake_names, dod = fixture
+    calls = []
+    in_pass = []
+    real_estimate = cascade_mod.estimate_pair_stats
+    real_pass = PersonLinkageCascade.run_matching_pass
+
+    def estimate(*a, **k):
+        if in_pass:
+            calls.append(1)
+        return real_estimate(*a, **k)
+
+    def run_pass(self, pass_cfg):
+        if on_pass is not None:
+            on_pass(self, pass_cfg)
+        in_pass.append(1)
+        try:
+            return real_pass(self, pass_cfg)
+        finally:
+            in_pass.pop()
+
+    mp = pytest.MonkeyPatch()
+    mp.setattr(cascade_mod, "estimate_pair_stats", estimate)
+    mp.setattr(PersonLinkageCascade, "run_matching_pass", run_pass)
+    try:
+        confirmed, _, _ = run_full_pvs_cascade(
+            spark,
+            preprocess_census(census, fake_names, gq_threshold=99),
+            preprocess_reference_file(geobase),
+            preprocess_reference_file(name_dob, has_address=False),
+            make_model(),
+            dates_of_death=dod,
+            census_raw=census,
+            collect_stats=collect_stats,
+        )
+        links = {
+            (r["record_id_raw_input_file"], r["pik"], r["pass_name"])
+            for r in confirmed.collect()
+        }
+    finally:
+        mp.undo()
+    return links, len(calls)
+
+
+def test_bound_gate_skips_estimates_without_changing_plans(spark, fixture):
+    """Without stats, every pass of the default cascade on a small world
+    is ruled out by its module's reference profile: no exact pair
+    estimate runs, each skipped pass's knobs equal those the forced
+    estimate derives, and the links match a stats-on run (which still
+    estimates all 15 passes)."""
+    plans = []
+
+    def compare(cascade, pass_cfg):
+        gated = cascade.resolve_pass_plan(pass_cfg)
+        exact = cascade.resolve_pass_plan(pass_cfg, force_estimate=True)
+        plans.append((pass_cfg.name, gated, exact))
+
+    links_off, n_off = _run_default_cascade(spark, fixture, False, compare)
+    assert n_off == 0
+    assert len(plans) == 15
+    for name, gated, exact in plans:
+        assert gated.stats is None, name
+        assert exact.stats is not None, name
+        assert (gated.num_partitions, gated.salt_partitions) == (
+            exact.num_partitions,
+            exact.salt_partitions,
+        ), name
+    links_on, n_on = _run_default_cascade(spark, fixture, True)
+    assert n_on == 15
+    assert links_off == links_on and links_on
+
+
+def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
+    """The gate only skips estimates it can prove irrelevant: the hot-key
+    pass of test_auto_pin_resolution, now in the module's config and run
+    without stats, still gets its estimate and derives pin =
+    shuffle.partitions and salt = 5; the spread pass (one reference row
+    per key) is skipped with the same (None, None) plan. A census too
+    large for the pre-check (no bound at r = 1 passes) runs no profile
+    query, and a pass outside the module's config keeps its estimate."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    geokey = "B1" + "X" * 58
+    cols = (
+        "zip3 string, geokey_for_blocking string, record_id string, "
+        "first_name_15 string, last_name_12 string, middle_initial string, "
+        "day_of_birth int, month_of_birth int, year_of_birth int"
+    )
+    census = spark.createDataFrame(
+        [("Z12", geokey, f"c{i}", "A" * 15, "A" * 12, "M", 1, 1, 1980)
+         for i in range(1024)],
+        cols,
+    ).withColumn("record_id_raw_input_file", F.col("record_id"))
+    ref = spark.createDataFrame(
+        [("Z12", geokey, f"r{i}", "A" * 15, "A" * 12, "M", 1, 1, 1980, f"P{i}")
+         for i in range(1024)],
+        cols + ", pik string",
+    )
+    spread_census = census.withColumn("geokey_for_blocking", F.col("record_id"))
+    spread_ref = ref.withColumn(
+        "geokey_for_blocking", F.regexp_replace("record_id", "r", "c")
+    )
+    hot_pass = PassConfig("p", ["geokey_for_blocking"], 0.9)
+    profiles = []
+    real_profile = cascade_mod.max_key_multiplicity
+
+    def profile(*a, **k):
+        profiles.append(1)
+        return real_profile(*a, **k)
+
+    monkeypatch.setattr(cascade_mod, "max_key_multiplicity", profile)
+
+    def mk(census_df, ref_df):
+        c = PersonLinkageCascade(
+            spark, census_df, {"ref": ref_df}, make_model(), collect_stats=False
+        )
+        c.start_module(
+            ModuleConfig(
+                name="m", reference_file_name="ref", cut_columns=["zip3"],
+                matching_columns=["first_name_15", "last_name_12",
+                                  "middle_initial", "day_of_birth",
+                                  "month_of_birth", "year_of_birth"],
+                passes=[hot_pass],
+            )
+        )
+        return c
+
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    plan = mk(census, ref).resolve_pass_plan(hot_pass)
+    assert plan.stats is not None and plan.stats.max_key_pairs == 1024 * 1024
+    assert (plan.num_partitions, plan.salt_partitions) == (shuffle_parts, 5)
+    assert len(profiles) == 1  # 1,024 census rows pass the pre-check
+
+    spread = mk(spread_census, spread_ref)
+    assert spread.resolve_pass_plan(hot_pass) == PassPlan(None, None, None)
+    assert len(profiles) == 2
+    forced = spread.resolve_pass_plan(hot_pass, force_estimate=True)
+    assert forced.stats is not None
+    assert (forced.num_partitions, forced.salt_partitions) == (None, None)
+    # outside the module's config: exact estimate, same knobs
+    other = PassConfig("q", ["geokey_for_blocking"], 0.5)
+    assert spread.resolve_pass_plan(other).stats is not None
+    assert len(profiles) == 2
+
+    # a census past the pre-check (the RI-scale rungs' ~1.2M rows: at
+    # r = 1 its bound already needs a salt): no profile query, and the
+    # pass falls back to the exact estimate
+    big = mk(spread_census, spread_ref)
+    big._census_profile = (1_200_000, 0)
+    assert big.resolve_pass_plan(hot_pass).stats is not None
+    assert len(profiles) == 2

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from person_linkage_case_study_spark.operators.blocking import (
     blocked_pairs,
-    estimate_pair_count,
+    estimate_pair_stats,
 )
 from person_linkage_case_study_spark.operators.dedup import (
     keep_best,
@@ -88,7 +88,43 @@ def test_estimate_pair_count(spark):
     l = spark.createDataFrame([("a",), ("a",), ("b",)], ["blk"])
     r = spark.createDataFrame([("a",), ("b",), ("b",), ("c",)], ["blk"])
     # a: 2*1, b: 1*2 => 4
-    assert estimate_pair_count(l, r, ["blk"]) == 4
+    assert estimate_pair_stats(l, r, ["blk"]).pairs == 4
+
+
+def test_max_key_multiplicity_bounds_pairs(spark):
+    """One GROUPING SETS aggregate yields, per key set, the most rows
+    sharing one non-NULL key value (NULL-keyed groups and groups of the
+    other sets never count) plus the largest per-row string payload;
+    left rows × that multiplicity bounds both the pass's pairs and its
+    hottest key's pairs."""
+    from person_linkage_case_study_spark.operators.blocking import (
+        max_key_multiplicity,
+    )
+
+    ref = spark.createDataFrame(
+        [
+            ("a", "x", "long-name"),
+            ("a", "x", None),
+            ("a", "y", "n"),
+            ("b", None, "nn"),
+            (None, None, "nnn"),
+            (None, None, "nnnn"),
+            (None, None, "nnnnn"),
+        ],
+        "k1 string, k2 string, name string",
+    )
+    prof = max_key_multiplicity(ref, [["k1"], ["k1", "k2"], ["k2"], ["k1"]])
+    # k1: a x3 (the three NULLs never join); (k1,k2): (a,x) x2; k2: x x2
+    assert prof.max_multiplicity == {("k1",): 3, ("k1", "k2"): 2, ("k2",): 2}
+    assert prof.max_str_payload == 1 + 1 + len("long-name")
+    left = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("b", "x")], "k1 string, k2 string"
+    )
+    for keys, r in prof.max_multiplicity.items():
+        st = estimate_pair_stats(left, ref.select(*keys), list(keys))
+        assert st.pairs <= 3 * r and st.max_key_pairs <= 3 * r
+    empty = max_key_multiplicity(ref.limit(0), [["k1"]])
+    assert empty == ({("k1",): 0}, 0)
 
 
 def test_blocked_pairs_pin_preserves_pairs(spark):

@@ -68,6 +68,24 @@ def test_threshold_filter(pairs):
     assert len(kept) == 1  # only the exact/exact pair crosses 0.5
 
 
+def test_rescoring_a_scored_frame_replaces_scores(pairs):
+    """Scoring a frame that already carries match_weight /
+    match_probability replaces them (one column of each name, the new
+    model's values) instead of raising an ambiguous-reference error."""
+    model = make_model()
+    first = score_pairs(pairs, model)
+    other = make_model()
+    other.lambda_prior = 0.5
+    again = score_pairs(first, other)
+    assert again.columns.count("match_weight") == 1
+    assert again.columns.count("match_probability") == 1
+    want = score_pairs(pairs, other).select("match_weight", "match_probability")
+    got = again.select("match_weight", "match_probability")
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+    kept = score_pairs(first, model, threshold_match_probability=0.5)
+    assert kept.count() == 1
+
+
 def test_model_subset_and_roundtrip():
     model = make_model()
     sub = model.subset(["name"])
@@ -157,3 +175,14 @@ def test_spark_sql_compilers_match_column_form(pairs, spark):
     # score_pairs end-to-end emits the same weights as the Column math
     end = [r["match_weight"] for r in score_pairs(pairs, model).collect()]
     assert end == via_col
+
+    # a float band binds as a DOUBLE like F.lit(2.5), not a DECIMAL; an
+    # int band stays a plain INT literal
+    float_band = banded_comparison("year", band=2.5)
+    sql = float_band.compile_spark_sql()
+    assert "<= CAST('2.5' AS DOUBLE)" in sql
+    assert "<= 5 THEN" in banded_comparison("year", band=5).compile_spark_sql()
+    via_sql = pairs.selectExpr("*", f"{sql} AS g")
+    via_col = pairs.select("*", float_band.compile().alias("g"))
+    assert [r["g"] for r in via_sql.collect()] == [r["g"] for r in via_col.collect()]
+    assert [r["g"] for r in via_col.collect()] == [2, 1, 0, -1]

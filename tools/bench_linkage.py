@@ -450,7 +450,7 @@ def main() -> None:
         hot_c = census.filter(F.col("zip3") == "H00").count()
         hot_r = ref.filter(F.col("zip3") == "H00").count()
         # the SUM aggregate is NULL when no cold block co-occurs on both
-        # sides (fully-hot configuration) — coalesce like estimate_pair_count
+        # sides (fully-hot configuration) — coalesce like estimate_pair_stats
         cold_pairs = (
             census.filter(F.col("zip3") != "H00")
             .groupBy("zip3", "geokey_for_blocking")
