@@ -54,6 +54,11 @@ class PairStats(NamedTuple):
     str_bytes_r: int = 0
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def string_payload_sql(df: DataFrame, exclude: Sequence[str] = ()) -> str:
     """Σ ``length()`` over ``df``'s string columns not in ``exclude``, as
     ONE SQL expression of type BIGINT (one gateway call to bind, however
@@ -91,21 +96,28 @@ def blocked_pairs(
     exactly wrong for a downstream per-pair UDF. Pinning keeps the
     explosion spread across the cluster.
     """
+    # every projection is ONE selectExpr string: in PySpark 4 each
+    # F.col / .alias costs ~10 gateway round trips (origin tracking)
     keys = list(block_on)
     lcols = [c for c in left.columns if c not in keys]
     rcols = [c for c in right.columns if c not in keys]
+    l_names = keys + [c + left_suffix for c in lcols]
 
-    l = left.select(*keys, *[F.col(c).alias(c + left_suffix) for c in lcols])
-    r = right.select(*keys, *[F.col(c).alias(c + right_suffix) for c in rcols])
+    l = left.selectExpr(
+        *map(sql_ident, keys),
+        *[f"{sql_ident(c)} AS {sql_ident(c + left_suffix)}" for c in lcols],
+    )
+    r = right.selectExpr(
+        *map(sql_ident, keys),
+        *[f"{sql_ident(c)} AS {sql_ident(c + right_suffix)}" for c in rcols],
+    )
 
     if salt_partitions and salt_partitions > 1:
         n = salt_partitions
-        l = l.withColumn(
-            "__salt", F.pmod(F.hash(*[F.col(c) for c in l.columns]), F.lit(n))
+        l = l.selectExpr(
+            "*", f"pmod(hash({', '.join(map(sql_ident, l_names))}), {n}) AS __salt"
         )
-        r = r.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-        )
+        r = r.selectExpr("*", f"explode(sequence(0, {n - 1})) AS __salt")
         join_keys = keys + ["__salt"]
     else:
         join_keys = keys
@@ -116,8 +128,8 @@ def blocked_pairs(
         # pair explosions into few tasks (zstd crushes the salted
         # replicated side, so salting alone doesn't protect a
         # small-input pass; measured r7, tools/bench_linkage.py skew)
-        l = l.repartition(num_partitions, *[F.col(k) for k in join_keys])
-        r = r.repartition(num_partitions, *[F.col(k) for k in join_keys])
+        l = l.repartition(num_partitions, *join_keys)
+        r = r.repartition(num_partitions, *join_keys)
     joined = l.join(r, on=join_keys, how="inner")
     if join_keys is not keys:
         joined = joined.drop("__salt")
@@ -215,13 +227,18 @@ class KeyProfile(NamedTuple):
     max_multiplicity: dict[tuple[str, ...], int]
     # most string bytes in any one row (every string column, NULL = 0)
     max_str_payload: int
+    # key set -> rows sharing a non-NULL row's value, on average over the
+    # rows (sum of n^2 / sum of n over the groups): a left row whose keys
+    # are drawn like these rows' meets that many rows on average
+    mean_multiplicity: dict[tuple[str, ...], float]
 
 
 def max_key_multiplicity(
     df: DataFrame, key_sets: Sequence[Sequence[str]]
 ) -> KeyProfile:
     """For each key set, the most rows of ``df`` that share one non-NULL
-    value of those columns, plus ``df``'s largest per-row string payload
+    value of those columns and how many share it on average (see
+    :class:`KeyProfile`), plus ``df``'s largest per-row string payload
     (:func:`string_payload_sql` over every string column), from ONE
     aggregation: a GROUPING SETS aggregate reads ``df`` once for all the
     key sets, then a global collapse takes each set's largest group.
@@ -246,7 +263,7 @@ def max_key_multiplicity(
         )
     )
 
-    def largest_group(key_set: tuple[str, ...]) -> str:
+    def of_set(key_set: tuple[str, ...], value: str) -> str:
         # grouping_id sets bit (n-1-i) for every column i NOT in the set
         gid = sum(
             1 << (len(cols) - 1 - i) for i, c in enumerate(cols) if c not in key_set
@@ -254,15 +271,20 @@ def max_key_multiplicity(
         keep = " AND ".join(
             [f"__g = {gid}"] + [f"`{c}` IS NOT NULL" for c in key_set]
         )
-        return f"max(CASE WHEN {keep} THEN __n END)"
+        return f"CASE WHEN {keep} THEN {value} END"
 
     row = grouped.selectExpr(
-        *[f"{largest_group(s)} AS __r{i}" for i, s in enumerate(sets)],
+        *[f"max({of_set(s, '__n')}) AS __r{i}" for i, s in enumerate(sets)],
+        *[
+            f"sum({of_set(s, '__n * __n')}) / sum({of_set(s, '__n')}) AS __m{i}"
+            for i, s in enumerate(sets)
+        ],
         "max(__p) AS __p",
     ).first()
     return KeyProfile(
         {s: int(row[f"__r{i}"] or 0) for i, s in enumerate(sets)},
         int(row["__p"] or 0),
+        {s: float(row[f"__m{i}"] or 0) for i, s in enumerate(sets)},
     )
 
 

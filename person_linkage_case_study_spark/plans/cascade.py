@@ -14,10 +14,38 @@ over persisted DataFrames — the reference's engine-boundary parquet
 round-trips (steps 2/6 of §3.3) disappear. Cross-pass state is persisted
 and the previous state unpersisted each pass so lineage doesn't grow
 (reference clears checkpoints at the same points, K12).
+
+Pass groups. Removing the linked records after every pass costs two eager
+checkpoints per pass (the links, then the anti-join), and on a small world
+those jobs are most of the cascade's time. But blocking and scoring work
+pair by pair (a fixed model, no term-frequency tables, the name switch a
+per-row rename), so a record's links in pass k depend only on that record
+and the reference file; sequential elimination therefore keeps, for each
+census record, exactly the links of the EARLIEST pass that linked it.
+Consecutive passes whose plan is already proved (``_bound_rules_out_knobs``:
+no statistics, a pass of the module's config, both knobs derived and
+provably None, census rows kept) collect into a pending *group* that reads
+the census as it stood when the group began: one ``blocked_pairs`` branch
+per pass, ONE ``score_pairs`` over their union, and a window that keeps a
+pair when it clears its pass's threshold and its pass is the record's
+first linking pass (a group that holds a single proved pass needs no
+window: it keeps the pairs over the threshold). A group is expected to
+make at most ``PASS_GROUP_MAX_PAIRS`` pairs, because its later passes
+score again the records its earlier passes linked; a proved pass that
+would take it past the cap starts a new group. After each grouped pass
+the links so far and the records still eligible are lazy frames (no
+job); the group is materialised once, when the next group or a pass
+outside any group runs (links + anti-join) or at ``confirm_piks`` (links
+only). Any other pass runs as a *group of one*: today's links checkpoint and
+anti-join checkpoint, no window — so ``collect_stats=True`` (every pass a
+group of one) keeps ``PassStats`` exact, and a pass the bound does not
+prove (every pass of the RI-scale rungs and of ``tools/bench_linkage.py``'s
+1x and 2x rungs) runs exactly its sequential queries.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -35,6 +63,7 @@ from ..operators.blocking import (
     estimate_pair_row_bytes,
     estimate_pair_stats,
     max_key_multiplicity,
+    sql_ident,
     string_payload_sql,
 )
 from ..operators.dedup import keep_best, max_per_group_with_ties
@@ -69,6 +98,24 @@ def switch_first_and_last_names(df: DataFrame) -> DataFrame:
 _ROW_PRESERVING = (None, switch_first_and_last_names)
 
 
+#: the most pairs a pass group is expected to make, summed over its
+#: passes (``PersonLinkageCascade._expected_pairs``). Grouping trades
+#: work for jobs: a pass in a group blocks and scores again the records
+#: the group's earlier passes linked, and the window shuffles every
+#: scored pair, while each pass it holds saves two checkpoint jobs. On a
+#: 4-core host (``local[4]``), in the worst shape measured
+#: (``tools/bench_linkage.py``'s cascade on sf0.01 data with the geokey
+#: moduli doubled: a geokey pass that links all but a few records, then a
+#: name-switch pass on the same key that scores them all again), a group
+#: expecting 165k pairs (7,500 census records) ran slower than sequential
+#: elimination in 6 of 6 alternating pairs of runs (median +4%) and one
+#: expecting 83k (3,750 records) ran faster in 5 of 6 (median -10%); the
+#: cap sits under both, half the first. The largest group of the
+#: ``pvs_cascade`` world expects ~50k. A proved pass that would take a
+#: group past the cap starts a new group.
+PASS_GROUP_MAX_PAIRS = 80_000
+
+
 def _bound_applies(pass_cfg: "PassConfig") -> bool:
     """Whether :meth:`PersonLinkageCascade._bound_rules_out_knobs` may
     skip this pass's estimate: both knobs derived, census rows kept."""
@@ -77,6 +124,58 @@ def _bound_applies(pass_cfg: "PassConfig") -> bool:
         and pass_cfg.salt_partitions is None
         and pass_cfg.input_data_transformation in _ROW_PRESERVING
     )
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _linked_records(links: DataFrame) -> DataFrame:
+    """The census record ids a links frame names, once each (the key the
+    cascade drops linked records on: linkage records, NOT raw records — a
+    nickname variant matching doesn't stop the canonical record, SURVEY
+    §7.3.5)."""
+    return links.selectExpr("record_id_census_2030 AS record_id").distinct()
+
+
+def pass_group_plan_problems(tree: str, branches: int) -> list[str]:
+    """What breaks the pass-group shape in an optimized plan's
+    ``treeString`` (empty when nothing): it must hold ONE Window, above
+    the Union of the ``branches`` blocked joins, and no Filter on the
+    probability or the threshold below that Union (pushed through it into
+    every branch, such a Filter made constraint propagation over the
+    Union take seconds per module). The tests and
+    ``tools/explain_audit.py`` check group plans with it."""
+    nodes = []  # (depth, node text)
+    for line in tree.splitlines():
+        text = line.lstrip(" :+-")
+        if text:
+            nodes.append((len(line) - len(text), text))
+
+    def below(i: int) -> list[int]:
+        j = i + 1
+        while j < len(nodes) and nodes[j][0] > nodes[i][0]:
+            j += 1
+        return list(range(i + 1, j))
+
+    windows = [i for i, (_, t) in enumerate(nodes) if t.startswith("Window ")]
+    if len(windows) != 1:
+        return [f"{len(windows)} Windows, not one"]
+    unions = [i for i in below(windows[0]) if nodes[i][1].startswith("Union")]
+    if len(unions) != 1:
+        return [f"{len(unions)} Unions below the Window, not one"]
+    under = [nodes[i][1] for i in below(unions[0])]
+    problems = []
+    joins = sum(t.startswith("Join ") for t in under)
+    if joins != branches:
+        problems.append(f"{joins} Joins below the Union, not {branches}")
+    problems += [
+        f"threshold Filter below the Union: {t}"
+        for t in under
+        if t.startswith("Filter ") and ("match_probability" in t or "__t" in t)
+    ]
+    return problems
 
 
 #: the schema :meth:`PersonLinkageCascade.build_pass_links` actually emits
@@ -240,6 +339,19 @@ class PassPlan:
 
 
 @dataclass
+class _PassGroup:
+    """Proved passes run as one scored union (see the module docstring),
+    or a group of one: an unproved pass's thresholded links, no
+    branches."""
+
+    census: DataFrame  # the census to match when the group began
+    links_before: DataFrame  # the module's links from earlier passes
+    branches: list[DataFrame] = field(default_factory=list)
+    links: DataFrame | None = None  # the group's links so far (lazy)
+    expected_pairs: float = 0.0  # the sum of its passes' (_expected_pairs)
+
+
+@dataclass
 class PassStats:
     module: str
     pass_name: str
@@ -291,9 +403,18 @@ class PersonLinkageCascade:
                      unpinned plan. With ``collect_stats=False`` a pass
                      skips the estimate when an upper bound from one
                      reference profile per module already rules out
-                     every derived knob (see ``resolve_pass_plan``).
+                     every derived knob (see ``resolve_pass_plan``), and
+                     such passes run as pass GROUPS (module docstring):
+                     consecutive proved passes, up to
+                     ``PASS_GROUP_MAX_PAIRS`` expected pairs, share one
+                     scored union and one materialisation.
+                     ``auto_pin=False`` forms no groups: every pass is a
+                     group of one.
     checkpoint:      'local' (default) truncates lineage with
-                     localCheckpoint at every pass boundary; 'reliable'
+                     localCheckpoint at every group boundary — after a
+                     group of one, its links and the records left; after
+                     a pass group, its links once (plus the records left
+                     when another pass follows in the module); 'reliable'
                      uses the SparkContext checkpoint dir (set it first) —
                      REQUIRED behavior, not an optimization: without it the
                      logical plan grows exponentially across passes (each
@@ -356,6 +477,8 @@ class PersonLinkageCascade:
         self._key_profile_resolved = False
         self.auto_pin = auto_pin
         self.spark = spark
+        # a cache the caller made stays the caller's (release() keeps it)
+        self._owns_census_cache = not census.is_cached
         self.census = census.persist(StorageLevel.MEMORY_AND_DISK)
         self.reference_files = reference_files
         self.model = model
@@ -363,7 +486,6 @@ class PersonLinkageCascade:
         self.collect_stats = collect_stats
         self.stats: list[PassStats] = []
         self.confirm_stats: list[ConfirmStats] = []
-        self._stats_caches: list[DataFrame] = []
         # accumulator: ≤1 row per record_id_raw_input_file after each module
         self.confirmed_piks: DataFrame = spark.createDataFrame(
             [],
@@ -375,6 +497,7 @@ class PersonLinkageCascade:
         self._census_to_match: DataFrame | None = None
         self._provisional_links: DataFrame | None = None
         self._reference_file: DataFrame | None = None
+        self._group: _PassGroup | None = None
 
     def _truncate(self, df: DataFrame) -> DataFrame:
         """Materialize and cut lineage (plan depth back to O(1)).
@@ -509,14 +632,16 @@ class PersonLinkageCascade:
         return tuple(self._module.cut_columns + pass_cfg.blocking_columns)
 
     def _pass_sides(
-        self, pass_cfg: PassConfig
+        self, pass_cfg: PassConfig, census: DataFrame | None = None
     ) -> tuple[DataFrame, DataFrame, list[str]]:
+        """The pass's census side (``census``, default the records still
+        to match), reference side and blocking keys."""
         cfg = self._module
         block_on = list(self._block_on(pass_cfg))
         columns_needed = list(
             dict.fromkeys(["record_id"] + block_on + cfg.matching_columns)
         )
-        census_side = self._census_to_match
+        census_side = self._census_to_match if census is None else census
         if pass_cfg.input_data_transformation is not None:
             census_side = pass_cfg.input_data_transformation(census_side)
         census_side = census_side.select(
@@ -543,14 +668,7 @@ class PersonLinkageCascade:
         ``num_partitions`` / ``salt_partitions`` override the pass
         config's when given."""
         assert self._module is not None, "start_module first"
-        cfg = self._module
         census_side, ref_side, block_on = self._pass_sides(pass_cfg)
-
-        # pass-specific model: comparisons restricted to matching columns,
-        # prior scaled by the cut-column Bayes factor (reference 03:1977-2001)
-        pass_model = self.model.subset(cfg.matching_columns)
-        pass_model.bayes_factor_cut_columns = cfg.bayes_factor_cut_columns
-
         pairs = blocked_pairs(
             census_side,
             ref_side,
@@ -566,31 +684,57 @@ class PersonLinkageCascade:
                 else pass_cfg.num_partitions
             ),
         )
-        # a column can be both blocking key and matching column (e.g. the
-        # DOB parts in namesearch): blocked keys come out unsuffixed, so
-        # alias them to both sides for the comparisons (values are equal by
-        # construction — the gamma lands on the exact-match level, exactly
-        # as in Splink where the blocking rule guarantees l.col = r.col)
-        for c in cfg.matching_columns:
-            if c in block_on:
-                pairs = pairs.withColumn(f"{c}_l", F.col(c)).withColumn(
-                    f"{c}_r", F.col(c)
-                )
+        pass_model = self._pass_model()
         scored = score_pairs(
-            pairs,
+            pairs.selectExpr(*self._pair_columns(pass_model, block_on)),
             pass_model,
             threshold_match_probability=pass_cfg.probability_threshold,
             jw_strategy=self.jw_strategy,
         )
-        return scored.select(
-            F.col("record_id_l").alias("record_id_census_2030"),
-            F.col("record_id_r").alias("record_id_reference_file"),
-            F.col("record_id_raw_input_file_l").alias("record_id_raw_input_file"),
+        return scored.selectExpr(*self._links_projection(_sql_string(pass_cfg.name)))
+
+    def _pass_model(self) -> LinkageModel:
+        """The module's pass model: comparisons restricted to its matching
+        columns, prior scaled by the cut-column Bayes factor (reference
+        03:1977-2001). The same for every pass of the module."""
+        cfg = self._module
+        pass_model = self.model.subset(cfg.matching_columns)
+        pass_model.bayes_factor_cut_columns = cfg.bayes_factor_cut_columns
+        return pass_model
+
+    @staticmethod
+    def _pair_columns(model: LinkageModel, block_on: list[str]) -> list[str]:
+        """The blocked pairs' projection to what scoring and the links
+        frame read — the same names in the same order for every pass of a
+        module. A compared column that is also a blocking key (e.g. the
+        DOB parts in namesearch) comes out of the join unsuffixed, so it is
+        aliased to both sides (values are equal by construction — the
+        gamma lands on the exact-match level, exactly as in Splink where
+        the blocking rule guarantees l.col = r.col)."""
+        return [
+            "record_id_l",
+            "record_id_r",
+            "record_id_raw_input_file_l",
+            *[
+                f"{sql_ident(c.col)} AS {sql_ident(c.col + side)}"
+                if c.col in block_on
+                else sql_ident(c.col + side)
+                for c in model.comparisons
+                for side in ("_l", "_r")
+            ],
+        ]
+
+    def _links_projection(self, pass_name_sql: str) -> list[str]:
+        """The scored pairs' projection to :data:`LINKS_FRAME_TEMPLATE`."""
+        return [
+            "record_id_l AS record_id_census_2030",
+            "record_id_r AS record_id_reference_file",
+            "record_id_raw_input_file_l AS record_id_raw_input_file",
             "match_weight",
             "match_probability",
-            F.lit(cfg.name).alias("module_name"),
-            F.lit(pass_cfg.name).alias("pass_name"),
-        )
+            f"{_sql_string(self._module.name)} AS module_name",
+            f"{pass_name_sql} AS pass_name",
+        ]
 
     def resolve_pass_plan(
         self, pass_cfg: PassConfig, force_estimate: bool = False
@@ -689,6 +833,13 @@ class PersonLinkageCascade:
         max_r = profile.max_multiplicity[self._block_on(pass_cfg)]
         return self._knobs_none_at(pass_cfg, max_r, profile.max_str_payload)
 
+    def _expected_pairs(self, pass_cfg: PassConfig) -> float:
+        """The pairs a proved pass makes when the census' keys spread like
+        the reference's: census rows × the reference's mean multiplicity
+        of the pass's keys (from the same profile as the bound)."""
+        mean_r = self._key_profile.mean_multiplicity[self._block_on(pass_cfg)]
+        return self._census_rows_and_payload()[0] * mean_r
+
     def _module_key_profile(self) -> KeyProfile | None:
         """The current module's reference profile — ONE aggregation for
         every derived-knob pass (:func:`max_key_multiplicity`) — or None
@@ -712,7 +863,8 @@ class PersonLinkageCascade:
         census' largest and ``ref_payload`` string bytes per side."""
         n_census, census_payload = self._census_rows_and_payload()
         bound = n_census * max_r
-        census_side, ref_side, block_on = self._pass_sides(pass_cfg)
+        # schemas only: the full census has the same columns
+        census_side, ref_side, block_on = self._pass_sides(pass_cfg, self.census)
         # one pair of the widest rows: no pair row of the pass is wider
         widest = PairStats(bound, 1, 1, bound, census_payload, ref_payload)
         row_bytes = estimate_pair_row_bytes(
@@ -735,7 +887,20 @@ class PersonLinkageCascade:
         )
 
     def run_matching_pass(self, pass_cfg: PassConfig) -> None:
+        """Run one pass. A pass whose plan is proved
+        (:meth:`_bound_rules_out_knobs`) joins the pending group while the
+        group's expected pairs stay within :data:`PASS_GROUP_MAX_PAIRS`,
+        else it starts a new group; no job runs. Any other pass flushes
+        the group and runs as a group of one (see the module docstring)."""
         assert self._module is not None, "start_module first"
+        if self.auto_pin and self._bound_rules_out_knobs(pass_cfg):
+            pairs = self._expected_pairs(pass_cfg)
+            g = self._group
+            if g is not None and g.expected_pairs + pairs > PASS_GROUP_MAX_PAIRS:
+                self._flush_group()
+            self._add_to_group(pass_cfg, pairs)
+            return
+        self._flush_group()
         cfg = self._module
         plan = self.resolve_pass_plan(pass_cfg, force_estimate=self.collect_stats)
         n_pairs = plan.stats.pairs if plan.stats is not None else -1
@@ -751,32 +916,91 @@ class PersonLinkageCascade:
             plan.stats.pairs if plan.stats is not None else None,
             row_bytes=estimate_checkpoint_row_bytes(links_plan.schema),
         )
-
-        new_links = self._truncate(links_plan)
-        # with the eager checkpoint above the count is free, but under a
-        # non-eager checkpoint mode it would be a whole extra job — only
-        # pay it when stats were asked for
-        n_links = new_links.count() if self.collect_stats else -1
-
-        self._provisional_links = self._provisional_links.unionByName(new_links)
-
-        # remove matched linkage records (NOT raw records — a nickname
-        # variant matching doesn't stop the canonical record, SURVEY §7.3.5)
-        self._census_to_match = self._truncate(
-            anti_join(
-                self._census_to_match,
-                new_links.select(
-                    F.col("record_id_census_2030").alias("record_id")
-                ).distinct(),
-                on="record_id",
-            )
+        self._group = _PassGroup(
+            self._census_to_match, self._provisional_links, links=links_plan
         )
-        n_eligible = self._census_to_match.count() if self.collect_stats else -1
+        new_links = self._flush_group()
 
         if self.collect_stats:
+            # with the eager checkpoints the counts are free, but under a
+            # non-eager checkpoint mode each would be a whole extra job
             self.stats.append(
-                PassStats(cfg.name, pass_cfg.name, n_pairs, n_links, n_eligible)
+                PassStats(
+                    cfg.name,
+                    pass_cfg.name,
+                    n_pairs,
+                    new_links.count(),
+                    self._census_to_match.count(),
+                )
             )
+
+    def _add_to_group(self, pass_cfg: PassConfig, pairs: float) -> None:
+        """Add a proved pass (``pairs`` expected) to the pending group and
+        leave the links so far and the records still eligible as lazy
+        frames. No knob needs deriving: the bound proved pin, salt and
+        the checkpoint storage level all None, and it bounds the group's
+        links frame too (a record keeps links of one pass only, at most
+        that pass's ``r``)."""
+        g = self._group
+        if g is None:
+            g = self._group = _PassGroup(self._census_to_match, self._provisional_links)
+        g.expected_pairs += pairs
+        census_side, ref_side, block_on = self._pass_sides(pass_cfg, g.census)
+        model = self._pass_model()
+        g.branches.append(
+            blocked_pairs(census_side, ref_side, block_on).selectExpr(
+                *self._pair_columns(model, block_on),
+                f"{len(g.branches)} AS __pass",
+                f"CAST('{float(pass_cfg.probability_threshold)!r}' AS DOUBLE) AS __t",
+                f"{_sql_string(pass_cfg.name)} AS pass_name",
+            )
+        )
+        scored = score_pairs(
+            functools.reduce(DataFrame.union, g.branches),
+            model,
+            jw_strategy=self.jw_strategy,
+        )
+        if len(g.branches) == 1:
+            # a single pass: its links are the pairs over its threshold,
+            # and the group costs what the pass alone costs
+            kept = scored.where("match_probability >= __t")
+        else:
+            # the threshold stays inside the window: a probability Filter
+            # below it would be pushed through the Union into every
+            # branch, where constraint propagation over the twice-aliased
+            # key columns took the optimizer seconds per module
+            kept = (
+                scored.selectExpr(
+                    "*", "CASE WHEN match_probability >= __t THEN __pass END AS __hit"
+                )
+                .selectExpr(
+                    "*", "min(__hit) OVER (PARTITION BY record_id_l) AS __first"
+                )
+                .where("__hit = __first")
+            )
+        g.links = kept.selectExpr(*self._links_projection("pass_name"))
+        self._provisional_links = g.links_before.unionByName(g.links)
+        self._census_to_match = anti_join(
+            g.census, _linked_records(g.links), on="record_id"
+        )
+
+    def _flush_group(self, census: bool = True) -> DataFrame | None:
+        """Materialise the pending group's links and, with ``census``, the
+        records still eligible after it; returns the group's links (None
+        when no group is pending). The one place the cross-pass state
+        moves past a group, of one pass or of several."""
+        g, self._group = self._group, None
+        if g is None:
+            return None
+        links = self._truncate(g.links)
+        self._provisional_links = g.links_before.unionByName(links)
+        if census:
+            # drop linked linkage records, NOT raw records — a nickname
+            # variant matching doesn't stop the canonical record
+            self._census_to_match = self._truncate(
+                anti_join(g.census, _linked_records(links), on="record_id")
+            )
+        return links
 
     def confirm_piks(self) -> DataFrame:
         """Module post-search confirm (reference 03:2132-2234): attach PIKs,
@@ -786,6 +1010,8 @@ class PersonLinkageCascade:
         accumulator."""
         assert self._module is not None
         cfg = self._module
+        # the records still eligible are not needed past this point
+        self._flush_group(census=False)
 
         piks = self._reference_file.select(
             F.col("record_id").alias("record_id_reference_file"), "pik"
@@ -794,13 +1020,8 @@ class PersonLinkageCascade:
             piks, on="record_id_reference_file", how="left"
         )
 
-        # stats caches from the PREVIOUS module can be released now; this
-        # module's (registered below) must outlive confirm_piks because
-        # the accumulator fold may be lazy (persist / off checkpoint modes)
-        for c in self._stats_caches:
-            c.unpersist()
-        self._stats_caches = []
-
+        # frames cached for the stats counts only, released at the end
+        stats_caches: list[DataFrame] = []
         n_deceased_dropped = None
         if self.dates_of_death is not None:
             dod = self.dates_of_death.select("pik", "date_of_death")
@@ -814,7 +1035,7 @@ class PersonLinkageCascade:
                 # stats action doesn't recompute the module's whole link
                 # pipeline a second time
                 links = links.persist(StorageLevel.MEMORY_AND_DISK)
-                self._stats_caches.append(links)
+                stats_caches.append(links)
                 n_deceased_dropped = links.filter(~alive).count()
             links = links.filter(alive).drop("date_of_death")
 
@@ -827,7 +1048,7 @@ class PersonLinkageCascade:
             # consumed by the n_multi count and the confirmed pipeline —
             # cache the window result once
             best = best.persist(StorageLevel.MEMORY_AND_DISK)
-            self._stats_caches.append(best)
+            stats_caches.append(best)
         # single-PIK gate as a WINDOW over the same partition key the
         # best-window and the keep_best row_number already use (r15,
         # guide §2.4/§3.3): the former groupBy(count_distinct) + left_semi
@@ -874,6 +1095,10 @@ class PersonLinkageCascade:
         self.confirmed_piks = self._truncate(
             self.confirmed_piks.unionByName(confirmed)
         )
+        # after the fold: a lazy fold (persist / off modes) recomputes
+        # from the uncached plan, the same rows
+        for c in stats_caches:
+            c.unpersist()
         self._module = None
         self._census_to_match = None
         self._provisional_links = None
@@ -887,7 +1112,17 @@ class PersonLinkageCascade:
             for p in mod.passes:
                 self.run_matching_pass(p)
             self.confirm_piks()
+        self.release()
         return self.confirmed_piks
+
+    def release(self) -> None:
+        """Unpersist the census cache the cascade made (one the caller
+        made before passing the census in stays). Call it once the frames
+        that read the census have been consumed: they stay valid after,
+        but recompute the census from its plan. Checkpoints need no call:
+        their blocks go when their frames are garbage-collected."""
+        if self._owns_census_cache:
+            self.census.unpersist()
 
     def attach_piks(self, census_raw: DataFrame) -> DataFrame:
         """Final 1:1 PIK attach onto the raw input file (J8; reference

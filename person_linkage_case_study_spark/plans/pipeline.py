@@ -34,7 +34,8 @@ def run_full_pvs_cascade(
     the HHComp module's reference file is constructed mid-cascade from the
     confirmed state, exactly as the reference does (03:2982-3131).
     ``census_raw`` (for the final attach) defaults to distinct raw ids of
-    the preprocessed input.
+    the preprocessed input. The cascade keeps the census cached for the
+    returned frames; ``cascade.release()`` drops it once they are consumed.
     """
     census = add_pseudo_household_id(census)
     config = config or default_cascade_config()

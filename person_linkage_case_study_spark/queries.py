@@ -17,6 +17,7 @@ Conventions:
 from __future__ import annotations
 
 import math
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -3549,9 +3550,13 @@ def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return f"SELECT media_id, {exprs} FROM {view}"
 
+    # per-call view names (two builds on one session must not see each
+    # other's legs), dropped once spark.sql has analysed the query: the
+    # analysed plan holds the legs' plans, not the views
+    tag = uuid.uuid4().hex[:12]
+    views = [f"__mm_leg_{tag}_{i}" for i in range(len(legs))]
     selects = []
-    for i, fr in enumerate(legs):
-        view = f"__mm_leg_{i}"
+    for fr, view in zip(legs, views):
         fr.createOrReplaceTempView(view)
         selects.append(pad_select(fr, view))
     union_sql = "\nUNION ALL\n".join(selects)
@@ -3573,9 +3578,13 @@ def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         else f"first(`{c}`, true) AS `{c}`"
         for c in cols
     )
-    out = spark.sql(
-        f"SELECT media_id, {agg_sql} FROM ({union_sql}) GROUP BY media_id"
-    )
+    try:
+        out = spark.sql(
+            f"SELECT media_id, {agg_sql} FROM ({union_sql}) GROUP BY media_id"
+        )
+    finally:
+        for view in views:
+            spark.catalog.dropTempView(view)
     return (
         out.select(
             "media_id",

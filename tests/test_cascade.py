@@ -15,11 +15,14 @@ from person_linkage_case_study_spark.operators.gamma import (
 )
 from person_linkage_case_study_spark.operators.scoring import LinkageModel
 from person_linkage_case_study_spark.plans.cascade import (
+    LINKS_FRAME_TEMPLATE,
     CascadeConfig,
     ModuleConfig,
     PassConfig,
     PassPlan,
     PersonLinkageCascade,
+    pass_group_plan_problems,
+    switch_first_and_last_names,
 )
 from person_linkage_case_study_spark.plans.preprocess import (
     preprocess_census,
@@ -1000,3 +1003,285 @@ def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
     big._census_profile = (1_200_000, 0)
     assert big.resolve_pass_plan(hot_pass).stats is not None
     assert len(profiles) == 2
+
+
+# -- pass groups --------------------------------------------------------------
+
+GEO_MATCHING = [
+    "first_name_15", "last_name_12", "middle_initial",
+    "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
+]
+# three passes of the module's config with different thresholds, one of
+# them a name switch; a pass outside the config; one more config pass
+GEOKEY_STRICT = PassConfig("geokey", ["geokey_for_blocking"], 0.99995)
+NAME_1_SWITCHED = PassConfig(
+    "name_1 switched", ["first_name_1", "last_name_1"], 0.0,
+    input_data_transformation=switch_first_and_last_names,
+)
+BIRTH_YEAR = PassConfig("birth year", ["year_of_birth"], 0.5)
+OUTSIDE = PassConfig("name_2 outside", ["first_name_2", "last_name_2"], 0.99)
+GEOKEY_LOOSE = PassConfig("geokey loose", ["geokey_for_blocking"], 0.0)
+GROUP_MODULE = ModuleConfig(
+    name="geosearch",
+    reference_file_name="geobase_reference_file",
+    cut_columns=["zip3"],
+    matching_columns=GEO_MATCHING,
+    passes=[GEOKEY_STRICT, NAME_1_SWITCHED, BIRTH_YEAR, GEOKEY_LOOSE],
+)
+GROUP_RUN_ORDER = [GEOKEY_STRICT, NAME_1_SWITCHED, BIRTH_YEAR, OUTSIDE, GEOKEY_LOOSE]
+
+
+@pytest.fixture(scope="module")
+def group_inputs(spark, fixture):
+    """The hand-built fixture plus c9 (c5 with first and last name
+    transposed: only the name-switch pass links it) and c10 (P6's address
+    and name, another birth date: only the loose geokey pass links it)."""
+    census, geobase, name_dob, fake_names, dod = fixture
+    extra = spark.createDataFrame(
+        [
+            ("c9", "Green", None, "Dave", "11/30/1990", "77", "Pine Street",
+             None, "Boston", "MA", "02135", "Household"),
+            ("c10", "Xavier", "Q", "Stone", "01/01/1950", "8", "Hill Street",
+             None, "Boston", "MA", "02136", "Household"),
+        ],
+        census.schema,
+    )
+    return (
+        preprocess_census(census.unionByName(extra), fake_names, gq_threshold=99),
+        preprocess_reference_file(geobase),
+    )
+
+
+def _run_group_module(spark, group_inputs, collect_stats, on_pass=None):
+    """Start GROUP_MODULE and run GROUP_RUN_ORDER; ``on_pass(cascade,
+    pass_cfg)`` is called after each pass."""
+    census, geobase = group_inputs
+    cascade = PersonLinkageCascade(
+        spark, census, {"geobase_reference_file": geobase}, make_model(),
+        collect_stats=collect_stats,
+    )
+    cascade.start_module(GROUP_MODULE)
+    for p in GROUP_RUN_ORDER:
+        cascade.run_matching_pass(p)
+        if on_pass is not None:
+            on_pass(cascade, p)
+    return cascade
+
+
+def _link_rows(df):
+    return {
+        (r["record_id_census_2030"], r["record_id_reference_file"],
+         r["match_weight"], r["match_probability"], r["pass_name"])
+        for r in df.collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def group_run(spark, group_inputs):
+    """GROUP_MODULE without stats, with the Spark jobs run so far, the
+    links frame's schema and its optimized plan after every pass."""
+    sc = spark.sparkContext
+    group_id = "test-pass-group"
+    after = []
+
+    def snapshot(cascade, pass_cfg):
+        links = cascade._provisional_links
+        after.append({
+            "jobs": len(sc.statusTracker().getJobIdsForGroup(group_id)),
+            "schema": [(f.name, f.dataType.typeName()) for f in links.schema.fields],
+            "plan": links._jdf.queryExecution().optimizedPlan().treeString(),
+            "group": getattr(cascade, "_group", None) is not None,
+        })
+
+    sc.setJobGroup(group_id, "pass group")
+    try:
+        cascade = _run_group_module(spark, group_inputs, False, snapshot)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return _link_rows(cascade._provisional_links), after
+
+
+def test_pass_group_links_equal_sequential(spark, group_inputs, group_run):
+    """The passes run as groups link exactly what sequential elimination
+    (stats on: every pass a group of one) links: a record linked by two
+    passes keeps the earlier pass's links, each pass applies its own
+    threshold, the name-switch pass links the transposed record, and a
+    pass outside the config flushes the group before the next one."""
+    grouped, _ = group_run
+    sequential = _link_rows(
+        _run_group_module(spark, group_inputs, True)._provisional_links
+    )
+    assert grouped == sequential
+
+    passes = {}
+    for rid, _, _, _, pass_name in grouped:
+        passes.setdefault(rid.removeprefix("census_2030_preprocessed_"), set()).add(
+            pass_name
+        )
+    assert passes == {
+        "c1_0": {"geokey"}, "c2_1": {"geokey"}, "c4_0": {"geokey"},
+        "c5_0": {"geokey"},
+        # 0.9997: under the geokey pass's threshold, over birth year's
+        "c2_0": {"birth year"}, "c7_0": {"birth year"},
+        "c9_0": {"name_1 switched"},
+        "c10_0": {"geokey loose"},
+    }
+    # c1 also links in the birth-year pass when run on its own
+    census, geobase = group_inputs
+    alone = PersonLinkageCascade(
+        spark, census, {"geobase_reference_file": geobase}, make_model()
+    )
+    alone.start_module(GROUP_MODULE)
+    assert "census_2030_preprocessed_c1_0" in {
+        r["record_id_census_2030"] for r in alone.build_pass_links(BIRTH_YEAR).collect()
+    }
+
+
+def test_pass_group_runs_one_materialisation(group_run):
+    """Proved passes after a module's first (which runs the reference
+    profile) start no Spark job; the pass outside the config flushes the
+    group and runs as a group of one; the next proved pass starts a new
+    group."""
+    _, after = group_run
+    jobs = [a["jobs"] for a in after]
+    assert jobs[1] == jobs[2] == jobs[0]
+    assert jobs[3] > jobs[2]
+    assert jobs[4] == jobs[3]
+    assert [a["group"] for a in after] == [True, True, True, False, True]
+
+
+def test_pass_group_schema_is_links_template(group_run):
+    _, after = group_run
+    for a in after:
+        assert a["schema"] == list(LINKS_FRAME_TEMPLATE)
+
+
+def test_pass_group_plan_shape(group_run):
+    """The three-pass group's optimized plan: one Window, above the Union
+    of the three branches, and no probability Filter below the Union
+    (pushed into every branch it made constraint propagation blow up)."""
+    _, after = group_run
+    assert pass_group_plan_problems(after[2]["plan"], branches=3) == []
+
+
+def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,
+                                          monkeypatch):
+    """A proved pass that would take its group past PASS_GROUP_MAX_PAIRS
+    starts a new group; a group holding a single proved pass keeps the
+    pairs over its threshold without a window; the links do not change."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    monkeypatch.setattr(cascade_mod, "PASS_GROUP_MAX_PAIRS", 1)
+    plans = []
+
+    def snapshot(cascade, pass_cfg):
+        if cascade._group is not None:
+            assert len(cascade._group.branches) == 1, pass_cfg.name
+            plans.append(
+                cascade._provisional_links._jdf.queryExecution()
+                .optimizedPlan().treeString()
+            )
+
+    cascade = _run_group_module(spark, group_inputs, False, snapshot)
+    assert len(plans) == 4
+    assert not [p for p in plans if "Window " in p]
+    grouped, _ = group_run
+    assert _link_rows(cascade._provisional_links) == grouped
+
+
+def test_large_census_forms_no_group(spark, group_inputs, monkeypatch):
+    """A census too large for the bound at r = 1 (the RI-scale and 8×
+    rungs' ~1.2M records need a salt there) runs no reference profile and
+    forms no group: every pass runs its exact pair estimate and today's
+    two checkpoints."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    estimates, profiles = [], []
+    real_estimate = cascade_mod.estimate_pair_stats
+    real_profile = cascade_mod.max_key_multiplicity
+    monkeypatch.setattr(
+        cascade_mod, "estimate_pair_stats",
+        lambda *a, **k: estimates.append(1) or real_estimate(*a, **k),
+    )
+    monkeypatch.setattr(
+        cascade_mod, "max_key_multiplicity",
+        lambda *a, **k: profiles.append(1) or real_profile(*a, **k),
+    )
+    census, geobase = group_inputs
+    cascade = PersonLinkageCascade(
+        spark, census, {"geobase_reference_file": geobase}, make_model(),
+        collect_stats=False,
+    )
+    cascade._census_profile = (1_200_000, 0)
+    cascade.start_module(GROUP_MODULE)
+    for p in GROUP_RUN_ORDER:
+        cascade.run_matching_pass(p)
+        assert getattr(cascade, "_group", None) is None, p.name
+    assert len(estimates) == len(GROUP_RUN_ORDER)
+    assert profiles == []
+
+
+def test_stats_cascade_leaves_no_persisted_rdds(spark, fixture):
+    """A cascade with stats (its confirm caches two frames per module for
+    the counts) persists nothing past the run once its frames are
+    dropped: getPersistentRDDs returns to the ids it had before."""
+    import gc
+    import time
+
+    census, geobase, name_dob, fake_names, dod = fixture
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    def collect_garbage():
+        # py4j detaches dead proxies from a thread of its own (its queue,
+        # polled here, drains in seconds after a cascade), then the JVM's
+        # collector and Spark's context cleaner free what they held
+        gc.collect()
+        client = spark.sparkContext._gateway._gateway_client
+        queue = getattr(client, "finalizer_deque", None)
+        deadline = time.monotonic() + 30
+        while queue and time.monotonic() < deadline:
+            time.sleep(0.1)
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+
+    collect_garbage()
+    before = persisted()
+    cascade = PersonLinkageCascade(
+        spark,
+        preprocess_census(census, fake_names, gq_threshold=99),
+        {
+            "geobase_reference_file": preprocess_reference_file(geobase),
+            "name_dob_reference_file": preprocess_reference_file(
+                name_dob, has_address=False
+            ),
+        },
+        make_model(),
+        dates_of_death=dod,
+        collect_stats=True,
+    )
+    config = CascadeConfig(
+        modules=[
+            ModuleConfig(
+                name="geosearch",
+                reference_file_name="geobase_reference_file",
+                cut_columns=["zip3"],
+                matching_columns=GEO_MATCHING,
+                passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
+            ),
+        ]
+    )
+    assert cascade.run(config).count() > 0
+    assert cascade.confirm_stats[0].n_deceased_dropped == 1
+    del cascade
+    left = persisted() - before
+    for _ in range(5):
+        if not left:
+            break
+        collect_garbage()
+        left = persisted() - before
+    assert not left

@@ -2631,3 +2631,24 @@ def test_extract_mp3_sideinfo_stats_spark(spark):
     assert rows[1]["l3_gain_mean"] == 90.0
     assert rows[1]["l3_short_share"] == 0.5
     assert rows[2]["l3_gain_mean"] is None and rows[3]["l3_gain_mean"] is None
+
+
+def test_mm_media_features_drops_its_leg_views(spark):
+    """mm_media_features registers its pivot legs as temp views under
+    per-call names and drops them once the query is analysed: no
+    ``__mm_leg_`` view is left afterwards, and the frame still runs."""
+    from conftest import SF_DIR
+
+    from person_linkage_case_study_spark.queries import mm_media_features
+
+    def leg_views():
+        return [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith("__mm_leg_")
+        ]
+
+    before = leg_views()
+    out = mm_media_features(spark, SF_DIR)
+    assert leg_views() == before
+    assert out.count() > 0

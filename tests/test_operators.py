@@ -117,6 +117,10 @@ def test_max_key_multiplicity_bounds_pairs(spark):
     # k1: a x3 (the three NULLs never join); (k1,k2): (a,x) x2; k2: x x2
     assert prof.max_multiplicity == {("k1",): 3, ("k1", "k2"): 2, ("k2",): 2}
     assert prof.max_str_payload == 1 + 1 + len("long-name")
+    # k1: groups of 3 and 1 -> (9 + 1) / 4; (k1,k2): 2 and 1; k2: 2 and 1
+    assert prof.mean_multiplicity == {
+        ("k1",): 2.5, ("k1", "k2"): 5 / 3, ("k2",): 5 / 3
+    }
     left = spark.createDataFrame(
         [("a", "x"), ("a", "y"), ("b", "x")], "k1 string, k2 string"
     )
@@ -124,7 +128,7 @@ def test_max_key_multiplicity_bounds_pairs(spark):
         st = estimate_pair_stats(left, ref.select(*keys), list(keys))
         assert st.pairs <= 3 * r and st.max_key_pairs <= 3 * r
     empty = max_key_multiplicity(ref.limit(0), [["k1"]])
-    assert empty == ({("k1",): 0}, 0)
+    assert empty == ({("k1",): 0}, 0, {("k1",): 0.0})
 
 
 def test_blocked_pairs_pin_preserves_pairs(spark):

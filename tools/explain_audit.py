@@ -4,7 +4,10 @@ Checks, per audited query:
 - parquet scans carry PushedFilters / pruned ReadSchema where expected;
 - small dims broadcast (BroadcastHashJoin) instead of shuffling;
 - JW is JVM-native or a single Arrow-batched node (never row-at-a-time);
-- WholeStageCodegen spans exist around the scoring arithmetic.
+- WholeStageCodegen spans exist around the scoring arithmetic;
+- the cascade derives salt and pin for a hot pass only, and runs proved
+  passes as one group: one Window above the Union of the branches, no
+  threshold Filter below it.
 
 Usage: python tools/explain_audit.py [sf_dir]
 Exits non-zero if an invariant fails; prints a short report.
@@ -178,6 +181,7 @@ def main() -> None:
         ModuleConfig,
         PassConfig,
         PersonLinkageCascade,
+        pass_group_plan_problems,
     )
 
     # 2048x2048 = 4,194,304 hot pairs: at the r11 MEASURED string widths
@@ -235,6 +239,45 @@ def main() -> None:
                   and "REPARTITION_BY_NUM" not in p,
                   "spread pass: below-gate plan untouched (no salt, no pin)")
         casc.census.unpersist()
+
+    print("== cascade pass group ==")
+    # Two spread passes of the module's config, both proved small: they
+    # run as one group — one Window (earliest linking pass per record)
+    # above the Union of the branches, and no threshold Filter below the
+    # Union (pushed into every branch, it made constraint propagation
+    # over the Union take seconds per module).
+    group_module = ModuleConfig(
+        name="audit_group", reference_file_name="ref", cut_columns=["zip3"],
+        matching_columns=["middle_initial"],
+        passes=[
+            PassConfig("geokey", ["geokey_for_blocking"], 0.5),
+            PassConfig("alt key", ["alt_key"], 0.9),
+        ],
+    )
+    census = person_frame("c", True).withColumn(
+        "record_id_raw_input_file", F.col("record_id")
+    )
+    ref = person_frame("r", True).withColumn(
+        "pik", F.concat(F.lit("P"), F.col("record_id"))
+    )
+    casc = PersonLinkageCascade(
+        spark,
+        census.withColumn("alt_key", F.col("geokey_for_blocking")),
+        {"ref": ref.withColumn("alt_key", F.col("geokey_for_blocking"))},
+        model,
+        collect_stats=False,
+    )
+    casc.start_module(group_module)
+    for p in group_module.passes:
+        casc.run_matching_pass(p)
+    problems = pass_group_plan_problems(
+        casc._provisional_links._jdf.queryExecution().optimizedPlan().treeString(),
+        branches=len(group_module.passes),
+    )
+    check("group", not problems,
+          "one Window above the branches' Union, no threshold Filter below it"
+          + (f" ({'; '.join(problems)})" if problems else ""))
+    casc.census.unpersist()
 
     if failures:
         print(f"\n{len(failures)} plan invariant(s) FAILED")
