@@ -6,6 +6,9 @@ built-in, so we ship an Arrow-batched pandas UDF over a pure-Python
 implementation of the standard algorithm (Winkler 1990: prefix bonus capped
 at 4 chars, scaling 0.1, boost threshold 0.7) — semantics match DuckDB's
 ``jaro_winkler_similarity`` so the correctness oracle can diff us directly.
+A native JVM UDF (jvm/sparklinkage.jar) computes the same doubles without
+the Arrow transfer; :func:`jaro_winkler_sql_function` is the one selector
+between the two for a session.
 
 Token-set Jaccard and cosine similarity are pure built-in column
 expressions (JVM-side, codegen) — the fast path for document dedup and ANN.
@@ -14,6 +17,7 @@ expressions (JVM-side, codegen) — the fast path for document dedup and ANN.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -197,30 +201,45 @@ def jaro_winkler_udf(left: pd.Series, right: pd.Series) -> pd.Series:
 jaro_winkler_udf = jaro_winkler_udf.asNondeterministic()
 
 JVM_JW_NAME = "jaro_winkler_jvm"
-_jvm_jw_sessions: "set[int]" = set()
+#: the SQL name :func:`jaro_winkler_sql_function` registers the pandas UDF
+#: under on a session without the jar
+PY_JW_NAME = "jaro_winkler_py"
 
 
 def ensure_jvm_jw(spark) -> bool:
     """Register the native JVM Jaro-Winkler UDF (jvm/sparklinkage.jar) on
     this session if the jar is on the classpath; returns availability.
 
+    The session's own catalog records the registration: a function
+    already registered there is reused. Registration loads the class, so
+    it fails on a session without the jar.
+
     The JVM implementation is semantics-identical to the pandas UDF
     (fuzz-tested against DuckDB); it removes the Arrow round-trip entirely,
     which dominates pair-scoring cost at scale.
     """
-    key = id(spark)
-    if key in _jvm_jw_sessions:
+    if spark.catalog.functionExists(JVM_JW_NAME):
         return True
     try:
-        from pyspark.sql.types import DoubleType as _D
-
-        spark.udf.registerJavaFunction(JVM_JW_NAME, "sparklinkage.JaroWinkler", _D())
-        # probe: fails at first use if the class is not on the classpath
-        spark.sql(f"SELECT {JVM_JW_NAME}('A', 'A')").collect()
-        _jvm_jw_sessions.add(key)
-        return True
-    except Exception:
+        spark.udf.registerJavaFunction(
+            JVM_JW_NAME, "sparklinkage.JaroWinkler", DoubleType()
+        )
+    except AnalysisException:  # the class is not on the classpath
         return False
+    return True
+
+
+def jaro_winkler_sql_function(spark) -> str:
+    """The SQL name of the session's Jaro-Winkler function: the JVM UDF
+    when :func:`ensure_jvm_jw` holds, else the Arrow pandas UDF
+    (:func:`jaro_winkler_udf`), registered under :data:`PY_JW_NAME` — the
+    only path on a session without the jar. Both return the same doubles,
+    so callers emit one SQL string whichever runs."""
+    if ensure_jvm_jw(spark):
+        return JVM_JW_NAME
+    if not spark.catalog.functionExists(PY_JW_NAME):
+        spark.udf.register(PY_JW_NAME, jaro_winkler_udf)
+    return PY_JW_NAME
 
 
 def jaccard_tokens(left: Column, right: Column) -> Column:

@@ -1,14 +1,22 @@
-"""Comparison/gamma compiler (SURVEY.md §2.9 K3).
+"""Comparison levels and the one CASE emitter (SURVEY.md §2.9 K3).
 
 Splink compiles a settings dict (ordered comparison levels per column) into
-CASE WHEN SQL; here the same model compiles two ways:
+CASE WHEN SQL and runs it on DuckDB or Spark; here the same model emits one
+SQL string per comparison for either engine. :meth:`Comparison.gamma_sql`
+builds the gamma CASE, ``operators/scoring.py`` the Fellegi-Sunter weight
+CASE and ``operators/tf.py`` the term-frequency adjustment CASE, all through
+:func:`case_sql`; the Spark plan and the DuckDB correctness oracle are
+emitted from the *same* model object, so they cannot drift apart.
 
-- ``compile()`` → a Spark ``when()`` chain (one Catalyst expression per
-  comparison, codegen'd; the Jaro-Winkler level reads a pre-materialized
-  pandas-UDF column so the UDF runs once per pair, not once per level).
-- ``compile_sql()`` → the equivalent ANSI SQL CASE (DuckDB dialect) so the
-  correctness oracle is generated from the *same* model object — the Spark
-  plan and the oracle cannot drift apart.
+A :class:`Dialect` switches only three things:
+
+- column quoting: Spark backquotes identifiers, DuckDB takes them bare;
+- float literal binding: Spark binds ``CAST('<repr>' AS DOUBLE)`` (a bare
+  ``2.5`` parses as DECIMAL there), DuckDB the bare ``repr``; ints stay
+  plain in both;
+- the Jaro-Winkler operand: Spark reads the pre-materialised ``__jw_<col>``
+  column (:func:`add_gammas` computes it once per pair, not once per
+  level), DuckDB calls ``jaro_winkler_similarity(l, r)`` inline.
 
 Gamma numbering follows Splink 3: the NULL level is -1; the remaining
 levels are numbered descending from strongest (first listed) to the else
@@ -20,32 +28,64 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.similarity import JVM_JW_NAME, ensure_jvm_jw, jaro_winkler_udf
+from ..functions.similarity import jaro_winkler_sql_function
+from .blocking import sql_ident
 
 
-def _spark_sql_number(v: int | float) -> str:
-    """A Spark SQL literal of the type ``F.lit(v)`` binds: ints plain,
-    floats as CAST('<repr>' AS DOUBLE) (a bare 2.5 parses as DECIMAL)."""
-    if isinstance(v, float):
-        return f"CAST('{v!r}' AS DOUBLE)"
-    return str(v)
+@dataclass(frozen=True)
+class Dialect:
+    """The SQL engine an emitter writes for: Spark, or else DuckDB (the
+    correctness oracle). See the module docstring."""
+
+    spark: bool
+
+    def col(self, name: str) -> str:
+        return sql_ident(name) if self.spark else name
+
+    def num(self, v: int | float) -> str:
+        """A numeric literal of ``v``'s type; for Spark, a float as
+        CAST('<repr>' AS DOUBLE), which is exactly the double ``v``."""
+        if self.spark and isinstance(v, float):
+            return f"CAST('{v!r}' AS DOUBLE)"
+        return repr(v)
+
+    @property
+    def zero(self) -> str:
+        """The double 0.0 of the weight CASEs' NULL and ELSE arms."""
+        return "CAST(0.0 AS DOUBLE)" if self.spark else "0.0"
+
+    def jw(self, c: "Comparison") -> str:
+        if self.spark:
+            return self.col(c.jw_col)
+        return (
+            f"jaro_winkler_similarity({self.col(c.col + '_l')},"
+            f" {self.col(c.col + '_r')})"
+        )
+
+
+SPARK = Dialect(spark=True)
+DUCKDB = Dialect(spark=False)
+
+
+def case_sql(arms: list[tuple[str, str]], otherwise: str) -> str:
+    """``CASE WHEN <cond> THEN <value> ... ELSE <otherwise> END``."""
+    whens = " ".join(f"WHEN {cond} THEN {value}" for cond, value in arms)
+    return f"CASE {whens} ELSE {otherwise} END"
+
+
+LEVEL_KINDS = ("null", "exact", "jaro_winkler", "banded", "else")
 
 
 @dataclass
 class ComparisonLevel:
-    """One level of a comparison. ``kind`` ∈ {null, exact, jaro_winkler,
-    banded, custom, else}; ``threshold`` for jaro_winkler (0-1), ``band``
-    for |l-r| <= band. Custom levels carry both a Column builder and a SQL
-    template (with {l}/{r} placeholders) so oracle emission stays possible."""
+    """One level of a comparison. ``kind`` ∈ :data:`LEVEL_KINDS`;
+    ``threshold`` for jaro_winkler (0-1), ``band`` for |l-r| <= band."""
 
     kind: str
     threshold: float | None = None
-    band: int | None = None
-    expr: Column | None = None
-    sql: str | None = None
+    band: int | float | None = None
 
 
 @dataclass
@@ -54,7 +94,11 @@ class Comparison:
     non-null gamma value (index = gamma value, length = #non-null levels).
 
     m/u defaults are placeholders overwritten by estimation
-    (operators/estimation.py) or a trained model.
+    (operators/estimation.py) or a trained model. A malformed level list
+    (an unknown kind, a JW level without a threshold or a banded one
+    without a band, an else level that is not last, more than one null
+    level) raises ``ValueError`` here, so both dialects see the same
+    levels.
     """
 
     col: str
@@ -62,12 +106,30 @@ class Comparison:
     m: list[float] = field(default_factory=list)
     u: list[float] = field(default_factory=list)
 
+    def __post_init__(self) -> None:
+        for i, lv in enumerate(self.levels):
+            if lv.kind not in LEVEL_KINDS:
+                raise ValueError(f"{self.col}: unknown level kind {lv.kind!r}")
+            if lv.kind == "jaro_winkler" and lv.threshold is None:
+                raise ValueError(f"{self.col}: jaro_winkler level needs a threshold")
+            if lv.kind == "banded" and lv.band is None:
+                raise ValueError(f"{self.col}: banded level needs a band")
+            if lv.kind == "else" and i != len(self.levels) - 1:
+                raise ValueError(f"{self.col}: the else level must be last")
+        if sum(lv.kind == "null" for lv in self.levels) > 1:
+            raise ValueError(f"{self.col}: more than one null level")
+
     @property
     def gamma_col(self) -> str:
         return f"gamma_{self.col}"
 
+    def gamma_levels(self) -> list[tuple[int, ComparisonLevel]]:
+        """(gamma, level) of the non-null levels, strongest first."""
+        non_null = [lv for lv in self.levels if lv.kind != "null"]
+        return [(len(non_null) - 1 - i, lv) for i, lv in enumerate(non_null)]
+
     def n_gamma_levels(self) -> int:
-        return len([l for l in self.levels if l.kind != "null"])
+        return len(self.gamma_levels())
 
     def needs_jw(self) -> bool:
         return any(l.kind == "jaro_winkler" for l in self.levels)
@@ -76,232 +138,56 @@ class Comparison:
     def jw_col(self) -> str:
         return f"__jw_{self.col}"
 
-    def compile(
-        self, left_suffix: str = "_l", right_suffix: str = "_r", jw_col: str | None = None
-    ) -> Column:
-        """Compile to a when() chain producing the gamma ordinal.
-
-        ``jw_col``: name of a pre-materialized Jaro-Winkler column; if the
-        comparison has JW levels and no jw_col is given, the UDF is inlined
-        (correct, but evaluated once per JW level — prefer add_gammas).
-        """
-        l = F.col(self.col + left_suffix)
-        r = F.col(self.col + right_suffix)
-        jw = F.col(jw_col) if jw_col else None
-        non_null = [lv for lv in self.levels if lv.kind != "null"]
-        n = len(non_null)
-        expr = F.when(l.isNull() | r.isNull(), F.lit(-1))
-        for i, lv in enumerate(non_null):
-            gamma = n - 1 - i  # first listed = strongest = highest gamma
+    def gamma_sql(self, dialect: Dialect) -> str:
+        """The gamma CASE over ``<col>_l`` / ``<col>_r``. Gamma ordinals
+        and int bands are INT literals; the JW threshold and float bands
+        bind as doubles (:meth:`Dialect.num`). The else level is last, so
+        it is the CASE's ``ELSE 0``."""
+        l, r = dialect.col(self.col + "_l"), dialect.col(self.col + "_r")
+        arms = [(f"{l} IS NULL OR {r} IS NULL", "-1")]
+        for gamma, lv in self.gamma_levels():
             if lv.kind == "exact":
-                cond = l == r
+                cond = f"{l} = {r}"
             elif lv.kind == "jaro_winkler":
-                sim = jw if jw is not None else jaro_winkler_udf(l, r)
-                cond = sim >= F.lit(lv.threshold)
+                cond = f"{dialect.jw(self)} >= {dialect.num(float(lv.threshold))}"
             elif lv.kind == "banded":
-                cond = F.abs(l - r) <= F.lit(lv.band)
-            elif lv.kind == "custom":
-                cond = lv.expr
-            elif lv.kind == "else":
-                return expr.otherwise(F.lit(gamma))
-            else:
-                raise ValueError(f"unknown level kind {lv.kind!r}")
-            expr = expr.when(cond, F.lit(gamma))
-        return expr.otherwise(F.lit(0))
-
-    def compile_spark_sql(
-        self,
-        left_suffix: str = "_l",
-        right_suffix: str = "_r",
-        jw_col: str | None = None,
-    ) -> str | None:
-        """Spark-SQL mirror of :meth:`compile` — the same CASE, as ONE
-        parseable string so a pass's whole gamma projection lands in a
-        single selectExpr gateway call instead of one py4j round trip
-        per when()/lit() node (r16, guide §4 driver-side; measured
-        ~3500 construct-time round trips per cascade pass before).
-
-        Returns ``None`` when a level cannot be expressed as a plain
-        SQL string — a jaro_winkler level without a pre-materialized
-        ``jw_col`` (the Python-UDF object is not a registered SQL
-        function) or a ``custom`` level (whose ``sql`` template is
-        DuckDB dialect by contract) — in which case the caller falls
-        back to the Column form. Literal semantics are preserved
-        exactly: gamma ordinals and int bands are INT literals as with
-        ``F.lit(int)``, and the JW threshold and float bands bind through
-        CAST('<repr>' AS DOUBLE) so each is the identical IEEE double
-        ``F.lit(float)`` bound (a bare SQL float literal would be a
-        DECIMAL)."""
-        l = f"`{self.col}{left_suffix}`"
-        r = f"`{self.col}{right_suffix}`"
-        non_null = [lv for lv in self.levels if lv.kind != "null"]
-        n = len(non_null)
-        arms = [f"WHEN {l} IS NULL OR {r} IS NULL THEN -1"]
-        for i, lv in enumerate(non_null):
-            gamma = n - 1 - i
-            if lv.kind == "exact":
-                arms.append(f"WHEN {l} = {r} THEN {gamma}")
-            elif lv.kind == "jaro_winkler":
-                if jw_col is None:
-                    return None
-                arms.append(
-                    f"WHEN `{jw_col}` >="
-                    f" {_spark_sql_number(float(lv.threshold))} THEN {gamma}"
-                )
-            elif lv.kind == "banded":
-                arms.append(
-                    f"WHEN abs({l} - {r}) <= {_spark_sql_number(lv.band)}"
-                    f" THEN {gamma}"
-                )
-            elif lv.kind == "custom":
-                return None
-            elif lv.kind == "else":
-                return "CASE " + " ".join(arms) + f" ELSE {gamma} END"
-            else:
-                raise ValueError(f"unknown level kind {lv.kind!r}")
-        return "CASE " + " ".join(arms) + " ELSE 0 END"
-
-    def compile_sql(self, left_suffix: str = "_l", right_suffix: str = "_r") -> str:
-        """Equivalent DuckDB SQL CASE expression (uses DuckDB's native
-        ``jaro_winkler_similarity``, which our pandas UDF matches exactly —
-        verified over random string pairs in tests)."""
-        l = self.col + left_suffix
-        r = self.col + right_suffix
-        non_null = [lv for lv in self.levels if lv.kind != "null"]
-        n = len(non_null)
-        arms = [f"WHEN {l} IS NULL OR {r} IS NULL THEN -1"]
-        else_gamma = 0
-        for i, lv in enumerate(non_null):
-            gamma = n - 1 - i
-            if lv.kind == "exact":
-                arms.append(f"WHEN {l} = {r} THEN {gamma}")
-            elif lv.kind == "jaro_winkler":
-                arms.append(
-                    f"WHEN jaro_winkler_similarity({l}, {r}) >= {lv.threshold!r} THEN {gamma}"
-                )
-            elif lv.kind == "banded":
-                arms.append(f"WHEN abs({l} - {r}) <= {lv.band} THEN {gamma}")
-            elif lv.kind == "custom":
-                if not lv.sql:
-                    raise ValueError(f"custom level on {self.col} lacks sql template")
-                arms.append(f"WHEN {lv.sql.format(l=l, r=r)} THEN {gamma}")
-            elif lv.kind == "else":
-                else_gamma = gamma
-        return "CASE " + " ".join(arms) + f" ELSE {else_gamma} END"
+                cond = f"abs({l} - {r}) <= {dialect.num(lv.band)}"
+            else:  # the else level: the CASE's ELSE
+                continue
+            arms.append((cond, str(gamma)))
+        return case_sql(arms, "0")
 
 
-def add_gammas(
-    pairs: DataFrame,
-    comparisons: list[Comparison],
-    left_suffix: str = "_l",
-    right_suffix: str = "_r",
-    drop_jw: bool = True,
-    jw_strategy: str = "inline",
-) -> DataFrame:
-    """Evaluate every comparison's gamma over a blocked pair table.
+def add_gammas(pairs: DataFrame, comparisons: list[Comparison]) -> DataFrame:
+    """Evaluate every comparison's gamma over a blocked pair table
+    (``<col>_l`` / ``<col>_r`` columns).
 
-    ``jw_strategy`` controls how Jaro-Winkler columns materialize:
-
-    - ``auto`` (recommended): the JVM native UDF when the sparklinkage jar
-      is on the session classpath, else ``inline``.
-    - ``jvm``: the native Java UDF (jvm/sparklinkage.jar) — stays entirely
-      in the JVM, zero Arrow transfer; the dominant cost of pair scoring
-      disappears.
-    - ``inline``: one ArrowEvalPython pass over the pair table (the kernel
-      dedups unique pairs per batch). The fallback when the jar isn't
-      shipped (e.g. the external driver's vanilla session).
-    - ``distinct_broadcast``: compute JW only on the DISTINCT co-occurring
-      (l, r) value pairs, then broadcast-join the scores back. Only a win
-      if ``pairs`` is persisted — the distinct pass re-executes the pair
-      join otherwise (measured slower unpersisted; kept for callers that
-      cache).
-    - ``distinct_join``: same dedup, shuffle join back — for extreme
-      cardinality where the distinct set can't broadcast.
-
-    Everything after the JW columns is a single codegen projection.
+    Jaro-Winkler is materialised once per pair into ``__jw_<col>`` by the
+    session's JW function (``functions.similarity.jaro_winkler_sql_function``):
+    the native JVM UDF when the sparklinkage jar is on the session's
+    classpath (zero Arrow transfer), else the Arrow pandas UDF registered
+    under a SQL name, the fallback for a session without the jar (e.g. the
+    external driver's vanilla session). Either way the JW columns and the
+    gamma projection are one ``selectExpr`` string each, and the JW columns
+    are dropped after.
     """
     jw_needed = [c for c in comparisons if c.needs_jw()]
     df = pairs
-    if jw_strategy == "auto":
-        jw_strategy = (
-            "jvm" if (jw_needed and ensure_jvm_jw(pairs.sparkSession)) else "inline"
-        )
-    elif jw_strategy == "jvm" and jw_needed:
-        if not ensure_jvm_jw(pairs.sparkSession):
-            raise RuntimeError(
-                "jw_strategy='jvm' but sparklinkage.jar is not on the session "
-                "classpath (build with person_linkage_case_study_spark/jvm/build.sh)"
-            )
-    if jw_needed and jw_strategy == "jvm":
-        # registered JVM function ⇒ one selectExpr string instead of a
-        # call_udf Column chain per comparison (r16 construct batching)
+    if jw_needed:
+        jw = jaro_winkler_sql_function(pairs.sparkSession)
         df = df.selectExpr(
             "*",
             *[
-                f"{JVM_JW_NAME}(`{c.col + left_suffix}`,"
-                f" `{c.col + right_suffix}`) AS `{c.jw_col}`"
+                f"{jw}({SPARK.col(c.col + '_l')}, {SPARK.col(c.col + '_r')})"
+                f" AS {SPARK.col(c.jw_col)}"
                 for c in jw_needed
             ],
         )
-    elif jw_needed and jw_strategy in ("distinct_broadcast", "distinct_join"):
-        for c in jw_needed:
-            l, r = c.col + left_suffix, c.col + right_suffix
-            dist = (
-                df.select(F.col(l).alias("__jl"), F.col(r).alias("__jr"))
-                .where(F.col("__jl").isNotNull() & F.col("__jr").isNotNull())
-                .distinct()
-                .withColumn(c.jw_col, jaro_winkler_udf(F.col("__jl"), F.col("__jr")))
-            )
-            if jw_strategy == "distinct_broadcast":
-                dist = F.broadcast(dist)
-            df = df.join(
-                dist,
-                (F.col(l) == F.col("__jl")) & (F.col(r) == F.col("__jr")),
-                "left",
-            ).drop("__jl", "__jr")
-    elif jw_needed:
-        df = df.select(
-            "*",
-            *[
-                jaro_winkler_udf(
-                    F.col(c.col + left_suffix), F.col(c.col + right_suffix)
-                ).alias(c.jw_col)
-                for c in jw_needed
-            ],
-        )
-    # one selectExpr for the whole gamma projection when every
-    # comparison is SQL-expressible (always true for the canonical
-    # exact/JW/banded shapes — JW levels read the pre-materialized
-    # column either way); Column-form fallback otherwise (custom
-    # levels carrying only a Column expr)
-    gamma_sqls = [
-        c.compile_spark_sql(
-            left_suffix, right_suffix,
-            jw_col=c.jw_col if c.needs_jw() else None,
-        )
-        for c in comparisons
-    ]
-    if all(s is not None for s in gamma_sqls):
-        df = df.selectExpr(
-            "*",
-            *[
-                f"{s} AS `{c.gamma_col}`"
-                for s, c in zip(gamma_sqls, comparisons)
-            ],
-        )
-    else:
-        df = df.select(
-            "*",
-            *[
-                c.compile(
-                    left_suffix,
-                    right_suffix,
-                    jw_col=c.jw_col if c.needs_jw() else None,
-                ).alias(c.gamma_col)
-                for c in comparisons
-            ],
-        )
-    if drop_jw and jw_needed:
+    df = df.selectExpr(
+        "*",
+        *[f"{c.gamma_sql(SPARK)} AS {SPARK.col(c.gamma_col)}" for c in comparisons],
+    )
+    if jw_needed:
         df = df.drop(*[c.jw_col for c in jw_needed])
     return df
 

@@ -6,17 +6,33 @@ match_probability = 1 / (1 + 2^(-match_weight))
 γ = -1 (null level) contributes nothing, exactly as in Splink
 (reference 03_link_datasets.ipynb:1266-1352). m/u land in the plan as
 literal CASE arms — a broadcast-free constant lookup inside codegen.
+
+One emitter, :func:`match_weight_sql` (per comparison
+:func:`log2_bayes_factor_sql`), writes the weight for both SQL dialects of
+``operators/gamma.py``: :func:`score_pairs` runs its Spark dialect, the
+DuckDB correctness oracles its DuckDB dialect. The dialect switches only
+column quoting and float literal binding (the weights read no
+Jaro-Winkler); the arm order and the double constants (shortest
+round-trip ``repr`` of ``log2(m/u)``) are the same, so engine and oracle
+agree bit-for-bit before any rounding.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gamma import Comparison, add_gammas
+from .gamma import (
+    SPARK,
+    Comparison,
+    ComparisonLevel,
+    Dialect,
+    add_gammas,
+    case_sql,
+)
 
 
 @dataclass
@@ -52,7 +68,6 @@ class LinkageModel:
                             "kind": lv.kind,
                             "threshold": lv.threshold,
                             "band": lv.band,
-                            **({"sql": lv.sql} if lv.sql else {}),
                         }
                         for lv in c.levels
                     ],
@@ -67,12 +82,8 @@ class LinkageModel:
     def from_dict(cls, d: dict) -> "LinkageModel":
         """K10 load path: rebuild a trained model from ``to_dict`` output
         (the reference round-trips Splink settings via pickle and re-uses
-        them per pass, 03_link_datasets.ipynb:1750-1774). Custom levels
-        restore their SQL template; a Column expr cannot be serialized, so
-        a loaded custom level supports SQL emission but must be re-armed
-        with ``expr`` before Spark compilation."""
-        from .gamma import Comparison, ComparisonLevel
-
+        them per pass, 03_link_datasets.ipynb:1750-1774). A malformed
+        level list raises ``ValueError`` (see :class:`Comparison`)."""
         comps = [
             Comparison(
                 cd["col"],
@@ -81,7 +92,6 @@ class LinkageModel:
                         kind=ld["kind"],
                         threshold=ld.get("threshold"),
                         band=ld.get("band"),
-                        sql=ld.get("sql"),
                     )
                     for ld in cd["levels"]
                 ],
@@ -121,90 +131,56 @@ class LinkageModel:
         )
 
 
-def _log2_bayes_factor(c: Comparison) -> Column:
-    """CASE over gamma values → log2(m/u) literal; 0.0 for gamma = -1."""
-    g = F.col(c.gamma_col)
-    expr = F.when(g == -1, F.lit(0.0))
-    for gamma in range(len(c.m)):
-        m, u = c.m[gamma], c.u[gamma]
-        if u <= 0 or m <= 0:
-            raise ValueError(f"m/u must be positive for {c.col} gamma={gamma}")
-        expr = expr.when(g == gamma, F.lit(math.log2(m / u)))
-    return expr.otherwise(F.lit(0.0))
-
-
-def log2_bayes_factor_sql(c: Comparison) -> str:
-    """DuckDB SQL mirror of ``_log2_bayes_factor`` — emits the *same* double
-    constants (shortest round-trip repr) the Spark plan uses, so oracle and
-    engine agree bit-for-bit before any rounding."""
-    arms = [f"WHEN {c.gamma_col} = -1 THEN 0.0"]
-    for gamma in range(len(c.m)):
-        const = math.log2(c.m[gamma] / c.u[gamma])
-        arms.append(f"WHEN {c.gamma_col} = {gamma} THEN {const!r}")
-    return "CASE " + " ".join(arms) + " ELSE 0.0 END"
-
-
-def match_weight_sql(model: "LinkageModel") -> str:
-    """SQL expression for match_weight over gamma_* columns."""
-    parts = [repr(math.log2(model.prior_odds()))]
-    parts += [f"({log2_bayes_factor_sql(c)})" for c in model.comparisons]
-    return " + ".join(parts)
-
-
-def _log2_bayes_factor_spark_sql(c: Comparison) -> str:
-    """Spark-SQL mirror of :func:`_log2_bayes_factor` (r16 construct
-    batching — see ``Comparison.compile_spark_sql``): the same CASE with
-    the same left-to-right arm order and the same double constants,
-    bound via CAST('<repr>' AS DOUBLE) so each literal is the identical
-    IEEE double the Column form's ``F.lit`` bound (bare SQL float
-    literals parse as DECIMAL). Raises like the Column form on
-    non-positive m/u."""
-    arms = ["WHEN `" + c.gamma_col + "` = -1 THEN CAST(0.0 AS DOUBLE)"]
-    for gamma in range(len(c.m)):
-        m, u = c.m[gamma], c.u[gamma]
-        if u <= 0 or m <= 0:
-            raise ValueError(f"m/u must be positive for {c.col} gamma={gamma}")
-        const = math.log2(m / u)
-        arms.append(
-            f"WHEN `{c.gamma_col}` = {gamma} THEN CAST('{const!r}' AS DOUBLE)"
+def log2_bayes_factor_sql(c: Comparison, dialect: Dialect) -> str:
+    """CASE over gamma values → log2(m/u) literal; 0.0 for gamma = -1.
+    Raises ``ValueError`` when m or u does not hold one positive value
+    per non-null gamma level (a missing gamma would fall to the 0.0 arm)."""
+    n = c.n_gamma_levels()
+    if len(c.m) != n or len(c.u) != n:
+        raise ValueError(
+            f"{c.col}: m and u need {n} values (one per non-null level),"
+            f" got {len(c.m)} and {len(c.u)}"
         )
-    return "CASE " + " ".join(arms) + " ELSE CAST(0.0 AS DOUBLE) END"
+    g = dialect.col(c.gamma_col)
+    arms = [(f"{g} = -1", dialect.zero)]
+    for gamma, (m, u) in enumerate(zip(c.m, c.u)):
+        if u <= 0 or m <= 0:
+            raise ValueError(f"m/u must be positive for {c.col} gamma={gamma}")
+        arms.append((f"{g} = {gamma}", dialect.num(math.log2(m / u))))
+    return case_sql(arms, dialect.zero)
+
+
+def match_weight_sql(model: LinkageModel, dialect: Dialect) -> str:
+    """The match weight over ``gamma_*`` columns: the prior's log2 odds
+    plus each comparison's CASE, added left to right."""
+    return " + ".join(
+        [dialect.num(math.log2(model.prior_odds()))]
+        + [f"({log2_bayes_factor_sql(c, dialect)})" for c in model.comparisons]
+    )
 
 
 def score_pairs(
     pairs: DataFrame,
     model: LinkageModel,
     threshold_match_probability: float | None = None,
-    compute_gammas: bool = True,
-    jw_strategy: str = "inline",
 ) -> DataFrame:
     """K4/K7: gamma evaluation + FS arithmetic + optional probability filter.
 
     One projection for gammas, one for the weight sum — Catalyst collapses
     them into a single WholeStageCodegen stage over the blocked join output.
-    ``jw_strategy`` is forwarded to :func:`add_gammas` (see its docstring).
+    Each is ONE ``selectExpr`` string (a gateway call per projection, not
+    one per CASE node).
     """
+    weight_sql = match_weight_sql(model, SPARK)
     # re-scoring a scored frame replaces what this call emits (the
     # selectExpr('*', ...) projections would otherwise add a second,
-    # ambiguous column of each name)
+    # ambiguous column of each name); reading the schema costs fewer
+    # gateway calls than a drop, whose name list crosses one name a call
     emitted = ["match_weight", "match_probability"]
-    if compute_gammas:
-        emitted += [c.gamma_col for c in model.comparisons]
-    pairs = pairs.drop(*emitted)
-    df = (
-        add_gammas(pairs, model.comparisons, jw_strategy=jw_strategy)
-        if compute_gammas
-        else pairs
-    )
-    # the FS sum as ONE selectExpr string (r16 construct batching): same
-    # left-associative addition order, same double constants (CAST of
-    # the shortest round-trip repr) as the former per-comparison Column
-    # chain, so match_weight is bit-identical — pinned by the oracle's
-    # value hash and the local-cluster link-identity rung
-    weight_sql = " + ".join(
-        [f"CAST('{math.log2(model.prior_odds())!r}' AS DOUBLE)"]
-        + [f"({_log2_bayes_factor_spark_sql(c)})" for c in model.comparisons]
-    )
+    emitted += [c.gamma_col for c in model.comparisons]
+    if not set(emitted).isdisjoint(pairs.columns):
+        pairs = pairs.drop(*emitted)
+    df = add_gammas(pairs, model.comparisons)
     df = df.selectExpr("*", f"{weight_sql} AS match_weight").selectExpr(
         "*",
         "CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"

@@ -24,6 +24,10 @@ hash join plus one CASE arm: the pair stream is never shuffled. For a
 truly high-cardinality column (tf table over broadcast threshold) the
 same join degrades to a shuffled hash join on the value key, which is
 exactly what Splink's SQL does on any backend.
+
+The adjustment CASE has one emitter, :func:`tf_adjustment_sql`, in both
+SQL dialects of ``operators/gamma.py``: :func:`add_tf_adjustment` runs its
+Spark dialect, the DuckDB oracle its DuckDB dialect.
 """
 
 from __future__ import annotations
@@ -33,7 +37,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gamma import Comparison
+from .gamma import SPARK, Comparison, Dialect, case_sql
 
 
 def term_frequency_table(df: DataFrame, col: str, tf_col: str = "tf") -> DataFrame:
@@ -54,10 +58,9 @@ def term_frequency_table(df: DataFrame, col: str, tf_col: str = "tf") -> DataFra
 
 
 def _exact_gamma(c: Comparison) -> int:
-    non_null = [lv for lv in c.levels if lv.kind != "null"]
-    for i, lv in enumerate(non_null):
+    for gamma, lv in c.gamma_levels():
         if lv.kind == "exact":
-            return len(non_null) - 1 - i  # first listed = highest gamma
+            return gamma
     raise ValueError(f"comparison {c.col} has no exact level to TF-adjust")
 
 
@@ -66,7 +69,6 @@ def add_tf_adjustment(
     c: Comparison,
     tf_df: DataFrame,
     weight: float = 1.0,
-    left_suffix: str = "_l",
 ) -> DataFrame:
     """Add ``tf_adjustment`` and ``match_weight_tf`` to scored pairs.
 
@@ -75,35 +77,38 @@ def add_tf_adjustment(
     applies the formula above only on that gamma; every other level's
     adjustment is 0.
     """
+    adj = tf_adjustment_sql(c, SPARK, weight=weight, tf_col="__tf")
+    val = f"{c.col}_l"
+    tf = tf_df.select(F.col(c.col).alias(val), F.col("tf").alias("__tf"))
+    out = scored.join(F.broadcast(tf), on=val, how="left")
+    return (
+        out.selectExpr("*", f"{adj} AS tf_adjustment")
+        .selectExpr("*", "match_weight + tf_adjustment AS match_weight_tf")
+        .selectExpr(
+            "*",
+            "CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE)"
+            " + power(CAST(2.0 AS DOUBLE), -match_weight_tf))"
+            " AS match_probability_tf",
+        )
+        .drop("__tf")
+    )
+
+
+def tf_adjustment_sql(
+    c: Comparison, dialect: Dialect, weight: float = 1.0, tf_col: str = "tf"
+) -> str:
+    """The adjustment CASE over the exact-match gamma and the joined TF
+    column ``tf_col`` (the caller joins the TF table). Raises
+    ``ValueError`` when the exact level's u is not positive."""
     g = _exact_gamma(c)
     u_exact = c.u[g]
     if u_exact <= 0:
         raise ValueError(f"u[{g}] must be positive for {c.col}")
-    val = f"{c.col}{left_suffix}"
-    tf = tf_df.select(F.col(c.col).alias(val), F.col("tf").alias("__tf"))
-    out = scored.join(F.broadcast(tf), on=val, how="left")
-    adj = F.when(
-        (F.col(c.gamma_col) == g) & F.col("__tf").isNotNull(),
-        F.lit(weight) * (F.lit(math.log2(u_exact)) - F.log2(F.col("__tf"))),
-    ).otherwise(F.lit(0.0))
-    out = out.withColumn("tf_adjustment", adj).withColumn(
-        "match_weight_tf", F.col("match_weight") + F.col("tf_adjustment")
+    tf = dialect.col(tf_col)
+    value = (
+        f"{dialect.num(weight)} * ({dialect.num(math.log2(u_exact))} - log2({tf}))"
     )
-    return out.withColumn(
-        "match_probability_tf",
-        F.lit(1.0) / (F.lit(1.0) + F.pow(F.lit(2.0), -F.col("match_weight_tf"))),
-    ).drop("__tf")
-
-
-def tf_adjustment_sql(
-    c: Comparison, weight: float = 1.0, tf_expr: str = "tf"
-) -> str:
-    """DuckDB mirror of the adjustment CASE (same literal constants); the
-    caller joins the TF table and passes its column as ``tf_expr``."""
-    g = _exact_gamma(c)
-    u_exact = c.u[g]
-    return (
-        f"CASE WHEN {c.gamma_col} = {g} AND {tf_expr} IS NOT NULL "
-        f"THEN {weight!r} * ({math.log2(u_exact)!r} - log2({tf_expr})) "
-        f"ELSE 0.0 END"
+    return case_sql(
+        [(f"{dialect.col(c.gamma_col)} = {g} AND {tf} IS NOT NULL", value)],
+        dialect.zero,
     )

@@ -192,6 +192,27 @@ LINKS_FRAME_TEMPLATE: tuple[tuple[str, str], ...] = (
     ("pass_name", "string"),
 )
 
+#: the confirmed-PIK accumulator's schema (``confirm_piks`` folds into it)
+CONFIRMED_FRAME_TEMPLATE: tuple[tuple[str, str], ...] = (
+    ("record_id_raw_input_file", "string"),
+    ("record_id_census_2030", "string"),
+    ("record_id_reference_file", "string"),
+    ("pik", "string"),
+    ("module_name", "string"),
+    ("pass_name", "string"),
+    ("match_probability", "double"),
+)
+
+
+def _empty_frame(
+    spark: SparkSession, template: tuple[tuple[str, str], ...]
+) -> DataFrame:
+    """An empty frame of ``template``'s columns that optimizes to an empty
+    LocalRelation, so a Union over it drops the branch (an empty
+    ``createDataFrame`` plans as a LogicalRDD the optimizer cannot prune)."""
+    cols = ", ".join(f"CAST(NULL AS {t}) AS {sql_ident(n)}" for n, t in template)
+    return spark.sql(f"SELECT {cols} WHERE false")
+
 
 def estimate_checkpoint_row_bytes(fields: "object") -> int:
     """Estimated DESERIALIZED JVM bytes of one checkpointed row — the
@@ -387,10 +408,6 @@ class PersonLinkageCascade:
                      matching columns
     dates_of_death:  (pik, date_of_death DATE) — deceased links dropped at
                      confirm (reference 03:2146-2169)
-    jw_strategy:     how Jaro-Winkler materializes in scoring (see
-                     add_gammas). 'auto' uses the native JVM UDF when the
-                     sparklinkage jar is shipped, else the Arrow pandas
-                     UDF.
     auto_pin:        derive a ``num_partitions`` pin for passes that
                      leave it None (default True): the K8 pair estimate
                      (already computed when ``collect_stats``) feeds
@@ -452,7 +469,6 @@ class PersonLinkageCascade:
         model: LinkageModel,
         dates_of_death: DataFrame | None = None,
         collect_stats: bool = True,
-        jw_strategy: str = "auto",
         checkpoint: str = "local",
         auto_pin: bool = True,
         checkpoint_storage_level: StorageLevel | None = None,
@@ -461,7 +477,6 @@ class PersonLinkageCascade:
             raise ValueError(
                 f"checkpoint must be one of {CHECKPOINT_MODES}, got {checkpoint!r}"
             )
-        self.jw_strategy = jw_strategy
         self.checkpoint = checkpoint
         self.checkpoint_storage_level = checkpoint_storage_level
         self._ckpt_level: StorageLevel | None = None
@@ -487,12 +502,7 @@ class PersonLinkageCascade:
         self.stats: list[PassStats] = []
         self.confirm_stats: list[ConfirmStats] = []
         # accumulator: ≤1 row per record_id_raw_input_file after each module
-        self.confirmed_piks: DataFrame = spark.createDataFrame(
-            [],
-            "record_id_raw_input_file string, record_id_census_2030 string, "
-            "record_id_reference_file string, pik string, module_name string, "
-            "pass_name string, match_probability double",
-        )
+        self.confirmed_piks: DataFrame = _empty_frame(spark, CONFIRMED_FRAME_TEMPLATE)
         self._module: ModuleConfig | None = None
         self._census_to_match: DataFrame | None = None
         self._provisional_links: DataFrame | None = None
@@ -621,12 +631,7 @@ class PersonLinkageCascade:
                 on="record_id_raw_input_file",
             )
         )
-        self._provisional_links = self.spark.createDataFrame(
-            [],
-            "record_id_census_2030 string, record_id_reference_file string, "
-            "record_id_raw_input_file string, match_weight double, "
-            "match_probability double, module_name string, pass_name string",
-        )
+        self._provisional_links = _empty_frame(self.spark, LINKS_FRAME_TEMPLATE)
 
     def _block_on(self, pass_cfg: PassConfig) -> tuple[str, ...]:
         return tuple(self._module.cut_columns + pass_cfg.blocking_columns)
@@ -689,7 +694,6 @@ class PersonLinkageCascade:
             pairs.selectExpr(*self._pair_columns(pass_model, block_on)),
             pass_model,
             threshold_match_probability=pass_cfg.probability_threshold,
-            jw_strategy=self.jw_strategy,
         )
         return scored.selectExpr(*self._links_projection(_sql_string(pass_cfg.name)))
 
@@ -955,11 +959,7 @@ class PersonLinkageCascade:
                 f"{_sql_string(pass_cfg.name)} AS pass_name",
             )
         )
-        scored = score_pairs(
-            functools.reduce(DataFrame.union, g.branches),
-            model,
-            jw_strategy=self.jw_strategy,
-        )
+        scored = score_pairs(functools.reduce(DataFrame.union, g.branches), model)
         if len(g.branches) == 1:
             # a single pass: its links are the pairs over its threshold,
             # and the group costs what the pass alone costs

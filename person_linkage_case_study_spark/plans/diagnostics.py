@@ -25,8 +25,12 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.gamma import Comparison
-from ..operators.scoring import LinkageModel
+from ..operators.gamma import SPARK, Comparison
+from ..operators.scoring import (
+    LinkageModel,
+    log2_bayes_factor_sql,
+    match_weight_sql,
+)
 
 _MU_SCHEMA = "comparison string, gamma int, m double, u double"
 
@@ -144,23 +148,19 @@ def pair_drilldown_table(
     in-plan column arithmetic over the scored table (model constants as
     literals, same emission as ``score_pairs``), so it scales with the
     pair stream and is spot-checkable: prior + Σ contributions =
-    match_weight."""
-    from ..operators.scoring import _log2_bayes_factor
-
+    match_weight. One ``selectExpr``: the contributions and the total are
+    the scoring emitter's Spark-dialect CASEs."""
     prior = float(round(math.log2(model.prior_odds()), 6))
-    contribs = [
-        F.round(_log2_bayes_factor(c), 6).alias(f"log2_bf_{c.col}")
-        for c in model.comparisons
-    ]
-    total = F.lit(math.log2(model.prior_odds()))
-    for c in model.comparisons:
-        total = total + _log2_bayes_factor(c)
-    return scored_pairs.select(
-        *id_cols,
-        *[F.col(c.gamma_col) for c in model.comparisons],
-        F.lit(prior).alias("prior_weight"),
-        *contribs,
-        F.round(total, 6).alias("total_match_weight"),
+    return scored_pairs.selectExpr(
+        *[SPARK.col(c) for c in id_cols],
+        *[SPARK.col(c.gamma_col) for c in model.comparisons],
+        f"{SPARK.num(prior)} AS prior_weight",
+        *[
+            f"round({log2_bayes_factor_sql(c, SPARK)}, 6)"
+            f" AS {SPARK.col('log2_bf_' + c.col)}"
+            for c in model.comparisons
+        ],
+        f"round({match_weight_sql(model, SPARK)}, 6) AS total_match_weight",
     )
 
 

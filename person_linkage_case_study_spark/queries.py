@@ -23,10 +23,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.similarity import jaro_winkler_udf
+from .functions.similarity import jaro_winkler_sql_function
 from .operators.blocking import blocked_pairs
 from .operators.dedup import keep_best, max_per_group_with_ties
-from .operators.gamma import banded_comparison, jw_comparison
+from .operators.gamma import DUCKDB, banded_comparison, jw_comparison
 from .operators.joins import anti_join, semi_join, validated_one_to_one_join
 from .operators.scoring import LinkageModel, match_weight_sql, score_pairs
 
@@ -598,14 +598,9 @@ def jw_similar_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = blocked_pairs(
         p, p, block_on=["p_brand"], num_partitions=spark.sparkContext.defaultParallelism
     ).filter(F.col("p_partkey_l") < F.col("p_partkey_r"))
-    from .functions.similarity import JVM_JW_NAME, ensure_jvm_jw
-
-    if ensure_jvm_jw(spark):
-        jw = F.call_udf(JVM_JW_NAME, F.col("p_name_l"), F.col("p_name_r"))
-    else:
-        jw = jaro_winkler_udf(F.col("p_name_l"), F.col("p_name_r"))
+    jw = jaro_winkler_sql_function(spark)
     return (
-        pairs.withColumn("__jw", jw)
+        pairs.selectExpr("*", f"{jw}(p_name_l, p_name_r) AS __jw")
         .filter(F.col("__jw") >= 0.8)
         .select(
             F.col("p_partkey_l").alias("partkey_l"),
@@ -618,8 +613,8 @@ def jw_similar_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # K2/K3/K4/K7 — the full probabilistic-linkage slice: blocked pairs →
 # gamma CASE levels → Fellegi-Sunter weights → probability. The oracle SQL
-# is generated from the SAME model object (gamma.compile_sql /
-# scoring.match_weight_sql), so engine and oracle share every constant.
+# is generated from the SAME model object (gamma's and scoring's one
+# emitter, DuckDB dialect), so engine and oracle share every constant.
 # ---------------------------------------------------------------------------
 
 
@@ -637,9 +632,9 @@ def demo_linkage_model() -> LinkageModel:
 
 def _fs_oracle() -> str:
     model = demo_linkage_model()
-    gname = model.comparisons[0].compile_sql()
-    gbal = model.comparisons[1].compile_sql()
-    weight = match_weight_sql(model)
+    gname = model.comparisons[0].gamma_sql(DUCKDB)
+    gbal = model.comparisons[1].gamma_sql(DUCKDB)
+    weight = match_weight_sql(model, DUCKDB)
     return f"""
     WITH l AS (
         SELECT c_custkey AS custkey, c_nationkey AS nationkey,
@@ -684,7 +679,7 @@ def fs_customer_supplier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = blocked_pairs(
         c, s, block_on=["nationkey"], num_partitions=spark.sparkContext.defaultParallelism
     )
-    scored = score_pairs(pairs, model, jw_strategy="auto")
+    scored = score_pairs(pairs, model)
     return scored.select(
         F.col("custkey_l").alias("custkey"),
         F.col("suppkey_r").alias("suppkey"),
@@ -4095,11 +4090,11 @@ def _a11_oracle() -> str:
     engines converge to the same fixed point to ~tol; outputs rounded to
     6dp (vs tol 1e-9) so libm ulp differences in ln/exp cannot flip the
     hash. The gamma CASE is emitted from the same Comparison object the
-    Spark path compiles (operators/gamma.py:compile_sql)."""
+    Spark path compiles (operators/gamma.py ``gamma_sql``)."""
     from .operators.gamma import banded_comparison
 
     comp = banded_comparison("acctbal", band=500)
-    gamma_case = comp.compile_sql()  # acctbal_l / acctbal_r
+    gamma_case = comp.gamma_sql(DUCKDB)  # acctbal_l / acctbal_r
     u0, u1, u2 = (repr(u) for u in _A11_U)
     lam = repr(_A11_LAMBDA)
     return f"""
@@ -4176,7 +4171,7 @@ def a11_em_training(spark: SparkSession, sf_dir: str) -> DataFrame:
 # End-to-end mini cascade on synthesized person records, oracle-checked:
 # the single-pass cascade is expressible as one DuckDB CTE pipeline because
 # gamma CASEs and the FS weight expression are EMITTED FROM THE SAME MODEL
-# OBJECT the Spark plan compiles from (operators/gamma.py compile_sql,
+# OBJECT the Spark plan compiles from (operators/gamma.py gamma_sql,
 # operators/scoring.py match_weight_sql) — engine and oracle cannot drift.
 # Person records are derived deterministically from customer data.
 def _cascade_mini_model() -> LinkageModel:
@@ -4194,9 +4189,9 @@ def _cascade_mini_oracle() -> str:
     # Bayes factor 1.0 (ModuleConfig default)
     model = _cascade_mini_model().subset(["first_name_15", "last_name_12"])
     model.bayes_factor_cut_columns = 1.0
-    g_name = model.comparisons[0].compile_sql()
-    g_seg = model.comparisons[1].compile_sql()
-    weight = match_weight_sql(model)
+    g_name = model.comparisons[0].gamma_sql(DUCKDB)
+    g_seg = model.comparisons[1].gamma_sql(DUCKDB)
+    weight = match_weight_sql(model, DUCKDB)
     return f"""
     WITH base AS (
         SELECT CAST(c_custkey AS VARCHAR) AS record_id_raw_input_file,
@@ -4518,10 +4513,10 @@ def _tf_oracle() -> str:
     from .operators.tf import tf_adjustment_sql
 
     model = _tf_model()
-    gb = model.comparisons[0].compile_sql()
-    gp = model.comparisons[1].compile_sql()
-    weight = match_weight_sql(model)
-    adj = tf_adjustment_sql(model.comparisons[0], weight=1.0, tf_expr="tf")
+    gb = model.comparisons[0].gamma_sql(DUCKDB)
+    gp = model.comparisons[1].gamma_sql(DUCKDB)
+    weight = match_weight_sql(model, DUCKDB)
+    adj = tf_adjustment_sql(model.comparisons[0], DUCKDB, weight=1.0, tf_col="tf")
     return f"""
     WITH p AS (
         SELECT p_partkey AS partkey, p_size AS size, p_brand AS brand,

@@ -5,6 +5,8 @@ variables), geosearch geokey pass + namesearch, deceased-link dropping,
 multi-PIK conflict dropping, ≤1-PIK invariant, final 1:1 attach.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from person_linkage_case_study_spark.operators.gamma import (
 )
 from person_linkage_case_study_spark.operators.scoring import LinkageModel
 from person_linkage_case_study_spark.plans.cascade import (
+    CONFIRMED_FRAME_TEMPLATE,
     LINKS_FRAME_TEMPLATE,
     CascadeConfig,
     ModuleConfig,
@@ -1164,6 +1167,46 @@ def test_pass_group_plan_shape(group_run):
     (pushed into every branch it made constraint propagation blow up)."""
     _, after = group_run
     assert pass_group_plan_problems(after[2]["plan"], branches=3) == []
+
+
+def _logical_rdd_columns(tree: str) -> list[list[str]]:
+    """The column names of every LogicalRDD in a plan's ``treeString``."""
+    out = []
+    for line in tree.splitlines():
+        text = line.lstrip(" :+-")
+        if text.startswith("LogicalRDD ["):
+            cols = text[len("LogicalRDD ["):text.index("]")].split(", ")
+            out.append([re.sub(r"#\d+L?$", "", c) for c in cols])
+    return out
+
+
+def test_empty_seeds_prune_from_plans(spark, group_inputs, group_run):
+    """The module's provisional-links seed and the confirmed-PIK seed
+    optimize to empty LocalRelations, so neither a pass group's plan nor
+    the confirm step's keeps a dead Union branch: no LogicalRDD over
+    either seed's schema (checkpoints are off for the confirm plan, so
+    its only LogicalRDDs are the fixture's input frames)."""
+    links = [n for n, _ in LINKS_FRAME_TEMPLATE]
+    confirmed = [n for n, _ in CONFIRMED_FRAME_TEMPLATE]
+    _, after = group_run
+    for a in after[:3]:  # the module's first group, built on the seed
+        assert links not in _logical_rdd_columns(a["plan"])
+    census, geobase = group_inputs
+    cascade = PersonLinkageCascade(
+        spark, census, {"geobase_reference_file": geobase}, make_model(),
+        collect_stats=False, checkpoint="off",
+    )
+    cascade.start_module(GROUP_MODULE)
+    for p in GROUP_MODULE.passes:
+        cascade.run_matching_pass(p)
+    cascade.confirm_piks()
+    rdds = _logical_rdd_columns(
+        cascade.confirmed_piks._jdf.queryExecution().optimizedPlan().treeString()
+    )
+    cascade.release()
+    assert rdds
+    assert links not in rdds
+    assert confirmed not in rdds
 
 
 def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,

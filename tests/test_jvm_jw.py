@@ -32,8 +32,15 @@ def test_jvm_jw_matches_python(spark):
         ), (r["a"], r["b"])
 
 
-def test_auto_strategy_gamma_parity(spark):
-    """add_gammas(auto) must equal add_gammas(inline) row-for-row."""
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pandas_fallback_gamma_parity(spark, monkeypatch):
+    """On a session without the jar (``ensure_jvm_jw`` False) add_gammas
+    runs the Arrow pandas UDF, registered under a SQL name, and gives the
+    JVM path's gammas row for row."""
+    from person_linkage_case_study_spark.functions import similarity
     from person_linkage_case_study_spark.operators.gamma import (
         add_gammas,
         jw_comparison,
@@ -44,6 +51,64 @@ def test_auto_strategy_gamma_parity(spark):
         "name_l string, name_r string",
     )
     comp = jw_comparison("name", thresholds=(0.9, 0.7))
-    a = [r["gamma_name"] for r in add_gammas(pairs, [comp], jw_strategy="auto").collect()]
-    b = [r["gamma_name"] for r in add_gammas(pairs, [comp], jw_strategy="inline").collect()]
-    assert sorted(a, key=str) == sorted(b, key=str)
+    session_path = add_gammas(pairs, [comp])
+    monkeypatch.setattr(similarity, "ensure_jvm_jw", lambda spark: False)
+    fallback = add_gammas(pairs, [comp])
+    assert "ArrowEvalPython" in _plan(fallback)
+    a = [r["gamma_name"] for r in session_path.collect()]
+    b = [r["gamma_name"] for r in fallback.collect()]
+    assert a == b == [1, 3, -1, 0]
+
+
+def test_ensure_jvm_jw_asks_the_session_catalog(spark):
+    """Registration is the session's own: a new session registers the
+    function and resolves it, and a function dropped from a session is
+    registered again rather than remembered as present."""
+    if not ensure_jvm_jw(spark):
+        pytest.skip("sparklinkage.jar not on classpath (run jvm/build.sh)")
+    other = spark.newSession()
+    assert ensure_jvm_jw(other)
+    assert other.sql(f"SELECT {JVM_JW_NAME}('MARTHA', 'MARTHA')").first()[0] == 1.0
+    other.sql(f"DROP TEMPORARY FUNCTION {JVM_JW_NAME}")
+    assert not other.catalog.functionExists(JVM_JW_NAME)
+    assert ensure_jvm_jw(other)
+    assert other.sql(f"SELECT {JVM_JW_NAME}('AB', 'AB')").first()[0] == 1.0
+
+
+def test_training_and_scoring_plan_no_python_udf(spark, monkeypatch):
+    """With the jar loaded, u/m training and scoring take the same JVM
+    Jaro-Winkler: neither ``estimate_u`` nor ``gamma_pattern_counts`` (EM)
+    nor ``score_pairs`` plans an ArrowEvalPython node."""
+    if not ensure_jvm_jw(spark):
+        pytest.skip("sparklinkage.jar not on classpath (run jvm/build.sh)")
+    from person_linkage_case_study_spark.operators import estimation
+    from person_linkage_case_study_spark.operators.gamma import jw_comparison
+    from person_linkage_case_study_spark.operators.scoring import (
+        LinkageModel,
+        score_pairs,
+    )
+
+    seen = []
+    real = estimation.add_gammas
+
+    def recording(pairs, comparisons):
+        out = real(pairs, comparisons)
+        seen.append(out)
+        return out
+
+    monkeypatch.setattr(estimation, "add_gammas", recording)
+    people = spark.createDataFrame(
+        [("SMITH", "1980"), ("SMYTH", "1980"), ("JONES", "1975")],
+        "name string, year string",
+    )
+    comp = jw_comparison("name", thresholds=(0.9,))
+    estimation.estimate_u(people, people, [comp], sample_fractions=(1.0, 1.0))
+    model = LinkageModel([comp], lambda_prior=0.01)
+    estimation.estimate_m_em(people, people, ["year"], model)
+    assert len(seen) == 2
+    pairs = spark.createDataFrame(
+        [("SMITH", "SMYTH")], "name_l string, name_r string"
+    )
+    for df in seen + [score_pairs(pairs, model)]:
+        assert "ArrowEvalPython" not in _plan(df)
+        assert JVM_JW_NAME in _plan(df)

@@ -3,15 +3,17 @@
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from person_linkage_case_study_spark.operators.gamma import (
+    DUCKDB,
+    SPARK,
     add_gammas,
     banded_comparison,
     jw_comparison,
 )
 from person_linkage_case_study_spark.operators.scoring import (
     LinkageModel,
+    match_weight_sql,
     score_pairs,
 )
 
@@ -121,68 +123,117 @@ def test_bayes_factor_cut_columns():
     assert model.prior_odds() == pytest.approx((0.01 / 0.99) * 1000.0)
 
 
-def test_spark_sql_compilers_match_column_form(pairs, spark):
-    """r16 construct-batching pin: the Spark-SQL string compilers
-    (Comparison.compile_spark_sql, _log2_bayes_factor_spark_sql) must
-    produce BIT-IDENTICAL gammas and match weights to the Column-form
-    originals they replaced on the hot path (compile,
-    _log2_bayes_factor) — same CASE arm order, same IEEE double
-    literals via CAST('<repr>' AS DOUBLE)."""
-    from person_linkage_case_study_spark.operators.scoring import (
-        _log2_bayes_factor,
-        _log2_bayes_factor_spark_sql,
-    )
+def _duckdb_scores(model, rows):
+    """(gammas..., match_weight) per row, evaluated by DuckDB over the
+    DuckDB-dialect SQL of ``model`` (the correctness oracles' path)."""
+    import duckdb
 
-    from person_linkage_case_study_spark.functions.similarity import (
-        jaro_winkler_udf,
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE pairs (name_l VARCHAR, name_r VARCHAR,"
+        " year_l INTEGER, year_r INTEGER)"
     )
+    con.executemany("INSERT INTO pairs VALUES (?, ?, ?, ?)", rows)
+    gammas = ", ".join(
+        f"{c.gamma_sql(DUCKDB)} AS {c.gamma_col}" for c in model.comparisons
+    )
+    return con.execute(
+        f"SELECT *, {match_weight_sql(model, DUCKDB)} AS w"
+        f" FROM (SELECT {gammas} FROM pairs)"
+    ).fetchall()
 
+
+PAIR_ROWS = [
+    ("MARTHA", "MARTHA", 1980, 1980),
+    ("MARTHA", "MARHTA", 1980, 1982),
+    ("MARTHA", "XAVIER", 1980, 1990),
+    (None, "MARTHA", None, 1980),
+]
+
+
+def test_spark_dialect_matches_duckdb_dialect(pairs, spark):
+    """The emitter's two dialects agree on the same model and pairs:
+    Spark evaluating the Spark-dialect SQL (``score_pairs``) and DuckDB
+    evaluating the DuckDB-dialect SQL give the same gammas, and the same
+    match weights (DuckDB reads the weight literals as DECIMAL, so the
+    weights agree to 1e-12 and exactly after the oracles' 6-dp
+    rounding)."""
+    assert [tuple(r) for r in pairs.collect()] == PAIR_ROWS
     model = make_model()
-    df = add_gammas(pairs, model.comparisons)  # SQL path (all expressible)
+    spark_rows = [
+        (r["gamma_name"], r["gamma_year"], r["match_weight"])
+        for r in score_pairs(pairs, model).collect()
+    ]
+    duck_rows = _duckdb_scores(model, PAIR_ROWS)
+    assert [r[:2] for r in spark_rows] == [r[:2] for r in duck_rows]
+    assert [r[:2] for r in spark_rows] == [(3, 2), (2, 1), (0, 0), (-1, -1)]
+    for (*_, w_spark), (*_, w_duck) in zip(spark_rows, duck_rows):
+        assert w_spark == pytest.approx(float(w_duck), abs=1e-12)
+        assert round(w_spark, 6) == round(float(w_duck), 6)
 
-    # column-form gammas computed explicitly via compile() over the same
-    # pre-materialized JW column
-    jwc = model.comparisons[0]
-    jw_needed = pairs.select(
-        "*",
-        jaro_winkler_udf(F.col("name_l"), F.col("name_r")).alias(jwc.jw_col),
-    )
-    manual = jw_needed.select(
-        "*",
-        *[
-            c.compile(jw_col=c.jw_col if c.needs_jw() else None).alias(c.gamma_col)
-            for c in model.comparisons
-        ],
-    ).drop(jwc.jw_col)
-    got_sql = [(r["gamma_name"], r["gamma_year"]) for r in df.collect()]
-    got_col = [(r["gamma_name"], r["gamma_year"]) for r in manual.collect()]
-    assert got_sql == got_col
-
-    # weights: SQL CASE sum vs Column when-chain sum, bit-identical
-    import math as _m
-
-    weight_col = F.lit(_m.log2(model.prior_odds()))
-    for c in model.comparisons:
-        weight_col = weight_col + _log2_bayes_factor(c)
-    via_col = [r["w"] for r in manual.withColumn("w", weight_col).collect()]
-    weight_sql = " + ".join(
-        [f"CAST('{_m.log2(model.prior_odds())!r}' AS DOUBLE)"]
-        + [f"({_log2_bayes_factor_spark_sql(c)})" for c in model.comparisons]
-    )
-    via_sql = [r["w"] for r in manual.selectExpr("*", f"{weight_sql} AS w").collect()]
-    assert via_sql == via_col  # exact equality, not approx
-
-    # score_pairs end-to-end emits the same weights as the Column math
-    end = [r["match_weight"] for r in score_pairs(pairs, model).collect()]
-    assert end == via_col
-
-    # a float band binds as a DOUBLE like F.lit(2.5), not a DECIMAL; an
-    # int band stays a plain INT literal
+    # a float band binds as a DOUBLE in Spark (CAST, not a DECIMAL
+    # literal); an int band stays a plain INT literal; both dialects give
+    # the same gammas
     float_band = banded_comparison("year", band=2.5)
-    sql = float_band.compile_spark_sql()
+    sql = float_band.gamma_sql(SPARK)
     assert "<= CAST('2.5' AS DOUBLE)" in sql
-    assert "<= 5 THEN" in banded_comparison("year", band=5).compile_spark_sql()
-    via_sql = pairs.selectExpr("*", f"{sql} AS g")
-    via_col = pairs.select("*", float_band.compile().alias("g"))
-    assert [r["g"] for r in via_sql.collect()] == [r["g"] for r in via_col.collect()]
-    assert [r["g"] for r in via_col.collect()] == [2, 1, 0, -1]
+    assert "<= 2.5 THEN" in float_band.gamma_sql(DUCKDB)
+    assert "<= 5 THEN" in banded_comparison("year", band=5).gamma_sql(SPARK)
+    via_spark = [r["g"] for r in pairs.selectExpr(f"{sql} AS g").collect()]
+    float_band.m, float_band.u = [0.1, 0.2, 0.7], [0.7, 0.2, 0.1]
+    via_duck = [r[0] for r in _duckdb_scores(LinkageModel([float_band]), PAIR_ROWS)]
+    assert via_spark == via_duck == [2, 1, 0, -1]
+
+
+def _level(kind, **kw):
+    return {"kind": kind, "threshold": kw.get("threshold"), "band": kw.get("band")}
+
+
+def _model_dict(levels, m=None, u=None):
+    n = len([lv for lv in levels if lv["kind"] != "null"])
+    return {
+        "lambda_prior": 0.01,
+        "comparisons": [
+            {"col": "name", "levels": levels,
+             "m": m if m is not None else [0.5] * n,
+             "u": u if u is not None else [0.5] * n}
+        ],
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "custom_kind",
+        "unknown_kind",
+        "else_not_last",
+        "two_null_levels",
+        "jw_without_threshold",
+        "m_too_short",
+        "u_too_long",
+    ],
+)
+def test_malformed_models_rejected(pairs, case):
+    """A malformed model raises where it enters (``from_dict`` /
+    ``Comparison``, or ``score_pairs`` for m/u of the wrong length)
+    instead of scoring differently in the engine and the oracle."""
+    exact, null, else_ = _level("exact"), _level("null"), _level("else")
+    entry = {
+        "custom_kind": [null, {"kind": "custom", "threshold": None, "band": None,
+                               "sql": "abs({l} - {r}) <= 1"}, else_],
+        "unknown_kind": [null, _level("soundex"), else_],
+        "else_not_last": [null, else_, exact],
+        "two_null_levels": [null, exact, null, else_],
+        "jw_without_threshold": [null, exact, _level("jaro_winkler"), else_],
+    }
+    if case in entry:
+        with pytest.raises(ValueError):
+            LinkageModel.from_dict(_model_dict(entry[case]))
+        return
+    model = make_model()
+    if case == "m_too_short":
+        model.comparisons[1].m = model.comparisons[1].m[:2]
+    else:
+        model.comparisons[0].u = model.comparisons[0].u + [0.5]
+    with pytest.raises(ValueError):
+        score_pairs(pairs, model)
