@@ -25,6 +25,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class PairStats(NamedTuple):
@@ -289,8 +290,8 @@ def max_key_multiplicity(
 
 
 def estimate_pair_row_bytes(
-    left: DataFrame,
-    right: DataFrame,
+    left: DataFrame | StructType,
+    right: DataFrame | StructType,
     block_on: Sequence[str],
     *,
     floor: int = 64,
@@ -315,7 +316,7 @@ def estimate_pair_row_bytes(
     This is a partition-count heuristic, not an allocator: being ~2× off
     moves the pin by 2× inside a [32, 4096] clamp, which the measured
     brackets tolerate (SKEW_BENCH_r07-r09 spanned pins 64-679 at the
-    same wall)."""
+    same wall). Each side is a frame or its schema."""
     keys = set(block_on)
     total = 8  # UnsafeRow header / null bitmap word
     n_strings = {True: 0, False: 0}
@@ -323,7 +324,8 @@ def estimate_pair_row_bytes(
     # self-join pass left and right are the SAME object and an identity
     # check would drop the keys from both iterations (r10 advisor)
     for is_right, side in ((False, left), (True, right)):
-        for f in side.schema.fields:
+        schema = side if isinstance(side, StructType) else side.schema
+        for f in schema.fields:
             if is_right and f.name in keys:
                 continue  # keys emitted once (from the left side)
             name = f.dataType.typeName()

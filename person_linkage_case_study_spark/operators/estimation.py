@@ -65,10 +65,16 @@ def estimate_u(
     else:
         sl = left.sample(fraction=frac_l, seed=seed)
         sr = right.sample(fraction=frac_r, seed=seed + 1)
+    # a small input samples into one partition, and the cross product of
+    # two such samples (~max_pairs pairs, each gamma-compared) would run
+    # as ONE task: spread the left sample over the cores (after sampling,
+    # so the drawn rows do not change) and broadcast the right one, so the
+    # product streams the spread side
+    sl = sl.repartition(left.sparkSession.sparkContext.defaultParallelism)
 
     cols = [c.col for c in comparisons]
     pairs = sl.select(*[F.col(c).alias(c + "_l") for c in cols]).crossJoin(
-        sr.select(*[F.col(c).alias(c + "_r") for c in cols])
+        F.broadcast(sr.select(*[F.col(c).alias(c + "_r") for c in cols]))
     )
     with_gammas = add_gammas(pairs, comparisons)
     aggs = []

@@ -8,15 +8,17 @@ CASE and ``operators/tf.py`` the term-frequency adjustment CASE, all through
 :func:`case_sql`; the Spark plan and the DuckDB correctness oracle are
 emitted from the *same* model object, so they cannot drift apart.
 
-A :class:`Dialect` switches only three things:
+A :class:`Dialect` switches only two things:
 
 - column quoting: Spark backquotes identifiers, DuckDB takes them bare;
-- float literal binding: Spark binds ``CAST('<repr>' AS DOUBLE)`` (a bare
-  ``2.5`` parses as DECIMAL there), DuckDB the bare ``repr``; ints stay
-  plain in both;
 - the Jaro-Winkler operand: Spark reads the pre-materialised ``__jw_<col>``
   column (:func:`add_gammas` computes it once per pair, not once per
   level), DuckDB calls ``jaro_winkler_similarity(l, r)`` inline.
+
+Float literals bind as ``CAST('<repr>' AS DOUBLE)`` in both: a bare
+``2.5`` parses as DECIMAL in Spark and in DuckDB, and a weight summed in
+exact decimal on one engine and in doubles on the other can differ in its
+last digits. Ints stay plain.
 
 Gamma numbering follows Splink 3: the NULL level is -1; the remaining
 levels are numbered descending from strongest (first listed) to the else
@@ -44,17 +46,16 @@ class Dialect:
     def col(self, name: str) -> str:
         return sql_ident(name) if self.spark else name
 
-    def num(self, v: int | float) -> str:
-        """A numeric literal of ``v``'s type; for Spark, a float as
+    @staticmethod
+    def num(v: int | float) -> str:
+        """A numeric literal of ``v``'s type: a float as
         CAST('<repr>' AS DOUBLE), which is exactly the double ``v``."""
-        if self.spark and isinstance(v, float):
+        if isinstance(v, float):
             return f"CAST('{v!r}' AS DOUBLE)"
         return repr(v)
 
-    @property
-    def zero(self) -> str:
-        """The double 0.0 of the weight CASEs' NULL and ELSE arms."""
-        return "CAST(0.0 AS DOUBLE)" if self.spark else "0.0"
+    #: the double 0.0 of the weight CASEs' NULL and ELSE arms
+    zero = "CAST(0.0 AS DOUBLE)"
 
     def jw(self, c: "Comparison") -> str:
         if self.spark:

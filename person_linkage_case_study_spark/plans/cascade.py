@@ -32,15 +32,19 @@ first linking pass (a group that holds a single proved pass needs no
 window: it keeps the pairs over the threshold). A group is expected to
 make at most ``PASS_GROUP_MAX_PAIRS`` pairs, because its later passes
 score again the records its earlier passes linked; a proved pass that
-would take it past the cap starts a new group. After each grouped pass
-the links so far and the records still eligible are lazy frames (no
-job); the group is materialised once, when the next group or a pass
-outside any group runs (links + anti-join) or at ``confirm_piks`` (links
-only). Any other pass runs as a *group of one*: today's links checkpoint and
-anti-join checkpoint, no window — so ``collect_stats=True`` (every pass a
-group of one) keeps ``PassStats`` exact, and a pass the bound does not
-prove (every pass of the RI-scale rungs and of ``tools/bench_linkage.py``'s
-1x and 2x rungs) runs exactly its sequential queries.
+would take it past the cap starts a new group. A grouped pass builds only
+its branch (no job, and no re-planning of the passes before it). The
+group's scored union, window, links and anti-join are planned once, on
+read: when the group is materialised — once, when the next group or a
+pass outside any group runs (links + anti-join) or at ``confirm_piks``
+(links only) — or when the state (``_provisional_links``,
+``_census_to_match``) is read mid-group, which plans the group as it
+stands and keeps that plan until another pass joins. Any other pass runs
+as a *group of one*: today's links checkpoint and anti-join checkpoint,
+no window — so ``collect_stats=True`` (every pass a group of one) keeps
+``PassStats`` exact, and a pass the bound does not prove (every pass of
+the RI-scale rungs and of ``tools/bench_linkage.py``'s 1x and 2x rungs)
+runs exactly its sequential queries.
 """
 
 from __future__ import annotations
@@ -51,6 +55,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..operators.blocking import (
@@ -76,21 +81,43 @@ CENSUS_DAY = "2030-04-01"
 CHECKPOINT_MODES = ("local", "reliable", "persist", "off")
 
 
+def _switched_names(columns: list[str]) -> dict[str, str]:
+    """Each first_*/last_* column pair of ``columns``, mapped both ways."""
+    present = set(columns)
+    out = {}
+    for c in columns:
+        other = "last_" + c.removeprefix("first_")
+        if c.startswith("first_") and other in present:
+            out[c], out[other] = other, c
+    return out
+
+
 def switch_first_and_last_names(df: DataFrame) -> DataFrame:
     """Name-switch input transformation for the transposed-name passes
     (reference 03_link_datasets.ipynb:2496-2520): swap every first_*/last_*
-    derived column pair."""
-    pairs = [
-        (c, "last_" + c.removeprefix("first_"))
-        for c in df.columns
-        if c.startswith("first_") and ("last_" + c.removeprefix("first_")) in df.columns
-    ]
-    out = df
-    for fcol, lcol in pairs:
-        out = out.withColumnRenamed(fcol, "__tmp__").withColumnRenamed(
-            lcol, fcol
-        ).withColumnRenamed("__tmp__", lcol)
-    return out
+    derived column pair, as ONE projection that keeps the column order."""
+    switched = _switched_names(df.columns)
+    return df.selectExpr(
+        *[
+            f"{sql_ident(c)} AS {sql_ident(switched[c])}"
+            if c in switched
+            else sql_ident(c)
+            for c in df.columns
+        ]
+    )
+
+
+def _switch_schema(schema: StructType) -> StructType:
+    """``schema`` as :func:`switch_first_and_last_names` leaves it."""
+    switched = _switched_names(schema.names)
+    return StructType(
+        [
+            StructField(
+                switched.get(f.name, f.name), f.dataType, f.nullable, f.metadata
+            )
+            for f in schema.fields
+        ]
+    )
 
 
 #: input transformations that only rename census columns: the pair bound's
@@ -363,13 +390,16 @@ class PassPlan:
 class _PassGroup:
     """Proved passes run as one scored union (see the module docstring),
     or a group of one: an unproved pass's thresholded links, no
-    branches."""
+    branches. The frames built from the branches are planned on first
+    read and dropped when another pass joins."""
 
     census: DataFrame  # the census to match when the group began
     links_before: DataFrame  # the module's links from earlier passes
     branches: list[DataFrame] = field(default_factory=list)
-    links: DataFrame | None = None  # the group's links so far (lazy)
     expected_pairs: float = 0.0  # the sum of its passes' (_expected_pairs)
+    links: DataFrame | None = None  # the group's links (lazy)
+    provisional: DataFrame | None = None  # links_before + links
+    census_left: DataFrame | None = None  # census minus the linked records
 
 
 @dataclass
@@ -504,10 +534,15 @@ class PersonLinkageCascade:
         # accumulator: ≤1 row per record_id_raw_input_file after each module
         self.confirmed_piks: DataFrame = _empty_frame(spark, CONFIRMED_FRAME_TEMPLATE)
         self._module: ModuleConfig | None = None
-        self._census_to_match: DataFrame | None = None
-        self._provisional_links: DataFrame | None = None
+        # the module's state as of the last group flushed (a pending
+        # group's is built when read: _census_to_match, _provisional_links)
+        self._census_flushed: DataFrame | None = None
+        self._links_flushed: DataFrame | None = None
         self._reference_file: DataFrame | None = None
         self._group: _PassGroup | None = None
+        # read once per cascade / per module for the pass bound's schemas
+        self._census_schema: StructType | None = None
+        self._reference_schema: StructType | None = None
 
     def _truncate(self, df: DataFrame) -> DataFrame:
         """Materialize and cut lineage (plan depth back to O(1)).
@@ -620,32 +655,62 @@ class PersonLinkageCascade:
 
     def start_module(self, cfg: ModuleConfig) -> None:
         self._module = cfg
+        self._group = None
         self._reference_file = self.reference_files[cfg.reference_file_name]
+        self._reference_schema = None
         self._key_profile = None
         self._key_profile_resolved = False
         # exclude raw input records already PIKed by earlier modules (J3)
-        self._census_to_match = self._truncate(
+        self._census_flushed = self._truncate(
             anti_join(
                 self.census,
                 self.confirmed_piks.select("record_id_raw_input_file"),
                 on="record_id_raw_input_file",
             )
         )
-        self._provisional_links = _empty_frame(self.spark, LINKS_FRAME_TEMPLATE)
+        self._links_flushed = _empty_frame(self.spark, LINKS_FRAME_TEMPLATE)
+
+    @property
+    def _census_to_match(self) -> DataFrame | None:
+        """The module's records still eligible; with a group pending, the
+        group's census minus its links' records, planned when read."""
+        g = self._group
+        if g is None:
+            return self._census_flushed
+        if g.census_left is None:
+            g.census_left = anti_join(
+                g.census, _linked_records(self._group_links(g)), on="record_id"
+            )
+        return g.census_left
+
+    @property
+    def _provisional_links(self) -> DataFrame | None:
+        """The module's links so far; with a group pending, the links
+        before it plus the group's, planned when read."""
+        g = self._group
+        if g is None:
+            return self._links_flushed
+        if g.provisional is None:
+            g.provisional = g.links_before.unionByName(self._group_links(g))
+        return g.provisional
 
     def _block_on(self, pass_cfg: PassConfig) -> tuple[str, ...]:
         return tuple(self._module.cut_columns + pass_cfg.blocking_columns)
+
+    def _columns_needed(self, pass_cfg: PassConfig) -> list[str]:
+        """The columns a pass reads from either side, where present."""
+        return list(
+            dict.fromkeys(
+                ["record_id", *self._block_on(pass_cfg), *self._module.matching_columns]
+            )
+        )
 
     def _pass_sides(
         self, pass_cfg: PassConfig, census: DataFrame | None = None
     ) -> tuple[DataFrame, DataFrame, list[str]]:
         """The pass's census side (``census``, default the records still
         to match), reference side and blocking keys."""
-        cfg = self._module
-        block_on = list(self._block_on(pass_cfg))
-        columns_needed = list(
-            dict.fromkeys(["record_id"] + block_on + cfg.matching_columns)
-        )
+        columns_needed = self._columns_needed(pass_cfg)
         census_side = self._census_to_match if census is None else census
         if pass_cfg.input_data_transformation is not None:
             census_side = pass_cfg.input_data_transformation(census_side)
@@ -656,7 +721,34 @@ class PersonLinkageCascade:
         ref_side = self._reference_file.select(
             *[c for c in columns_needed if c in self._reference_file.columns]
         )
-        return census_side, ref_side, block_on
+        return census_side, ref_side, list(self._block_on(pass_cfg))
+
+    def _pass_schemas(
+        self, pass_cfg: PassConfig
+    ) -> tuple[StructType, StructType, list[str]]:
+        """The schemas of :meth:`_pass_sides`' two sides, worked out from
+        the census' schema (read once per cascade) and the reference's
+        (once per module) without building a frame. Only for a pass whose
+        input transformation is in :data:`_ROW_PRESERVING`: the name
+        switch is a rename of the schema."""
+        if self._census_schema is None:
+            self._census_schema = self.census.schema
+        if self._reference_schema is None:
+            self._reference_schema = self._reference_file.schema
+        census = self._census_schema
+        if pass_cfg.input_data_transformation is switch_first_and_last_names:
+            census = _switch_schema(census)
+        columns_needed = self._columns_needed(pass_cfg)
+
+        def pick(schema: StructType, names: list[str]) -> StructType:
+            fields = {f.name: f for f in schema.fields}
+            return StructType([fields[c] for c in names if c in fields])
+
+        return (
+            pick(census, columns_needed + ["record_id_raw_input_file"]),
+            pick(self._reference_schema, columns_needed),
+            list(self._block_on(pass_cfg)),
+        )
 
     def build_pass_links(
         self,
@@ -867,13 +959,9 @@ class PersonLinkageCascade:
         census' largest and ``ref_payload`` string bytes per side."""
         n_census, census_payload = self._census_rows_and_payload()
         bound = n_census * max_r
-        # schemas only: the full census has the same columns
-        census_side, ref_side, block_on = self._pass_sides(pass_cfg, self.census)
         # one pair of the widest rows: no pair row of the pass is wider
         widest = PairStats(bound, 1, 1, bound, census_payload, ref_payload)
-        row_bytes = estimate_pair_row_bytes(
-            census_side, ref_side, block_on, stats=widest
-        )
+        row_bytes = estimate_pair_row_bytes(*self._pass_schemas(pass_cfg), stats=widest)
         if self._derive_pin(bound, 0, 0, row_bytes) is not None:
             return False
         if derive_salt(bound, pair_row_bytes=row_bytes) is not None:
@@ -939,27 +1027,38 @@ class PersonLinkageCascade:
             )
 
     def _add_to_group(self, pass_cfg: PassConfig, pairs: float) -> None:
-        """Add a proved pass (``pairs`` expected) to the pending group and
-        leave the links so far and the records still eligible as lazy
-        frames. No knob needs deriving: the bound proved pin, salt and
-        the checkpoint storage level all None, and it bounds the group's
-        links frame too (a record keeps links of one pass only, at most
-        that pass's ``r``)."""
+        """Add a proved pass (``pairs`` expected) to the pending group: only
+        its ``blocked_pairs`` branch is built. The group's scored union,
+        window, links and anti-join are planned once, when read
+        (:meth:`_group_links`, ``_provisional_links``, ``_census_to_match``)
+        or flushed, so a group of k passes is planned once, not k times.
+        No knob needs deriving: the bound proved pin, salt and the
+        checkpoint storage level all None, and it bounds the group's links
+        frame too (a record keeps links of one pass only, at most that
+        pass's ``r``)."""
         g = self._group
         if g is None:
             g = self._group = _PassGroup(self._census_to_match, self._provisional_links)
         g.expected_pairs += pairs
         census_side, ref_side, block_on = self._pass_sides(pass_cfg, g.census)
-        model = self._pass_model()
         g.branches.append(
             blocked_pairs(census_side, ref_side, block_on).selectExpr(
-                *self._pair_columns(model, block_on),
+                *self._pair_columns(self._pass_model(), block_on),
                 f"{len(g.branches)} AS __pass",
                 f"CAST('{float(pass_cfg.probability_threshold)!r}' AS DOUBLE) AS __t",
                 f"{_sql_string(pass_cfg.name)} AS pass_name",
             )
         )
-        scored = score_pairs(functools.reduce(DataFrame.union, g.branches), model)
+        g.links = g.provisional = g.census_left = None
+
+    def _group_links(self, g: _PassGroup) -> DataFrame:
+        """The group's links: one ``score_pairs`` over the union of its
+        branches, planned on first read and kept until a pass joins."""
+        if g.links is not None:
+            return g.links
+        scored = score_pairs(
+            functools.reduce(DataFrame.union, g.branches), self._pass_model()
+        )
         if len(g.branches) == 1:
             # a single pass: its links are the pairs over its threshold,
             # and the group costs what the pass alone costs
@@ -979,25 +1078,23 @@ class PersonLinkageCascade:
                 .where("__hit = __first")
             )
         g.links = kept.selectExpr(*self._links_projection("pass_name"))
-        self._provisional_links = g.links_before.unionByName(g.links)
-        self._census_to_match = anti_join(
-            g.census, _linked_records(g.links), on="record_id"
-        )
+        return g.links
 
     def _flush_group(self, census: bool = True) -> DataFrame | None:
-        """Materialise the pending group's links and, with ``census``, the
-        records still eligible after it; returns the group's links (None
-        when no group is pending). The one place the cross-pass state
-        moves past a group, of one pass or of several."""
+        """Plan the pending group (once: :meth:`_group_links`), materialise
+        its links and, with ``census``, the records still eligible after
+        it; returns the group's links (None when no group is pending). The
+        one place the cross-pass state moves past a group, of one pass or
+        of several."""
         g, self._group = self._group, None
         if g is None:
             return None
-        links = self._truncate(g.links)
-        self._provisional_links = g.links_before.unionByName(links)
+        links = self._truncate(self._group_links(g))
+        self._links_flushed = g.links_before.unionByName(links)
         if census:
             # drop linked linkage records, NOT raw records — a nickname
             # variant matching doesn't stop the canonical record
-            self._census_to_match = self._truncate(
+            self._census_flushed = self._truncate(
                 anti_join(g.census, _linked_records(links), on="record_id")
             )
         return links
@@ -1100,8 +1197,8 @@ class PersonLinkageCascade:
         for c in stats_caches:
             c.unpersist()
         self._module = None
-        self._census_to_match = None
-        self._provisional_links = None
+        self._census_flushed = None
+        self._links_flushed = None
         return confirmed
 
     # -- whole-cascade driver ----------------------------------------------

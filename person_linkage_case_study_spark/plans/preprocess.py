@@ -20,6 +20,7 @@ from ..functions.standardize import (
     split_dob,
     standardize_address_part,
 )
+from ..operators.blocking import sql_ident
 
 NICKNAME_STANDARDIZATIONS = {
     "Bill": "William",
@@ -183,10 +184,13 @@ def preprocess_reference_file(
     """Reference-file preprocessing: strip mailing_address_ prefixes, split
     DOB, derive keys/phonetics (reference 03_link_datasets.ipynb:690-724,
     935-1051)."""
-    df = ref_raw
-    for c in df.columns:
-        if c.startswith("mailing_address_"):
-            df = df.withColumnRenamed(c, c.removeprefix("mailing_address_"))
+    # one projection, in column order, for every prefix stripped
+    df = ref_raw.selectExpr(
+        *[
+            f"{sql_ident(c)} AS {sql_ident(c.removeprefix('mailing_address_'))}"
+            for c in ref_raw.columns
+        ]
+    )
     df = split_dob(df, dob_format)
     if has_address:
         for c in ADDRESS_COLS:

@@ -1234,6 +1234,107 @@ def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,
     assert _link_rows(cascade._provisional_links) == grouped
 
 
+def test_pass_group_plans_once_when_read(spark, group_inputs, group_run,
+                                         monkeypatch):
+    """Without reads between passes, a group is planned once: GROUP_RUN_ORDER
+    makes three groups (three proved passes, the pass outside the config
+    as a group of one, the loose geokey pass), so ``score_pairs`` runs
+    three times, not once per pass, and the links are group_run's."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    calls = []
+    real_score = cascade_mod.score_pairs
+    monkeypatch.setattr(
+        cascade_mod, "score_pairs",
+        lambda *a, **k: calls.append(1) or real_score(*a, **k),
+    )
+    cascade = _run_group_module(spark, group_inputs, False)
+    links = _link_rows(cascade._provisional_links)
+    assert len(calls) == 3
+    grouped, _ = group_run
+    assert links == grouped
+
+
+def test_pass_bound_builds_no_frame(spark, group_inputs, monkeypatch):
+    """The pass bound reads its sides' schemas from the census' and the
+    reference's, read once: it builds no pass side and no blocked join,
+    and the schemas it works out (the name switch a rename) are the ones
+    the pass's frames have."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    census, geobase = group_inputs
+    cascade = PersonLinkageCascade(
+        spark, census, {"geobase_reference_file": geobase}, make_model(),
+        collect_stats=False,
+    )
+    cascade.start_module(GROUP_MODULE)
+    sides = []
+    for p in GROUP_MODULE.passes:
+        census_side, ref_side, keys = cascade._pass_sides(p)
+        sides.append((census_side.schema, ref_side.schema, keys))
+    built = []
+    real_sides = PersonLinkageCascade._pass_sides
+    real_blocked = cascade_mod.blocked_pairs
+    monkeypatch.setattr(
+        PersonLinkageCascade, "_pass_sides",
+        lambda *a, **k: built.append("sides") or real_sides(*a, **k),
+    )
+    monkeypatch.setattr(
+        cascade_mod, "blocked_pairs",
+        lambda *a, **k: built.append("pairs") or real_blocked(*a, **k),
+    )
+    proved = [cascade._bound_rules_out_knobs(p) for p in GROUP_RUN_ORDER]
+    assert proved == [True, True, True, False, True]
+    assert built == []
+    assert [cascade._pass_schemas(p) for p in GROUP_MODULE.passes] == sides
+
+
+def _rename_chain(df):
+    """The name switch as it was: three renames per first_*/last_* pair."""
+    for c in list(df.columns):
+        other = "last_" + c.removeprefix("first_")
+        if c.startswith("first_") and other in df.columns:
+            df = (
+                df.withColumnRenamed(c, "__tmp__")
+                .withColumnRenamed(other, c)
+                .withColumnRenamed("__tmp__", other)
+            )
+    return df
+
+
+def _frame_facts(df):
+    return (
+        [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+        sorted(map(tuple, df.collect()), key=repr),
+    )
+
+
+def test_name_switch_is_one_projection(spark, group_inputs):
+    """The name switch gives the rename chain's names, order, types and
+    rows in one projection, and its schema rename agrees with it."""
+    from person_linkage_case_study_spark.plans.cascade import _switch_schema
+
+    census, _ = group_inputs
+    switched = switch_first_and_last_names(census)
+    assert "first_name_15" in census.columns
+    assert _frame_facts(switched) == _frame_facts(_rename_chain(census))
+    assert _switch_schema(census.schema) == switched.schema
+
+
+def test_reference_prefix_strip_is_one_projection(fixture):
+    """Stripping ``mailing_address_`` in one projection preprocesses the
+    reference file exactly as the per-column rename chain did."""
+    _, geobase, _, _, _ = fixture
+    renamed = geobase
+    for c in geobase.columns:
+        if c.startswith("mailing_address_"):
+            renamed = renamed.withColumnRenamed(c, c.removeprefix("mailing_address_"))
+    assert renamed.columns != geobase.columns
+    assert _frame_facts(preprocess_reference_file(geobase)) == _frame_facts(
+        preprocess_reference_file(renamed)
+    )
+
+
 def test_large_census_forms_no_group(spark, group_inputs, monkeypatch):
     """A census too large for the bound at r = 1 (the RI-scale and 8×
     rungs' ~1.2M records need a salt there) runs no reference profile and

@@ -8,7 +8,11 @@ from person_linkage_case_study_spark.operators.estimation import (
     estimate_u,
     lambda_from_expected_match_rate,
 )
-from person_linkage_case_study_spark.operators.gamma import exact_comparison
+from person_linkage_case_study_spark.operators.gamma import (
+    banded_comparison,
+    exact_comparison,
+    jw_comparison,
+)
 from person_linkage_case_study_spark.operators.scoring import LinkageModel
 
 
@@ -27,6 +31,42 @@ def test_estimate_u_proportions(spark):
     # P(random pair agrees) = 0.1 * 0.1 = 0.01
     assert u[1] == pytest.approx(0.01, rel=0.5)
     assert u[0] == pytest.approx(0.99, rel=0.05)
+
+
+def test_estimate_u_spreads_cross_product(spark, monkeypatch):
+    """The cross product of two one-partition samples runs over at least
+    ``defaultParallelism`` partitions, and u is what it was when the
+    product ran as one task (literals captured from that code): the left
+    sample is spread after sampling, so the drawn rows do not change."""
+    from person_linkage_case_study_spark.operators import estimation
+
+    names = ["MARTHA", "MARHTA", "MARTA", "XAVIER", "JOHN", "JON", "JOHNNY",
+             "ANN", "ANNE", None]
+    left = spark.createDataFrame(
+        [(names[i % 10], 1950 + (i * 7) % 40) for i in range(500)],
+        "name string, year int",
+    ).coalesce(1)
+    right = spark.createDataFrame(
+        [(names[(i * 3) % 10], 1950 + (i * 11) % 45) for i in range(500)],
+        "name string, year int",
+    ).coalesce(1)
+    products = []
+    real_add_gammas = estimation.add_gammas
+    monkeypatch.setattr(
+        estimation, "add_gammas",
+        lambda pairs, comps: products.append(pairs) or real_add_gammas(pairs, comps),
+    )
+    comps = [jw_comparison("name"), banded_comparison("year", band=2)]
+    estimate_u(left, right, comps, max_pairs=4e4, seed=99)
+    assert [c.u for c in comps] == [
+        [0.7216464022324098, 0.01866985582353332, 0.14726596239452527,
+         0.1124177795495316],
+        [0.8911148899989372, 0.08614092889786375, 0.022744181103199066],
+    ]
+    [product] = products
+    assert (
+        product.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    )
 
 
 def test_em_recovers_m_on_planted_data(spark):

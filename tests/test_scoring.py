@@ -154,10 +154,10 @@ PAIR_ROWS = [
 def test_spark_dialect_matches_duckdb_dialect(pairs, spark):
     """The emitter's two dialects agree on the same model and pairs:
     Spark evaluating the Spark-dialect SQL (``score_pairs``) and DuckDB
-    evaluating the DuckDB-dialect SQL give the same gammas, and the same
-    match weights (DuckDB reads the weight literals as DECIMAL, so the
-    weights agree to 1e-12 and exactly after the oracles' 6-dp
-    rounding)."""
+    evaluating the DuckDB-dialect SQL give the same gammas and exactly the
+    same match weights: both dialects bind the weight literals as DOUBLE,
+    so both engines add the same doubles in the same order (bare literals
+    made DuckDB add them in exact DECIMAL, off in the last digits)."""
     assert [tuple(r) for r in pairs.collect()] == PAIR_ROWS
     model = make_model()
     spark_rows = [
@@ -167,17 +167,16 @@ def test_spark_dialect_matches_duckdb_dialect(pairs, spark):
     duck_rows = _duckdb_scores(model, PAIR_ROWS)
     assert [r[:2] for r in spark_rows] == [r[:2] for r in duck_rows]
     assert [r[:2] for r in spark_rows] == [(3, 2), (2, 1), (0, 0), (-1, -1)]
-    for (*_, w_spark), (*_, w_duck) in zip(spark_rows, duck_rows):
-        assert w_spark == pytest.approx(float(w_duck), abs=1e-12)
-        assert round(w_spark, 6) == round(float(w_duck), 6)
+    assert [r[2] for r in spark_rows] == [r[2] for r in duck_rows]
+    assert all(type(r[2]) is float for r in duck_rows)
 
-    # a float band binds as a DOUBLE in Spark (CAST, not a DECIMAL
-    # literal); an int band stays a plain INT literal; both dialects give
-    # the same gammas
+    # a float band binds as a DOUBLE in both dialects (CAST, not a
+    # DECIMAL literal); an int band stays a plain INT literal; both
+    # dialects give the same gammas
     float_band = banded_comparison("year", band=2.5)
     sql = float_band.gamma_sql(SPARK)
     assert "<= CAST('2.5' AS DOUBLE)" in sql
-    assert "<= 2.5 THEN" in float_band.gamma_sql(DUCKDB)
+    assert "<= CAST('2.5' AS DOUBLE) THEN" in float_band.gamma_sql(DUCKDB)
     assert "<= 5 THEN" in banded_comparison("year", band=5).gamma_sql(SPARK)
     via_spark = [r["g"] for r in pairs.selectExpr(f"{sql} AS g").collect()]
     float_band.m, float_band.u = [0.1, 0.2, 0.7], [0.7, 0.2, 0.1]

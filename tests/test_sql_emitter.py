@@ -2,10 +2,12 @@
 operators/scoring.py, operators/tf.py).
 
 Every Spark-dialect string below is what the scoring plans were built from
-before the Column, Spark-SQL and DuckDB compilers became one emitter, and
-every DuckDB-dialect string is what the correctness oracles were built
-from; they are literals, captured once, so a change to either dialect's
-output shows here first.
+before the Column, Spark-SQL and DuckDB compilers became one emitter.
+Every DuckDB-dialect string is what the correctness oracles were built
+from, with float literals bound as DOUBLE (``CAST('<repr>' AS DOUBLE)``,
+as in Spark) where the oracles once had bare DECIMAL literals. They are
+literals, captured once, so a change to either dialect's output shows here
+first.
 """
 
 import os
@@ -26,8 +28,9 @@ GAMMA = {'demo:acctbal': {'duckdb': 'CASE WHEN acctbal_l IS NULL OR acctbal_r IS
                            'abs(`acctbal_l` - `acctbal_r`) <= 100 THEN 1 ELSE 0 END'},
  'demo:name': {'duckdb': 'CASE WHEN name_l IS NULL OR name_r IS NULL THEN -1 WHEN '
                          'name_l = name_r THEN 3 WHEN jaro_winkler_similarity(name_l, '
-                         'name_r) >= 0.9 THEN 2 WHEN jaro_winkler_similarity(name_l, '
-                         'name_r) >= 0.7 THEN 1 ELSE 0 END',
+                         "name_r) >= CAST('0.9' AS DOUBLE) THEN 2 WHEN "
+                         "jaro_winkler_similarity(name_l, name_r) >= CAST('0.7' AS "
+                         'DOUBLE) THEN 1 ELSE 0 END',
                'spark': 'CASE WHEN `name_l` IS NULL OR `name_r` IS NULL THEN -1 WHEN '
                         "`name_l` = `name_r` THEN 3 WHEN `__jw_name` >= CAST('0.9' AS "
                         "DOUBLE) THEN 2 WHEN `__jw_name` >= CAST('0.7' AS DOUBLE) THEN "
@@ -36,9 +39,10 @@ GAMMA = {'demo:acctbal': {'duckdb': 'CASE WHEN acctbal_l IS NULL OR acctbal_r IS
                                   'first_name_15_r IS NULL THEN -1 WHEN '
                                   'first_name_15_l = first_name_15_r THEN 3 WHEN '
                                   'jaro_winkler_similarity(first_name_15_l, '
-                                  'first_name_15_r) >= 0.9 THEN 2 WHEN '
-                                  'jaro_winkler_similarity(first_name_15_l, '
-                                  'first_name_15_r) >= 0.75 THEN 1 ELSE 0 END',
+                                  "first_name_15_r) >= CAST('0.9' AS DOUBLE) THEN 2 "
+                                  'WHEN jaro_winkler_similarity(first_name_15_l, '
+                                  "first_name_15_r) >= CAST('0.75' AS DOUBLE) THEN 1 "
+                                  'ELSE 0 END',
                         'spark': 'CASE WHEN `first_name_15_l` IS NULL OR '
                                  '`first_name_15_r` IS NULL THEN -1 WHEN '
                                  '`first_name_15_l` = `first_name_15_r` THEN 3 WHEN '
@@ -48,7 +52,8 @@ GAMMA = {'demo:acctbal': {'duckdb': 'CASE WHEN acctbal_l IS NULL OR acctbal_r IS
  'mini:last_name_12': {'duckdb': 'CASE WHEN last_name_12_l IS NULL OR last_name_12_r '
                                  'IS NULL THEN -1 WHEN last_name_12_l = last_name_12_r '
                                  'THEN 2 WHEN jaro_winkler_similarity(last_name_12_l, '
-                                 'last_name_12_r) >= 0.9 THEN 1 ELSE 0 END',
+                                 "last_name_12_r) >= CAST('0.9' AS DOUBLE) THEN 1 ELSE "
+                                 '0 END',
                        'spark': 'CASE WHEN `last_name_12_l` IS NULL OR '
                                 '`last_name_12_r` IS NULL THEN -1 WHEN '
                                 '`last_name_12_l` = `last_name_12_r` THEN 2 WHEN '
@@ -66,9 +71,10 @@ GAMMA = {'demo:acctbal': {'duckdb': 'CASE WHEN acctbal_l IS NULL OR acctbal_r IS
                                  'IS NULL THEN -1 WHEN first_name_15_l = '
                                  'first_name_15_r THEN 3 WHEN '
                                  'jaro_winkler_similarity(first_name_15_l, '
-                                 'first_name_15_r) >= 0.9 THEN 2 WHEN '
-                                 'jaro_winkler_similarity(first_name_15_l, '
-                                 'first_name_15_r) >= 0.75 THEN 1 ELSE 0 END',
+                                 "first_name_15_r) >= CAST('0.9' AS DOUBLE) THEN 2 "
+                                 'WHEN jaro_winkler_similarity(first_name_15_l, '
+                                 "first_name_15_r) >= CAST('0.75' AS DOUBLE) THEN 1 "
+                                 'ELSE 0 END',
                        'spark': 'CASE WHEN `first_name_15_l` IS NULL OR '
                                 '`first_name_15_r` IS NULL THEN -1 WHEN '
                                 '`first_name_15_l` = `first_name_15_r` THEN 3 WHEN '
@@ -82,9 +88,10 @@ GAMMA = {'demo:acctbal': {'duckdb': 'CASE WHEN acctbal_l IS NULL OR acctbal_r IS
  'pvs:last_name_12': {'duckdb': 'CASE WHEN last_name_12_l IS NULL OR last_name_12_r IS '
                                 'NULL THEN -1 WHEN last_name_12_l = last_name_12_r '
                                 'THEN 3 WHEN jaro_winkler_similarity(last_name_12_l, '
-                                'last_name_12_r) >= 0.9 THEN 2 WHEN '
+                                "last_name_12_r) >= CAST('0.9' AS DOUBLE) THEN 2 WHEN "
                                 'jaro_winkler_similarity(last_name_12_l, '
-                                'last_name_12_r) >= 0.75 THEN 1 ELSE 0 END',
+                                "last_name_12_r) >= CAST('0.75' AS DOUBLE) THEN 1 ELSE "
+                                '0 END',
                       'spark': 'CASE WHEN `last_name_12_l` IS NULL OR `last_name_12_r` '
                                'IS NULL THEN -1 WHEN `last_name_12_l` = '
                                '`last_name_12_r` THEN 3 WHEN `__jw_last_name_12` >= '
@@ -128,13 +135,17 @@ GAMMA = {'demo:acctbal': {'duckdb': 'CASE WHEN acctbal_l IS NULL OR acctbal_r IS
                        '`price_l` = `price_r` THEN 2 WHEN abs(`price_l` - `price_r`) '
                        '<= 100 THEN 1 ELSE 0 END'}}
 
-WEIGHT = {'demo': {'duckdb': '-9.964340867792417 + (CASE WHEN gamma_name = -1 THEN 0.0 WHEN '
-                    'gamma_name = 0 THEN -4.087462841250339 WHEN gamma_name = 1 THEN '
-                    '0.0 WHEN gamma_name = 2 THEN 2.643856189774725 WHEN gamma_name = '
-                    '3 THEN 5.906890595608519 ELSE 0.0 END) + (CASE WHEN gamma_acctbal '
-                    '= -1 THEN 0.0 WHEN gamma_acctbal = 0 THEN -3.169925001442312 WHEN '
-                    'gamma_acctbal = 1 THEN 1.7369655941662063 WHEN gamma_acctbal = 2 '
-                    'THEN 5.906890595608519 ELSE 0.0 END)',
+WEIGHT = {'demo': {'duckdb': "CAST('-9.964340867792417' AS DOUBLE) + (CASE WHEN gamma_name = -1 "
+                    'THEN CAST(0.0 AS DOUBLE) WHEN gamma_name = 0 THEN '
+                    "CAST('-4.087462841250339' AS DOUBLE) WHEN gamma_name = 1 THEN "
+                    "CAST('0.0' AS DOUBLE) WHEN gamma_name = 2 THEN "
+                    "CAST('2.643856189774725' AS DOUBLE) WHEN gamma_name = 3 THEN "
+                    "CAST('5.906890595608519' AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) "
+                    '+ (CASE WHEN gamma_acctbal = -1 THEN CAST(0.0 AS DOUBLE) WHEN '
+                    "gamma_acctbal = 0 THEN CAST('-3.169925001442312' AS DOUBLE) WHEN "
+                    "gamma_acctbal = 1 THEN CAST('1.7369655941662063' AS DOUBLE) WHEN "
+                    "gamma_acctbal = 2 THEN CAST('5.906890595608519' AS DOUBLE) ELSE "
+                    'CAST(0.0 AS DOUBLE) END)',
           'spark': "CAST('-9.964340867792417' AS DOUBLE) + (CASE WHEN `gamma_name` = "
                    '-1 THEN CAST(0.0 AS DOUBLE) WHEN `gamma_name` = 0 THEN '
                    "CAST('-4.087462841250339' AS DOUBLE) WHEN `gamma_name` = 1 THEN "
@@ -146,14 +157,18 @@ WEIGHT = {'demo': {'duckdb': '-9.964340867792417 + (CASE WHEN gamma_name = -1 TH
                    "`gamma_acctbal` = 1 THEN CAST('1.7369655941662063' AS DOUBLE) WHEN "
                    "`gamma_acctbal` = 2 THEN CAST('5.906890595608519' AS DOUBLE) ELSE "
                    'CAST(0.0 AS DOUBLE) END)'},
- 'mini': {'duckdb': '-6.6293566200796095 + (CASE WHEN gamma_first_name_15 = -1 THEN '
-                    '0.0 WHEN gamma_first_name_15 = 0 THEN -5.491853096329675 WHEN '
-                    'gamma_first_name_15 = 1 THEN 0.0 WHEN gamma_first_name_15 = 2 '
-                    'THEN 2.736965594166206 WHEN gamma_first_name_15 = 3 THEN '
-                    '5.189824558880018 ELSE 0.0 END) + (CASE WHEN gamma_last_name_12 = '
-                    '-1 THEN 0.0 WHEN gamma_last_name_12 = 0 THEN -2.8073549220576037 '
-                    'WHEN gamma_last_name_12 = 1 THEN 1.0 WHEN gamma_last_name_12 = 2 '
-                    'THEN 1.807354922057604 ELSE 0.0 END)',
+ 'mini': {'duckdb': "CAST('-6.6293566200796095' AS DOUBLE) + (CASE WHEN "
+                    'gamma_first_name_15 = -1 THEN CAST(0.0 AS DOUBLE) WHEN '
+                    "gamma_first_name_15 = 0 THEN CAST('-5.491853096329675' AS DOUBLE) "
+                    "WHEN gamma_first_name_15 = 1 THEN CAST('0.0' AS DOUBLE) WHEN "
+                    "gamma_first_name_15 = 2 THEN CAST('2.736965594166206' AS DOUBLE) "
+                    "WHEN gamma_first_name_15 = 3 THEN CAST('5.189824558880018' AS "
+                    'DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) + (CASE WHEN '
+                    'gamma_last_name_12 = -1 THEN CAST(0.0 AS DOUBLE) WHEN '
+                    "gamma_last_name_12 = 0 THEN CAST('-2.8073549220576037' AS DOUBLE) "
+                    "WHEN gamma_last_name_12 = 1 THEN CAST('1.0' AS DOUBLE) WHEN "
+                    "gamma_last_name_12 = 2 THEN CAST('1.807354922057604' AS DOUBLE) "
+                    'ELSE CAST(0.0 AS DOUBLE) END)',
           'spark': "CAST('-6.6293566200796095' AS DOUBLE) + (CASE WHEN "
                    '`gamma_first_name_15` = -1 THEN CAST(0.0 AS DOUBLE) WHEN '
                    "`gamma_first_name_15` = 0 THEN CAST('-5.491853096329675' AS "
@@ -166,12 +181,15 @@ WEIGHT = {'demo': {'duckdb': '-9.964340867792417 + (CASE WHEN gamma_name = -1 TH
                    "DOUBLE) WHEN `gamma_last_name_12` = 1 THEN CAST('1.0' AS DOUBLE) "
                    "WHEN `gamma_last_name_12` = 2 THEN CAST('1.807354922057604' AS "
                    'DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)'},
- 'tf': {'duckdb': '-9.964340867792417 + (CASE WHEN gamma_brand = -1 THEN 0.0 WHEN '
-                  'gamma_brand = 0 THEN -2.263034405833794 WHEN gamma_brand = 1 THEN '
-                  '4.321928094887363 ELSE 0.0 END) + (CASE WHEN gamma_price = -1 THEN '
-                  '0.0 WHEN gamma_price = 0 THEN -3.169925001442312 WHEN gamma_price = '
-                  '1 THEN 1.7369655941662063 WHEN gamma_price = 2 THEN '
-                  '5.906890595608519 ELSE 0.0 END)',
+ 'tf': {'duckdb': "CAST('-9.964340867792417' AS DOUBLE) + (CASE WHEN gamma_brand = -1 "
+                  'THEN CAST(0.0 AS DOUBLE) WHEN gamma_brand = 0 THEN '
+                  "CAST('-2.263034405833794' AS DOUBLE) WHEN gamma_brand = 1 THEN "
+                  "CAST('4.321928094887363' AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) + "
+                  '(CASE WHEN gamma_price = -1 THEN CAST(0.0 AS DOUBLE) WHEN '
+                  "gamma_price = 0 THEN CAST('-3.169925001442312' AS DOUBLE) WHEN "
+                  "gamma_price = 1 THEN CAST('1.7369655941662063' AS DOUBLE) WHEN "
+                  "gamma_price = 2 THEN CAST('5.906890595608519' AS DOUBLE) ELSE "
+                  'CAST(0.0 AS DOUBLE) END)',
         'spark': "CAST('-9.964340867792417' AS DOUBLE) + (CASE WHEN `gamma_brand` = -1 "
                  'THEN CAST(0.0 AS DOUBLE) WHEN `gamma_brand` = 0 THEN '
                  "CAST('-2.263034405833794' AS DOUBLE) WHEN `gamma_brand` = 1 THEN "
@@ -184,7 +202,8 @@ WEIGHT = {'demo': {'duckdb': '-9.964340867792417 + (CASE WHEN gamma_name = -1 TH
 
 TF_DUCKDB = (
     "CASE WHEN gamma_brand = 1 AND tf IS NOT NULL"
-    " THEN 1.0 * (-4.643856189774724 - log2(tf)) ELSE 0.0 END"
+    " THEN CAST('1.0' AS DOUBLE) * (CAST('-4.643856189774724' AS DOUBLE)"
+    " - log2(tf)) ELSE CAST(0.0 AS DOUBLE) END"
 )
 
 
@@ -227,8 +246,8 @@ def test_match_weight_sql_golden(tag):
 
 def test_tf_adjustment_sql_golden():
     """The DuckDB adjustment is the oracle's string; the Spark dialect
-    (new: the adjustment was a Column chain before) differs from it only
-    in quoting and literal binding."""
+    (the adjustment was a Column chain before) differs from it only in
+    quoting."""
     brand = queries._tf_model().comparisons[0]
     assert tf_adjustment_sql(brand, DUCKDB, weight=1.0, tf_col="tf") == TF_DUCKDB
     assert tf_adjustment_sql(brand, SPARK, weight=1.0, tf_col="__tf") == (
