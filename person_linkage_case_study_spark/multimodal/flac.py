@@ -77,8 +77,11 @@ def crc8(data: bytes) -> int:
     return crc
 
 
-def crc16(data: bytes) -> int:
-    crc = 0
+def crc16(data: bytes, init: int = 0) -> int:
+    """CRC-16, poly 0x8005, MSB-first: FLAC's frame CRC with the default
+    ``init`` 0; MPEG audio's protection CRC with 0xFFFF (ISO 11172-3
+    §2.4.3.1)."""
+    crc = init
     for b in data:
         crc = _CRC16_TABLE[((crc >> 8) ^ b) & 0xFF] ^ ((crc << 8) & 0xFFFF)
     return crc

@@ -61,7 +61,7 @@ from __future__ import annotations
 
 import struct  # noqa: F401  (kept: kernels catch struct.error uniformly)
 
-from .flac import _CRC16_TABLE, _BitReader
+from .flac import _BitReader, crc16
 
 #: Layer I/II scalefactor table, ISO 11172-3 Table 3-B.1: the closed
 #: form 2 · 2^(−idx/3). Index 63 ('111111') is forbidden.
@@ -81,16 +81,6 @@ _SR_TABLE = {0: 44100, 1: 48000, 2: 32000}  # MPEG-1 sampling_frequency
 _BR_TABLE_L1 = (
     None, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448,
 )
-
-
-def _crc16_ffff(data: bytes) -> int:
-    """CRC-16 poly 0x8005, init 0xFFFF, MSB-first — the MPEG-audio
-    protection polynomial (same generator as FLAC's frame CRC but with
-    the 0xFFFF preset, ISO 11172-3 §2.4.3.1)."""
-    crc = 0xFFFF
-    for b in data:
-        crc = ((crc << 8) ^ _CRC16_TABLE[((crc >> 8) ^ b) & 0xFF]) & 0xFFFF
-    return crc
 
 
 def _requant_l1(code: int, nb: int) -> float:
@@ -274,7 +264,7 @@ def decode_layer1(payload: bytes) -> dict:
             # — always a whole number of bytes (mono 128, stereo 256,
             # joint 144/160/176/192 bits)
             prot = body[2:4] + body[6 : 6 + (4 * nslots) // 8]
-            if _crc16_ffff(prot) != crc_read:
+            if crc16(prot, init=0xFFFF) != crc_read:
                 raise ValueError("MPEG CRC-16 mismatch")
         # scalefactors: 6-bit fields, wire order sb-major / ch-minor
         # over allocated slots — exactly row-major True positions of
@@ -432,7 +422,7 @@ def encode_layer1(
         frame = bytearray((0xFF, h1, h2, h3))
         if crc:
             prot = bytes((h2, h3)) + body[:alloc_bytes_end]
-            frame += _crc16_ffff(prot).to_bytes(2, "big")
+            frame += crc16(prot, init=0xFFFF).to_bytes(2, "big")
         frame += body
         frame += b"\x00" * (frame_len - len(frame))
         out += frame
@@ -660,7 +650,7 @@ def decode_layer2(payload: bytes, alloc_table=None) -> dict:
                 [fbits[16:32], fbits[48 : 48 + ln]]
             )
             whole = (seq.size // 8) * 8
-            crc = _crc16_ffff(np.packbits(seq[:whole]).tobytes())
+            crc = crc16(np.packbits(seq[:whole]).tobytes(), init=0xFFFF)
             rem = seq.size - whole
             if rem:
                 tail = int(

@@ -29,7 +29,7 @@ from pyspark.sql.types import StructType
 
 
 class PairStats(NamedTuple):
-    """One-pass blocking-pass statistics (see :func:`estimate_pair_stats`).
+    """A blocking pass's statistics (see :func:`block_statistics`).
 
     ``max_key_pairs`` is the largest single blocking key's pair product —
     the signal that says "this pass has a monster block": hash
@@ -58,19 +58,6 @@ class PairStats(NamedTuple):
 def sql_ident(name: str) -> str:
     """``name`` as a backquoted Spark SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def string_payload_sql(df: DataFrame, exclude: Sequence[str] = ()) -> str:
-    """Σ ``length()`` over ``df``'s string columns not in ``exclude``, as
-    ONE SQL expression of type BIGINT (one gateway call to bind, however
-    many columns); a NULL string contributes 0 (it occupies no
-    variable-width section)."""
-    terms = [
-        f"coalesce(CAST(length(`{f.name}`) AS BIGINT), 0)"
-        for f in df.schema.fields
-        if f.dataType.typeName() == "string" and f.name not in exclude
-    ]
-    return " + ".join(terms) or "CAST(0 AS BIGINT)"
 
 
 def blocked_pairs(
@@ -137,156 +124,126 @@ def blocked_pairs(
     return joined
 
 
-def estimate_pair_stats(
-    left: DataFrame, right: DataFrame, block_on: Sequence[str]
-) -> PairStats:
-    """``(pairs, n_left, n_right, max_key_pairs)`` from one aggregation
-    pass: both sides tagged with indicator columns and unioned, so ONE
-    keyed hash aggregate yields the inner-join pair total
-    (Σ count_l × count_r; a key missing on one side aggregates that
-    side's indicator to 0, contributing nothing — exactly the
-    inner-join sum), each side's non-NULL-key row total
-    (rows NULL in any blocking key skip the pass by equi-join semantics,
-    so they are not input to the explosion either), and the hottest
-    single key's pair product. The row totals feed
-    :func:`derive_pair_pin`'s explosion gate; ``max_key_pairs`` feeds
-    :func:`derive_salt`'s hot-key gate (r9 — the other half of the
-    forgotten-knob regime); the aggregated per-key frames are tiny, so
-    the extra aggregates are free.
+class BlockPass(NamedTuple):
+    """A blocking pass over the two frames given to
+    :func:`block_statistics`: its keys, and each of its sides' columns as
+    ``{name in the pass: column of the frame}`` (a rename, such as the
+    name switch, reads a name from another column)."""
 
-    r11: the same job also sums each side's pair-row STRING payload
-    (``str_bytes_l`` over every left string column — pair rows emit the
-    keys once, from the left — ``str_bytes_r`` over the right's non-key
-    string columns), so :func:`estimate_pair_row_bytes` can use measured
-    average widths instead of assuming 16 bytes per string. NULL strings
-    contribute nothing (``length(NULL)`` is NULL, skipped by ``sum``) —
-    correct, since a NULL occupies no variable-width section."""
-    keys = list(block_on)
-    # rows NULL in any blocking key never join — exclude them up front so
-    # they land in neither the pair total nor the row totals (the NULL
-    # group would otherwise survive the FULL OUTER join as an unmatched
-    # row and inflate n_left/n_right)
-    not_null = F.lit(True)
-    for k in keys:
-        not_null = not_null & F.col(k).isNotNull()
-    # one union + ONE keyed aggregation instead of per-side groupBys
-    # full-outer-joined (r15, guide §2.4): tagging each side with
-    # indicator columns makes the per-key (count_l, count_r, payload_l,
-    # payload_r) a single hash aggregate — two exchanges total (keyed
-    # partial→final, then the global collapse) where the join form paid
-    # two keyed exchanges PLUS a sort-merge join, all serialized under
-    # AQE (measured 1.03 s → 0.45 s warm per pass derivation at sf0.1).
-    # Arithmetic is identical: a key present on one side aggregates the
-    # other side's indicators to 0 (sum of zero-literals over existing
-    # rows, never NULL), contributing 0 pairs exactly as the coalesced
-    # full-outer row did.
-    tagged = left.filter(not_null).select(
-        *keys,
-        F.lit(1).alias("__l"),
-        F.lit(0).alias("__r"),
-        F.expr(string_payload_sql(left)).alias("__pl"),
-        F.lit(0).cast("long").alias("__pr"),
-    ).unionByName(
-        right.filter(not_null).select(
-            *keys,
-            F.lit(0).alias("__l"),
-            F.lit(1).alias("__r"),
-            F.lit(0).cast("long").alias("__pl"),
-            F.expr(string_payload_sql(right, exclude=keys)).alias("__pr"),
+    keys: tuple[str, ...]
+    left: dict[str, str]
+    right: dict[str, str]
+
+
+def block_statistics(
+    left: DataFrame, right: DataFrame, passes: Sequence[BlockPass]
+) -> list[PairStats]:
+    """The exact :class:`PairStats` of each pass, from ONE aggregation.
+
+    Each frame is read once, as one projection: a key *slot* for every
+    distinct (left column, right column) pair some pass joins on, an
+    indicator of the side, and each pass's string payload (Σ
+    ``length()`` over the side's string columns, the right side's keys
+    excluded since pair rows emit the keys once, from the left; NULL
+    strings add 0). The two sides are unioned and grouped by GROUPING
+    SETS, one set of slots per pass, so per key value and set one hash
+    aggregate yields the rows of each side and their payloads; a global
+    collapse then takes, per pass, the inner-join pair total (Σ count_l ×
+    count_r: a key present on one side only adds 0), each side's row and
+    payload totals, and the hottest key's pair product. Groups with a
+    NULL key are dropped, as an equi-join drops those rows; the groups
+    are Spark's own grouping keys (floats normalised), so a key the join
+    treats as one value is never split."""
+    slots: dict[tuple[str, str], str] = {}  # (left col, right col) -> slot
+    sets = [
+        tuple(
+            slots.setdefault((p.left[k], p.right[k]), f"__k{len(slots)}")
+            for k in p.keys
         )
-    )
-    per_key = tagged.groupBy(*keys).agg(
-        F.sum("__l").alias("__cl"),
-        F.sum("__r").alias("__cr"),
-        F.sum("__pl").alias("__sl"),
-        F.sum("__pr").alias("__sr"),
-    )
-    key_pairs = F.col("__cl") * F.col("__cr")
-    row = per_key.agg(
-        F.sum(key_pairs).alias("pairs"),
-        F.sum("__cl").alias("nl"),
-        F.sum("__cr").alias("nr"),
-        F.max(key_pairs).alias("maxkp"),
-        F.sum("__sl").alias("sl"),
-        F.sum("__sr").alias("sr"),
-    ).first()
-    return PairStats(
-        int(row["pairs"] or 0),
-        int(row["nl"] or 0),
-        int(row["nr"] or 0),
-        int(row["maxkp"] or 0),
-        int(row["sl"] or 0),
-        int(row["sr"] or 0),
-    )
+        for p in passes
+    ]
+    strings = [
+        {f.name for f in frame.schema.fields if f.dataType.typeName() == "string"}
+        for frame in (left, right)
+    ]
+    pays: dict[tuple[int, str], str] = {}  # (side, payload sql) -> column
 
+    def payload(side: int, cols: dict[str, str], exclude=()) -> str:
+        terms = [
+            f"coalesce(CAST(length({sql_ident(src)}) AS BIGINT), 0)"
+            for name, src in cols.items()
+            if src in strings[side] and name not in exclude
+        ]
+        sql = " + ".join(terms) or "CAST(0 AS BIGINT)"
+        return pays.setdefault((side, sql), f"__p{len(pays)}")
 
-class KeyProfile(NamedTuple):
-    """One side's block statistics for several key sets (see
-    :func:`max_key_multiplicity`)."""
+    payloads = [(payload(0, p.left), payload(1, p.right, p.keys)) for p in passes]
 
-    # key set -> most rows sharing one non-NULL value of those columns
-    max_multiplicity: dict[tuple[str, ...], int]
-    # most string bytes in any one row (every string column, NULL = 0)
-    max_str_payload: int
-    # key set -> rows sharing a non-NULL row's value, on average over the
-    # rows (sum of n^2 / sum of n over the groups): a left row whose keys
-    # are drawn like these rows' meets that many rows on average
-    mean_multiplicity: dict[tuple[str, ...], float]
+    def tagged(frame: DataFrame, side: int) -> DataFrame:
+        return frame.selectExpr(
+            *[f"{sql_ident(cols[side])} AS {slot}" for cols, slot in slots.items()],
+            f"{1 - side} AS __l",
+            f"{side} AS __r",
+            *[
+                f"{sql if s == side else 'CAST(0 AS BIGINT)'} AS {col}"
+                for (s, sql), col in pays.items()
+            ],
+        )
 
-
-def max_key_multiplicity(
-    df: DataFrame, key_sets: Sequence[Sequence[str]]
-) -> KeyProfile:
-    """For each key set, the most rows of ``df`` that share one non-NULL
-    value of those columns and how many share it on average (see
-    :class:`KeyProfile`), plus ``df``'s largest per-row string payload
-    (:func:`string_payload_sql` over every string column), from ONE
-    aggregation: a GROUPING SETS aggregate reads ``df`` once for all the
-    key sets, then a global collapse takes each set's largest group.
-
-    This bounds a blocking pass without running it: with ``r`` the
-    reference side's largest multiplicity over the pass's keys, every
-    left row meets at most ``r`` right rows, so the pass's pairs and its
-    hottest key's pairs are both at most ``n_left × r``. The groups are
-    Spark's own grouping keys (floats normalised, NULL-keyed groups
-    dropped), so a key the join treats as one value is never split."""
-    sets = list(dict.fromkeys(tuple(k) for k in key_sets))
-    cols = list(dict.fromkeys(c for s in sets for c in s))
+    names = list(slots.values())
     grouped = (
-        df.selectExpr(
-            *[f"`{c}`" for c in cols], f"{string_payload_sql(df)} AS __p"
-        )
-        .groupingSets([list(s) for s in sets], *cols)
+        tagged(left, 0)
+        .union(tagged(right, 1))
+        .groupingSets([list(s) for s in dict.fromkeys(sets)], *names)
         .agg(
-            F.expr("count(1) AS __n"),
-            F.expr("max(__p) AS __p"),
+            F.expr("sum(__l) AS __cl"),
+            F.expr("sum(__r) AS __cr"),
+            *[F.expr(f"sum({c}) AS {c}") for c in pays.values()],
             F.expr("grouping_id() AS __g"),
         )
     )
 
     def of_set(key_set: tuple[str, ...], value: str) -> str:
-        # grouping_id sets bit (n-1-i) for every column i NOT in the set
+        # grouping_id sets bit (n-1-i) for every slot i NOT in the set
         gid = sum(
-            1 << (len(cols) - 1 - i) for i, c in enumerate(cols) if c not in key_set
+            1 << (len(names) - 1 - i) for i, c in enumerate(names) if c not in key_set
         )
-        keep = " AND ".join(
-            [f"__g = {gid}"] + [f"`{c}` IS NOT NULL" for c in key_set]
-        )
+        keep = " AND ".join([f"__g = {gid}"] + [f"{c} IS NOT NULL" for c in key_set])
         return f"CASE WHEN {keep} THEN {value} END"
 
     row = grouped.selectExpr(
-        *[f"max({of_set(s, '__n')}) AS __r{i}" for i, s in enumerate(sets)],
         *[
-            f"sum({of_set(s, '__n * __n')}) / sum({of_set(s, '__n')}) AS __m{i}"
-            for i, s in enumerate(sets)
-        ],
-        "max(__p) AS __p",
+            f"{agg}({of_set(s, value)})"
+            for s, (pl, pr) in zip(sets, payloads)
+            for agg, value in (
+                ("sum", "__cl * __cr"),
+                ("sum", "__cl"),
+                ("sum", "__cr"),
+                ("max", "__cl * __cr"),
+                ("sum", pl),
+                ("sum", pr),
+            )
+        ]
     ).first()
-    return KeyProfile(
-        {s: int(row[f"__r{i}"] or 0) for i, s in enumerate(sets)},
-        int(row["__p"] or 0),
-        {s: float(row[f"__m{i}"] or 0) for i, s in enumerate(sets)},
+    return [
+        PairStats(*(int(v or 0) for v in row[6 * i : 6 * i + 6]))
+        for i in range(len(passes))
+    ]
+
+
+def estimate_pair_stats(
+    left: DataFrame, right: DataFrame, block_on: Sequence[str]
+) -> PairStats:
+    """The :class:`PairStats` of one blocking pass of ``left`` against
+    ``right`` on ``block_on``: :func:`block_statistics` of that one pass,
+    every column of each side its own. The row totals feed
+    :func:`derive_pair_pin`'s explosion gate, ``max_key_pairs``
+    :func:`derive_salt`'s hot-key gate and the payload sums
+    :func:`estimate_pair_row_bytes`' measured string widths."""
+    one = BlockPass(
+        tuple(block_on), {c: c for c in left.columns}, {c: c for c in right.columns}
     )
+    return block_statistics(left, right, [one])[0]
 
 
 def estimate_pair_row_bytes(

@@ -22,36 +22,41 @@ pair by pair (a fixed model, no term-frequency tables, the name switch a
 per-row rename), so a record's links in pass k depend only on that record
 and the reference file; sequential elimination therefore keeps, for each
 census record, exactly the links of the EARLIEST pass that linked it.
-Consecutive passes whose plan is already proved (``_bound_rules_out_knobs``:
-no statistics, a pass of the module's config, both knobs derived and
-provably None, census rows kept) collect into a pending *group* that reads
-the census as it stood when the group began: one ``blocked_pairs`` branch
-per pass, ONE ``score_pairs`` over their union, and a window that keeps a
-pair when it clears its pass's threshold and its pass is the record's
-first linking pass (a group that holds a single proved pass needs no
-window: it keeps the pairs over the threshold). A group is expected to
-make at most ``PASS_GROUP_MAX_PAIRS`` pairs, because its later passes
-score again the records its earlier passes linked; a proved pass that
-would take it past the cap starts a new group. A grouped pass builds only
-its branch (no job, and no re-planning of the passes before it). The
-group's scored union, window, links and anti-join are planned once, on
-read: when the group is materialised — once, when the next group or a
-pass outside any group runs (links + anti-join) or at ``confirm_piks``
-(links only) — or when the state (``_provisional_links``,
-``_census_to_match``) is read mid-group, which plans the group as it
-stands and keeps that plan until another pass joins. Any other pass runs
-as a *group of one*: today's links checkpoint and anti-join checkpoint,
-no window — so ``collect_stats=True`` (every pass a group of one) keeps
-``PassStats`` exact, and a pass the bound does not prove (every pass of
-the RI-scale rungs and of ``tools/bench_linkage.py``'s 1x and 2x rungs)
-runs exactly its sequential queries.
+
+Each pass is sized from exact block statistics (``block_statistics``: its
+pairs, hottest key, and rows and string payload per side), computed once
+per census state: at module start and after each flush, the first pass
+that needs them runs ONE query for itself and for the module's later
+passes that may join a group, and the passes read them from a cache until
+the records still eligible change. Consecutive passes whose plan derives
+no knob from those statistics (no pin, no salt, and pairs that do not
+escalate the checkpoint storage level; no statistics collected, both knobs
+left to derivation) collect into a pending *group* that reads the census
+as it stood when the group began: one ``blocked_pairs`` branch per pass,
+ONE ``score_pairs`` over their union, and a window that keeps a pair when
+it clears its pass's threshold and its pass is the record's first linking
+pass (a group that holds a single pass needs no window: it keeps the pairs
+over the threshold). A group makes at most ``PASS_GROUP_MAX_PAIRS`` pairs,
+summed over its passes at the group's census, because its later passes
+score again the records its earlier passes linked; a pass that would take
+it past the cap starts a new group. A grouped pass builds only its branch
+(no job, and no re-planning of the passes before it). The group's scored
+union, window, links and anti-join are planned once, on read: when the
+group is materialised — once, when the next group or a pass outside any
+group runs (links + anti-join) or at ``confirm_piks`` (links only) — or
+when the state (``_provisional_links``, ``_census_to_match``) is read
+mid-group, which plans the group as it stands and keeps that plan until
+another pass joins. Any other pass runs as a *group of one*: today's links
+checkpoint and anti-join checkpoint, no window — so ``collect_stats=True``
+(every pass a group of one) keeps ``PassStats`` exact, and a pass whose
+statistics derive a knob (every pass of the RI-scale rungs) runs exactly
+its sequential queries.
 """
 
 from __future__ import annotations
 
 import functools
 from dataclasses import dataclass, field
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -59,17 +64,15 @@ from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from ..operators.blocking import (
-    KeyProfile,
+    BlockPass,
     PairStats,
+    block_statistics,
     blocked_pairs,
     derive_pair_pin,
     derive_pin_cap,
     derive_salt,
     estimate_pair_row_bytes,
-    estimate_pair_stats,
-    max_key_multiplicity,
     sql_ident,
-    string_payload_sql,
 )
 from ..operators.dedup import keep_best, max_per_group_with_ties
 from ..operators.joins import anti_join
@@ -120,37 +123,22 @@ def _switch_schema(schema: StructType) -> StructType:
     )
 
 
-#: input transformations that only rename census columns: the pair bound's
-#: census row count and widest-row payload still hold after them
-_ROW_PRESERVING = (None, switch_first_and_last_names)
-
-
-#: the most pairs a pass group is expected to make, summed over its
-#: passes (``PersonLinkageCascade._expected_pairs``). Grouping trades
-#: work for jobs: a pass in a group blocks and scores again the records
-#: the group's earlier passes linked, and the window shuffles every
-#: scored pair, while each pass it holds saves two checkpoint jobs. On a
-#: 4-core host (``local[4]``), in the worst shape measured
-#: (``tools/bench_linkage.py``'s cascade on sf0.01 data with the geokey
-#: moduli doubled: a geokey pass that links all but a few records, then a
-#: name-switch pass on the same key that scores them all again), a group
-#: expecting 165k pairs (7,500 census records) ran slower than sequential
-#: elimination in 6 of 6 alternating pairs of runs (median +4%) and one
-#: expecting 83k (3,750 records) ran faster in 5 of 6 (median -10%); the
-#: cap sits under both, half the first. The largest group of the
-#: ``pvs_cascade`` world expects ~50k. A proved pass that would take a
-#: group past the cap starts a new group.
+#: the most pairs a pass group makes, summed over its passes' exact
+#: pairs at the group's census (``PersonLinkageCascade._pass_stats``).
+#: Grouping trades work for jobs: a pass in a group blocks and scores
+#: again the records the group's earlier passes linked, and the window
+#: shuffles every scored pair, while each pass it holds saves two
+#: checkpoint jobs. On a 4-core host (``local[4]``), in the worst shape
+#: measured (``tools/bench_linkage.py``'s cascade on sf0.01 data with the
+#: geokey moduli doubled: a geokey pass that links all but a few records,
+#: then a name-switch pass on the same key that scores them all again), a
+#: group of 165,348 pairs (7,500 census records) ran slower than
+#: sequential elimination in 6 of 6 alternating pairs of runs (median +4%)
+#: and one of 82,546 (3,750 records) ran faster in 5 of 6 (median -10%);
+#: the cap sits under both, half the first. The largest group of the
+#: ``pvs_cascade`` world makes ~37k. A pass that would take a group past
+#: the cap starts a new group.
 PASS_GROUP_MAX_PAIRS = 80_000
-
-
-def _bound_applies(pass_cfg: "PassConfig") -> bool:
-    """Whether :meth:`PersonLinkageCascade._bound_rules_out_knobs` may
-    skip this pass's estimate: both knobs derived, census rows kept."""
-    return (
-        pass_cfg.num_partitions is None
-        and pass_cfg.salt_partitions is None
-        and pass_cfg.input_data_transformation in _ROW_PRESERVING
-    )
 
 
 def _sql_string(value: str) -> str:
@@ -330,7 +318,9 @@ class PassConfig:
     name: str
     blocking_columns: list[str]
     probability_threshold: float = 0.97
-    input_data_transformation: Callable[[DataFrame], DataFrame] | None = None
+    # the transposed-name passes: block and score the census with every
+    # first_*/last_* column pair swapped (switch_first_and_last_names)
+    switch_names: bool = False
     # splits hot blocking keys across n salt lanes (blocked_pairs
     # salt_partitions — the reference's salting_partitions,
     # 03_link_datasets.ipynb:1971-1975). None (default) = AUTO-DERIVE
@@ -377,9 +367,8 @@ class CascadeConfig:
 class PassPlan:
     """A pass's resolved physical knobs (see ``resolve_pass_plan``):
     the effective partition pin and salt for ``blocked_pairs``, plus the
-    K8 estimate that derived them (``stats`` is None when the estimate
-    wasn't needed — both knobs explicit, or the module's reference
-    profile proved both derive to None — and stats not requested)."""
+    exact block statistics that derived them (``stats`` is None only when
+    no knob is derived: both explicit, or ``auto_pin=False``)."""
 
     stats: PairStats | None
     num_partitions: int | None
@@ -388,15 +377,15 @@ class PassPlan:
 
 @dataclass
 class _PassGroup:
-    """Proved passes run as one scored union (see the module docstring),
-    or a group of one: an unproved pass's thresholded links, no
+    """Passes that derive no knob, run as one scored union (see the module
+    docstring), or a group of one: a pass's thresholded links, no
     branches. The frames built from the branches are planned on first
     read and dropped when another pass joins."""
 
     census: DataFrame  # the census to match when the group began
     links_before: DataFrame  # the module's links from earlier passes
     branches: list[DataFrame] = field(default_factory=list)
-    expected_pairs: float = 0.0  # the sum of its passes' (_expected_pairs)
+    pairs: int = 0  # the sum of its passes' pairs at ``census``
     links: DataFrame | None = None  # the group's links (lazy)
     provisional: DataFrame | None = None  # links_before + links
     census_left: DataFrame | None = None  # census minus the linked records
@@ -438,25 +427,22 @@ class PersonLinkageCascade:
                      matching columns
     dates_of_death:  (pik, date_of_death DATE) — deceased links dropped at
                      confirm (reference 03:2146-2169)
-    auto_pin:        derive a ``num_partitions`` pin for passes that
-                     leave it None (default True): the K8 pair estimate
-                     (already computed when ``collect_stats``) feeds
-                     ``derive_pair_pin``, so a pass whose pair output
-                     explodes relative to its input gets its reduce
-                     stage spread even though AQE — which sizes by
-                     shuffle INPUT bytes — cannot see the explosion
-                     (the r7 932s-serial regime, SKEW_BENCH_r07).
-                     Passes below the explosion gate keep their exact
-                     unpinned plan. With ``collect_stats=False`` a pass
-                     skips the estimate when an upper bound from one
-                     reference profile per module already rules out
-                     every derived knob (see ``resolve_pass_plan``), and
-                     such passes run as pass GROUPS (module docstring):
-                     consecutive proved passes, up to
-                     ``PASS_GROUP_MAX_PAIRS`` expected pairs, share one
-                     scored union and one materialisation.
-                     ``auto_pin=False`` forms no groups: every pass is a
-                     group of one.
+    auto_pin:        derive a ``num_partitions`` pin and a salt for passes
+                     that leave them None (default True): the pass's
+                     exact block statistics (one query per census state,
+                     see ``resolve_pass_plan``) feed ``derive_pair_pin``,
+                     so a pass whose pair output explodes relative to its
+                     input gets its reduce stage spread even though AQE —
+                     which sizes by shuffle INPUT bytes — cannot see the
+                     explosion (the r7 932s-serial regime,
+                     SKEW_BENCH_r07), and ``derive_salt``. Passes below
+                     the gates keep their exact unpinned plan. With
+                     ``collect_stats=False`` such passes run as pass
+                     GROUPS (module docstring): consecutive passes that
+                     derive no knob, up to ``PASS_GROUP_MAX_PAIRS``
+                     pairs, share one scored union and one
+                     materialisation. ``auto_pin=False`` forms no groups:
+                     every pass is a group of one.
     checkpoint:      'local' (default) truncates lineage with
                      localCheckpoint at every group boundary — after a
                      group of one, its links and the records left; after
@@ -515,11 +501,9 @@ class PersonLinkageCascade:
         self._ckpt_bytes = 0  # largest rows x row_bytes bound fed to it
         self._row_bytes = estimate_checkpoint_row_bytes(LINKS_FRAME_TEMPLATE)
         self._heap_bytes: int | None = None
-        # (rows, largest per-row string payload) of the census, and the
-        # current module's reference profile (see resolve_pass_plan)
-        self._census_profile: tuple[int, int] | None = None
-        self._key_profile: KeyProfile | None = None
-        self._key_profile_resolved = False
+        # the passes' block statistics at the current census state, by
+        # _stats_key (see _pass_stats)
+        self._block_stats: dict[tuple, PairStats] = {}
         self.auto_pin = auto_pin
         self.spark = spark
         # a cache the caller made stays the caller's (release() keeps it)
@@ -540,7 +524,7 @@ class PersonLinkageCascade:
         self._links_flushed: DataFrame | None = None
         self._reference_file: DataFrame | None = None
         self._group: _PassGroup | None = None
-        # read once per cascade / per module for the pass bound's schemas
+        # read once per cascade / per module for the passes' schemas
         self._census_schema: StructType | None = None
         self._reference_schema: StructType | None = None
 
@@ -573,21 +557,9 @@ class PersonLinkageCascade:
             return df.persist(StorageLevel.MEMORY_AND_DISK)
         return df  # 'off'
 
-    def _census_rows_and_payload(self) -> tuple[int, int]:
-        """The census row count and its largest per-row string payload
-        (over every string column, so it bounds any pass's projection,
-        name-switched or not), from ONE aggregation over the persisted
-        census, run once. It is the checkpoint gate's census count."""
-        if self._census_profile is None:
-            row = self.census.selectExpr(
-                "count(1)", f"max({string_payload_sql(self.census)})"
-            ).first()
-            self._census_profile = (int(row[0]), int(row[1] or 0))
-        return self._census_profile
-
     def _derives_storage(self) -> bool:
         """Whether the checkpoint storage level is auto-derived (and so
-        may escalate on a pass's pair bound)."""
+        may escalate on a pass's pairs)."""
         return (
             self.checkpoint == "local"  # only 'local' consults the level
             and self.checkpoint_storage_level is None
@@ -607,7 +579,7 @@ class PersonLinkageCascade:
         else:
             from ..session import executor_heap_bytes
 
-            self._ckpt_rows = self._census_rows_and_payload()[0]
+            self._ckpt_rows = self.census.count()
             self._heap_bytes = executor_heap_bytes(self.spark)
             # initial width: the links-frame template (set in __init__ —
             # the frame whose unroll actually OOM'd the 1024x bracket; a
@@ -658,8 +630,7 @@ class PersonLinkageCascade:
         self._group = None
         self._reference_file = self.reference_files[cfg.reference_file_name]
         self._reference_schema = None
-        self._key_profile = None
-        self._key_profile_resolved = False
+        self._block_stats = {}
         # exclude raw input records already PIKed by earlier modules (J3)
         self._census_flushed = self._truncate(
             anti_join(
@@ -712,8 +683,8 @@ class PersonLinkageCascade:
         to match), reference side and blocking keys."""
         columns_needed = self._columns_needed(pass_cfg)
         census_side = self._census_to_match if census is None else census
-        if pass_cfg.input_data_transformation is not None:
-            census_side = pass_cfg.input_data_transformation(census_side)
+        if pass_cfg.switch_names:
+            census_side = switch_first_and_last_names(census_side)
         census_side = census_side.select(
             *[c for c in columns_needed if c in census_side.columns],
             "record_id_raw_input_file",
@@ -728,15 +699,14 @@ class PersonLinkageCascade:
     ) -> tuple[StructType, StructType, list[str]]:
         """The schemas of :meth:`_pass_sides`' two sides, worked out from
         the census' schema (read once per cascade) and the reference's
-        (once per module) without building a frame. Only for a pass whose
-        input transformation is in :data:`_ROW_PRESERVING`: the name
-        switch is a rename of the schema."""
+        (once per module) without building a frame: the name switch is a
+        rename of the schema."""
         if self._census_schema is None:
             self._census_schema = self.census.schema
         if self._reference_schema is None:
             self._reference_schema = self._reference_file.schema
         census = self._census_schema
-        if pass_cfg.input_data_transformation is switch_first_and_last_names:
+        if pass_cfg.switch_names:
             census = _switch_schema(census)
         columns_needed = self._columns_needed(pass_cfg)
 
@@ -832,139 +802,106 @@ class PersonLinkageCascade:
             f"{pass_name_sql} AS pass_name",
         ]
 
-    def resolve_pass_plan(
-        self, pass_cfg: PassConfig, force_estimate: bool = False
-    ) -> PassPlan:
+    def resolve_pass_plan(self, pass_cfg: PassConfig) -> PassPlan:
         """The pass's effective physical knobs in ONE place (r9 advice:
         the pin and the pass used to duplicate this derivation — two
-        copies that could drift, and an auditing caller paid the
-        estimate job twice).
+        copies that could drift).
 
         Each knob is the explicit config value, else (``auto_pin``) the
-        one derived from the K8 estimate: :func:`derive_pair_pin` for
-        the partition pin (a pair-exploding pass can no longer silently
-        re-enter the one-reduce-task regime because its author forgot
-        the knob — SKEW_BENCH_r07: salt WITHOUT the pin measured
-        useless) and :func:`derive_salt` for the salt (the OTHER half of
-        that regime — the pin spreads distinct keys but cannot split ONE
-        monster key; SKEW_BENCH_r08's auto row still hard-coded salt).
-        Runs the estimate's aggregation only when a knob needs deriving
-        (or ``force_estimate`` — stats collection reuses the same job);
-        with both knobs explicit it is free.
-
-        Without stats, a pass whose knobs are both derived skips the
-        estimate when an upper bound proves every derivation — pin,
-        salt and the checkpoint-storage escalation — returns None
-        (:meth:`_bound_rules_out_knobs`); the plan is then the one the
-        estimate would have derived."""
+        one derived from the pass's exact block statistics
+        (:meth:`_pass_stats`, at the census the pass reads):
+        :func:`derive_pair_pin` for the partition pin (a pair-exploding
+        pass can no longer silently re-enter the one-reduce-task regime
+        because its author forgot the knob — SKEW_BENCH_r07: salt
+        WITHOUT the pin measured useless) and :func:`derive_salt` for the
+        salt (the OTHER half of that regime — the pin spreads distinct
+        keys but cannot split ONE monster key; SKEW_BENCH_r08's auto row
+        still hard-coded salt). Both size from the pass's pair-row schema
+        (r10) and the measured string widths of its statistics (r11).
+        With both knobs explicit, or ``auto_pin=False``, it reads no
+        statistics."""
         pin = pass_cfg.num_partitions
         salt = pass_cfg.salt_partitions
-        derive = self.auto_pin and (pin is None or salt is None)
-        if not (derive or force_estimate):
+        if not (self.auto_pin and (pin is None or salt is None)):
             return PassPlan(None, pin, salt)
-        if not force_estimate and self._bound_rules_out_knobs(pass_cfg):
-            return PassPlan(None, None, None)
-        census_side, ref_side, block_on = self._pass_sides(pass_cfg)
-        stats = estimate_pair_stats(census_side, ref_side, block_on)
-        if self.auto_pin:
-            # size the derivations from the pass's ACTUAL pair-row schema
-            # (r10 — the r9 constant 256 under-pinned wide passes and
-            # over-pinned narrow ones; schema inspection is free) and the
-            # MEASURED string widths the estimate job just aggregated
-            # (r11 — address-heavy passes beat the 16-byte assumption)
-            row_bytes = estimate_pair_row_bytes(
-                census_side, ref_side, block_on, stats=stats
+        stats = self._pass_stats(pass_cfg)
+        row_bytes = estimate_pair_row_bytes(*self._pass_schemas(pass_cfg), stats=stats)
+        if pin is None:
+            pin = derive_pair_pin(
+                stats.pairs,
+                stats.n_left,
+                stats.n_right,
+                shuffle_partitions(self.spark),
+                pair_row_bytes=row_bytes,
+                # the cap scales with the fleet (r11): 4096 on this box,
+                # 32x slots on a real cluster; conf makes the dyn-alloc
+                # max fleet win over live parallelism (r12)
+                cap=derive_pin_cap(
+                    self.spark.sparkContext.defaultParallelism, conf=self.spark.conf
+                ),
             )
-            if pin is None:
-                pin = self._derive_pin(
-                    stats.pairs, stats.n_left, stats.n_right, row_bytes
-                )
-            if salt is None:
-                salt = derive_salt(stats.max_key_pairs, pair_row_bytes=row_bytes)
+        if salt is None:
+            salt = derive_salt(stats.max_key_pairs, pair_row_bytes=row_bytes)
         return PassPlan(stats, pin, salt)
 
-    def _derive_pin(
-        self, pairs: int, n_left: int, n_right: int, row_bytes: int
-    ) -> int | None:
-        return derive_pair_pin(
-            pairs,
-            n_left,
-            n_right,
-            shuffle_partitions(self.spark),
-            pair_row_bytes=row_bytes,
-            # the cap scales with the fleet (r11): 4096 on this box, 32x
-            # slots on a real cluster; conf makes the dyn-alloc max fleet
-            # win over live parallelism (r12)
-            cap=derive_pin_cap(
-                self.spark.sparkContext.defaultParallelism, conf=self.spark.conf
-            ),
+    def _may_group(self, pass_cfg: PassConfig) -> bool:
+        """Whether the pass may run in a group: no statistics collected
+        and both knobs left to derivation (its plan decides the rest)."""
+        return (
+            not self.collect_stats
+            and self.auto_pin
+            and pass_cfg.num_partitions is None
+            and pass_cfg.salt_partitions is None
         )
 
-    def _bound_rules_out_knobs(self, pass_cfg: PassConfig) -> bool:
-        """True when the pass's exact estimate cannot change its plan.
+    def _stats_key(self, pass_cfg: PassConfig) -> tuple:
+        # the module fixes the sides' other columns
+        return self._block_on(pass_cfg), pass_cfg.switch_names
 
-        The bound: with ``r`` the largest multiplicity of any non-NULL
-        value of the pass's keys on the reference side, the pass's pairs
-        and its hottest key's pairs are both at most ``n_census × r``
-        (every census row meets at most ``r`` reference rows). The pair
-        row is at most :func:`estimate_pair_row_bytes` of one pair of the
-        widest rows (each side's largest per-row string payload). Every
-        derivation is monotone in pairs and row width, so if pin, salt
-        and storage all derive None at the bound, they derive None at
-        the estimate too — the thresholds stay in the derive functions.
+    def _pass_stats(self, pass_cfg: PassConfig) -> PairStats:
+        """The pass's exact block statistics at the current census state
+        (the records still eligible at module start or the last flush,
+        which a pending group reads). On a miss ONE
+        :func:`block_statistics` query computes them for this pass and,
+        when it may join a group, for the module's later passes that may
+        too: they read the same census until a group of one or a full
+        group flushes it."""
+        key = self._stats_key(pass_cfg)
+        if key not in self._block_stats:
+            passes = [pass_cfg]
+            if self._may_group(pass_cfg):
+                config = self._module.passes
+                if pass_cfg in config:
+                    later = config[config.index(pass_cfg) + 1 :]
+                    passes += [p for p in later if self._may_group(p)]
+            stats = block_statistics(
+                self._census_flushed,
+                self._reference_file,
+                [self._block_pass(p) for p in passes],
+            )
+            self._block_stats.update(zip(map(self._stats_key, passes), stats))
+        return self._block_stats[key]
 
-        Applies only without stats, to a pass of the current module's
-        config whose knobs are both derived and whose input
-        transformation keeps the census' rows and string values (none,
-        or the name switch); anything else keeps the exact estimate."""
-        if (
-            self.collect_stats
-            or not _bound_applies(pass_cfg)
-            or pass_cfg not in self._module.passes
-        ):
-            return False
-        profile = self._module_key_profile()
-        if profile is None:
-            return False
-        max_r = profile.max_multiplicity[self._block_on(pass_cfg)]
-        return self._knobs_none_at(pass_cfg, max_r, profile.max_str_payload)
+    def _block_pass(self, pass_cfg: PassConfig) -> BlockPass:
+        """The pass as :func:`block_statistics` reads it from the census
+        and the reference: its sides' columns (:meth:`_pass_schemas`),
+        each read from the column of that name, or under the name switch
+        from the transposed one."""
+        census, ref, keys = self._pass_schemas(pass_cfg)
+        switched = (
+            _switched_names(self._census_schema.names) if pass_cfg.switch_names else {}
+        )
+        return BlockPass(
+            tuple(keys),
+            {c: switched.get(c, c) for c in census.names},
+            {c: c for c in ref.names},
+        )
 
-    def _expected_pairs(self, pass_cfg: PassConfig) -> float:
-        """The pairs a proved pass makes when the census' keys spread like
-        the reference's: census rows × the reference's mean multiplicity
-        of the pass's keys (from the same profile as the bound)."""
-        mean_r = self._key_profile.mean_multiplicity[self._block_on(pass_cfg)]
-        return self._census_rows_and_payload()[0] * mean_r
-
-    def _module_key_profile(self) -> KeyProfile | None:
-        """The current module's reference profile — ONE aggregation for
-        every derived-knob pass (:func:`max_key_multiplicity`) — or None
-        when no pass could pass the gate even at ``r = 1`` with an empty
-        reference payload (a census too large for any bound; the RI-scale
-        rungs), in which case the query is not run."""
-        if not self._key_profile_resolved:
-            gated = [p for p in self._module.passes if _bound_applies(p)]
-            if any(self._knobs_none_at(p, 1, 0) for p in gated):
-                self._key_profile = max_key_multiplicity(
-                    self._reference_file, [self._block_on(p) for p in gated]
-                )
-            self._key_profile_resolved = True
-        return self._key_profile
-
-    def _knobs_none_at(
-        self, pass_cfg: PassConfig, max_r: int, ref_payload: int
-    ) -> bool:
-        """Whether pin, salt and storage all derive None for a pass of
-        at most ``n_census × max_r`` pairs whose rows carry at most the
-        census' largest and ``ref_payload`` string bytes per side."""
-        n_census, census_payload = self._census_rows_and_payload()
-        bound = n_census * max_r
-        # one pair of the widest rows: no pair row of the pass is wider
-        widest = PairStats(bound, 1, 1, bound, census_payload, ref_payload)
-        row_bytes = estimate_pair_row_bytes(*self._pass_schemas(pass_cfg), stats=widest)
-        if self._derive_pin(bound, 0, 0, row_bytes) is not None:
-            return False
-        if derive_salt(bound, pair_row_bytes=row_bytes) is not None:
+    def _groupable(self, plan: PassPlan) -> bool:
+        """Whether a plan lets its pass run in a group: no pin, no salt,
+        and pairs that leave the derived checkpoint storage level as it
+        is (they bound the group's links frame, which is checkpointed)."""
+        if plan.num_partitions is not None or plan.salt_partitions is not None:
             return False
         if not self._derives_storage():
             return True
@@ -973,39 +910,45 @@ class PersonLinkageCascade:
         # width, pinned to build_pass_links' schema by a test
         return (
             derive_checkpoint_storage(
-                bound, self._heap_bytes, row_bytes=self._row_bytes
+                plan.stats.pairs, self._heap_bytes, row_bytes=self._row_bytes
             )
             is None
         )
 
     def run_matching_pass(self, pass_cfg: PassConfig) -> None:
-        """Run one pass. A pass whose plan is proved
-        (:meth:`_bound_rules_out_knobs`) joins the pending group while the
-        group's expected pairs stay within :data:`PASS_GROUP_MAX_PAIRS`,
-        else it starts a new group; no job runs. Any other pass flushes
-        the group and runs as a group of one (see the module docstring)."""
+        """Run one pass. A pass that may group and whose plan derives no
+        knob (:meth:`_groupable`) joins the pending group while the
+        group's pairs stay within :data:`PASS_GROUP_MAX_PAIRS`, else it
+        flushes the group and starts a new one; no job runs but, at a new
+        census state, the statistics query. Any other pass flushes the
+        group and runs as a group of one (see the module docstring)."""
         assert self._module is not None, "start_module first"
-        if self.auto_pin and self._bound_rules_out_knobs(pass_cfg):
-            pairs = self._expected_pairs(pass_cfg)
+        if self._may_group(pass_cfg):
+            plan = self.resolve_pass_plan(pass_cfg)
             g = self._group
-            if g is not None and g.expected_pairs + pairs > PASS_GROUP_MAX_PAIRS:
+            if g is not None and not (
+                self._groupable(plan)
+                and g.pairs + plan.stats.pairs <= PASS_GROUP_MAX_PAIRS
+            ):
                 self._flush_group()
-            self._add_to_group(pass_cfg, pairs)
-            return
+                plan = self.resolve_pass_plan(pass_cfg)
+            if self._groupable(plan):
+                self._add_to_group(pass_cfg, plan.stats.pairs)
+                return
         self._flush_group()
         cfg = self._module
-        plan = self.resolve_pass_plan(pass_cfg, force_estimate=self.collect_stats)
-        n_pairs = plan.stats.pairs if plan.stats is not None else -1
+        plan = self.resolve_pass_plan(pass_cfg)
+        stats = self._pass_stats(pass_cfg) if self.collect_stats else plan.stats
         links_plan = self.build_pass_links(
             pass_cfg,
             num_partitions=plan.num_partitions,
             salt_partitions=plan.salt_partitions,
         )
         # escalate the checkpoint storage gate BEFORE this pass's links
-        # frame is checkpointed — the pair estimate bounds its rows, and
+        # frame is checkpointed — the pass's pairs bound its rows, and
         # the lazy plan's ACTUAL schema sizes its row width (r11)
         self._note_frame_rows(
-            plan.stats.pairs if plan.stats is not None else None,
+            stats.pairs if stats is not None else None,
             row_bytes=estimate_checkpoint_row_bytes(links_plan.schema),
         )
         self._group = _PassGroup(
@@ -1020,26 +963,25 @@ class PersonLinkageCascade:
                 PassStats(
                     cfg.name,
                     pass_cfg.name,
-                    n_pairs,
+                    stats.pairs,
                     new_links.count(),
                     self._census_to_match.count(),
                 )
             )
 
-    def _add_to_group(self, pass_cfg: PassConfig, pairs: float) -> None:
-        """Add a proved pass (``pairs`` expected) to the pending group: only
-        its ``blocked_pairs`` branch is built. The group's scored union,
-        window, links and anti-join are planned once, when read
-        (:meth:`_group_links`, ``_provisional_links``, ``_census_to_match``)
-        or flushed, so a group of k passes is planned once, not k times.
-        No knob needs deriving: the bound proved pin, salt and the
-        checkpoint storage level all None, and it bounds the group's links
-        frame too (a record keeps links of one pass only, at most that
-        pass's ``r``)."""
+    def _add_to_group(self, pass_cfg: PassConfig, pairs: int) -> None:
+        """Add a pass (``pairs`` at the group's census) to the pending
+        group: only its ``blocked_pairs`` branch is built. The group's
+        scored union, window, links and anti-join are planned once, when
+        read (:meth:`_group_links`, ``_provisional_links``,
+        ``_census_to_match``) or flushed, so a group of k passes is
+        planned once, not k times. No knob is needed: the pass's
+        statistics derived pin, salt and the checkpoint storage level all
+        None, and its pairs bound its links in the group."""
         g = self._group
         if g is None:
             g = self._group = _PassGroup(self._census_to_match, self._provisional_links)
-        g.expected_pairs += pairs
+        g.pairs += pairs
         census_side, ref_side, block_on = self._pass_sides(pass_cfg, g.census)
         g.branches.append(
             blocked_pairs(census_side, ref_side, block_on).selectExpr(
@@ -1097,6 +1039,7 @@ class PersonLinkageCascade:
             self._census_flushed = self._truncate(
                 anti_join(g.census, _linked_records(links), on="record_id")
             )
+            self._block_stats = {}  # a new census state
         return links
 
     def confirm_piks(self) -> DataFrame:
@@ -1254,7 +1197,7 @@ def default_cascade_config(salt_hot_passes: bool = False) -> CascadeConfig:
                     PassConfig(
                         "geokey name switch",
                         ["geokey_for_blocking"],
-                        input_data_transformation=switch_first_and_last_names,
+                        switch_names=True,
                         salt_partitions=salt,
                     ),
                     PassConfig(
@@ -1265,7 +1208,7 @@ def default_cascade_config(salt_hot_passes: bool = False) -> CascadeConfig:
                     PassConfig(
                         "street address name switch",
                         ["street_number_for_blocking", "street_name_for_blocking_soundex"],
-                        input_data_transformation=switch_first_and_last_names,
+                        switch_names=True,
                         salt_partitions=salt,
                     ),
                     PassConfig(
@@ -1319,7 +1262,7 @@ def default_cascade_config(salt_hot_passes: bool = False) -> CascadeConfig:
                     PassConfig(
                         "name_1 switched",
                         ["first_name_1", "last_name_1"],
-                        input_data_transformation=switch_first_and_last_names,
+                        switch_names=True,
                     ),
                     PassConfig("name_3", ["first_name_3", "last_name_3"]),
                     PassConfig(

@@ -22,7 +22,6 @@ from person_linkage_case_study_spark.plans.cascade import (
     CascadeConfig,
     ModuleConfig,
     PassConfig,
-    PassPlan,
     PersonLinkageCascade,
     pass_group_plan_problems,
     switch_first_and_last_names,
@@ -850,34 +849,27 @@ def test_unknown_checkpoint_mode_rejected(spark, fixture):
 
 def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
     """run_full_pvs_cascade (default 4-module / 15-pass config) on the
-    hand-built fixture, counting the exact pair estimates the passes run;
-    ``on_pass(cascade, pass_cfg)`` is called before each pass, outside
-    the count."""
+    hand-built fixture, counting the block-statistics queries the cascade
+    runs; ``on_pass(cascade, pass_cfg)`` is called before each pass."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
     from person_linkage_case_study_spark.plans.pipeline import run_full_pvs_cascade
 
     census, geobase, name_dob, fake_names, dod = fixture
     calls = []
-    in_pass = []
-    real_estimate = cascade_mod.estimate_pair_stats
+    real_stats = cascade_mod.block_statistics
     real_pass = PersonLinkageCascade.run_matching_pass
 
-    def estimate(*a, **k):
-        if in_pass:
-            calls.append(1)
-        return real_estimate(*a, **k)
+    def stats(*a, **k):
+        calls.append(1)
+        return real_stats(*a, **k)
 
     def run_pass(self, pass_cfg):
         if on_pass is not None:
             on_pass(self, pass_cfg)
-        in_pass.append(1)
-        try:
-            return real_pass(self, pass_cfg)
-        finally:
-            in_pass.pop()
+        return real_pass(self, pass_cfg)
 
     mp = pytest.MonkeyPatch()
-    mp.setattr(cascade_mod, "estimate_pair_stats", estimate)
+    mp.setattr(cascade_mod, "block_statistics", stats)
     mp.setattr(PersonLinkageCascade, "run_matching_pass", run_pass)
     try:
         confirmed, _, _ = run_full_pvs_cascade(
@@ -899,42 +891,44 @@ def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
     return links, len(calls)
 
 
-def test_bound_gate_skips_estimates_without_changing_plans(spark, fixture):
-    """Without stats, every pass of the default cascade on a small world
-    is ruled out by its module's reference profile: no exact pair
-    estimate runs, each skipped pass's knobs equal those the forced
-    estimate derives, and the links match a stats-on run (which still
-    estimates all 15 passes)."""
+def test_one_stats_query_per_group_start(spark, fixture):
+    """Without stats, the default cascade on a small world runs one
+    block-statistics query per group start (each module is one group),
+    not one per pass. Each pass's statistics equal estimate_pair_stats
+    over the pass's own sides at the census it reads, so its plan is the
+    one they derive (no knob), and the links match a stats-on run's
+    (every pass a group of one, with a query of its own)."""
+    from person_linkage_case_study_spark.operators.blocking import (
+        estimate_pair_stats,
+    )
+
     plans = []
 
     def compare(cascade, pass_cfg):
-        gated = cascade.resolve_pass_plan(pass_cfg)
-        exact = cascade.resolve_pass_plan(pass_cfg, force_estimate=True)
-        plans.append((pass_cfg.name, gated, exact))
+        plan = cascade.resolve_pass_plan(pass_cfg)
+        own = estimate_pair_stats(
+            *cascade._pass_sides(pass_cfg, cascade._census_flushed)
+        )
+        plans.append((pass_cfg.name, plan, own))
 
     links_off, n_off = _run_default_cascade(spark, fixture, False, compare)
-    assert n_off == 0
+    assert n_off == 4
     assert len(plans) == 15
-    for name, gated, exact in plans:
-        assert gated.stats is None, name
-        assert exact.stats is not None, name
-        assert (gated.num_partitions, gated.salt_partitions) == (
-            exact.num_partitions,
-            exact.salt_partitions,
-        ), name
+    for name, plan, own in plans:
+        assert plan.stats == own, name
+        assert (plan.num_partitions, plan.salt_partitions) == (None, None), name
     links_on, n_on = _run_default_cascade(spark, fixture, True)
     assert n_on == 15
     assert links_off == links_on and links_on
 
 
-def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
-    """The gate only skips estimates it can prove irrelevant: the hot-key
-    pass of test_auto_pin_resolution, now in the module's config and run
-    without stats, still gets its estimate and derives pin =
-    shuffle.partitions and salt = 5; the spread pass (one reference row
-    per key) is skipped with the same (None, None) plan. A census too
-    large for the pre-check (no bound at r = 1 passes) runs no profile
-    query, and a pass outside the module's config keeps its estimate."""
+def test_derived_knobs_run_as_group_of_one(spark, monkeypatch):
+    """A pass whose statistics derive a knob runs as a group of one with
+    those knobs: the hot-key pass of test_auto_pin_resolution, in the
+    module's config and run without stats, reads one statistics query,
+    blocks with pin = shuffle.partitions and salt = 5 and leaves no group
+    pending. The spread pass (one reference row per key) derives neither
+    and starts a group."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
 
     geokey = "B1" + "X" * 58
@@ -958,18 +952,25 @@ def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
         "geokey_for_blocking", F.regexp_replace("record_id", "r", "c")
     )
     hot_pass = PassConfig("p", ["geokey_for_blocking"], 0.9)
-    profiles = []
-    real_profile = cascade_mod.max_key_multiplicity
+    queries, blocked = [], []
+    real_stats = cascade_mod.block_statistics
+    real_blocked = cascade_mod.blocked_pairs
+    monkeypatch.setattr(
+        cascade_mod, "block_statistics",
+        lambda *a, **k: queries.append(1) or real_stats(*a, **k),
+    )
+    monkeypatch.setattr(
+        cascade_mod, "blocked_pairs",
+        lambda *a, **k: blocked.append(
+            (k.get("num_partitions"), k.get("salt_partitions"))
+        ) or real_blocked(*a, **k),
+    )
 
-    def profile(*a, **k):
-        profiles.append(1)
-        return real_profile(*a, **k)
-
-    monkeypatch.setattr(cascade_mod, "max_key_multiplicity", profile)
-
-    def mk(census_df, ref_df):
+    def run(census_df, ref_df):
+        # checkpoints off: the pass's plan is built, not run
         c = PersonLinkageCascade(
-            spark, census_df, {"ref": ref_df}, make_model(), collect_stats=False
+            spark, census_df, {"ref": ref_df}, make_model(),
+            collect_stats=False, checkpoint="off",
         )
         c.start_module(
             ModuleConfig(
@@ -980,32 +981,17 @@ def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
                 passes=[hot_pass],
             )
         )
+        c.run_matching_pass(hot_pass)
         return c
 
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    plan = mk(census, ref).resolve_pass_plan(hot_pass)
-    assert plan.stats is not None and plan.stats.max_key_pairs == 1024 * 1024
-    assert (plan.num_partitions, plan.salt_partitions) == (shuffle_parts, 5)
-    assert len(profiles) == 1  # 1,024 census rows pass the pre-check
-
-    spread = mk(spread_census, spread_ref)
-    assert spread.resolve_pass_plan(hot_pass) == PassPlan(None, None, None)
-    assert len(profiles) == 2
-    forced = spread.resolve_pass_plan(hot_pass, force_estimate=True)
-    assert forced.stats is not None
-    assert (forced.num_partitions, forced.salt_partitions) == (None, None)
-    # outside the module's config: exact estimate, same knobs
-    other = PassConfig("q", ["geokey_for_blocking"], 0.5)
-    assert spread.resolve_pass_plan(other).stats is not None
-    assert len(profiles) == 2
-
-    # a census past the pre-check (the RI-scale rungs' ~1.2M rows: at
-    # r = 1 its bound already needs a salt): no profile query, and the
-    # pass falls back to the exact estimate
-    big = mk(spread_census, spread_ref)
-    big._census_profile = (1_200_000, 0)
-    assert big.resolve_pass_plan(hot_pass).stats is not None
-    assert len(profiles) == 2
+    hot = run(census, ref)
+    assert len(queries) == 1
+    assert hot._group is None
+    assert blocked == [(shuffle_parts, 5)]
+    spread = run(spread_census, spread_ref)
+    assert len(queries) == 2
+    assert spread._group is not None and blocked[1:] == [(None, None)]
 
 
 # -- pass groups --------------------------------------------------------------
@@ -1019,10 +1005,13 @@ GEO_MATCHING = [
 GEOKEY_STRICT = PassConfig("geokey", ["geokey_for_blocking"], 0.99995)
 NAME_1_SWITCHED = PassConfig(
     "name_1 switched", ["first_name_1", "last_name_1"], 0.0,
-    input_data_transformation=switch_first_and_last_names,
+    switch_names=True,
 )
 BIRTH_YEAR = PassConfig("birth year", ["year_of_birth"], 0.5)
-OUTSIDE = PassConfig("name_2 outside", ["first_name_2", "last_name_2"], 0.99)
+# an explicit knob (salt 1: none) keeps it a group of one
+OUTSIDE = PassConfig(
+    "name_2 outside", ["first_name_2", "last_name_2"], 0.99, salt_partitions=1
+)
 GEOKEY_LOOSE = PassConfig("geokey loose", ["geokey_for_blocking"], 0.0)
 GROUP_MODULE = ModuleConfig(
     name="geosearch",
@@ -1082,24 +1071,42 @@ def _link_rows(df):
 @pytest.fixture(scope="module")
 def group_run(spark, group_inputs):
     """GROUP_MODULE without stats, with the Spark jobs run so far, the
-    links frame's schema and its optimized plan after every pass."""
+    jobs of each statistics query so far, the links frame's schema and its
+    optimized plan after every pass."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
     sc = spark.sparkContext
     group_id = "test-pass-group"
     after = []
+    query_jobs = []
+    real_stats = cascade_mod.block_statistics
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group_id))
+
+    def stats(*a, **k):
+        before = jobs()
+        out = real_stats(*a, **k)
+        query_jobs.append(jobs() - before)
+        return out
 
     def snapshot(cascade, pass_cfg):
         links = cascade._provisional_links
         after.append({
-            "jobs": len(sc.statusTracker().getJobIdsForGroup(group_id)),
+            "jobs": jobs(),
+            "queries": list(query_jobs),
             "schema": [(f.name, f.dataType.typeName()) for f in links.schema.fields],
             "plan": links._jdf.queryExecution().optimizedPlan().treeString(),
             "group": getattr(cascade, "_group", None) is not None,
         })
 
+    mp = pytest.MonkeyPatch()
+    mp.setattr(cascade_mod, "block_statistics", stats)
     sc.setJobGroup(group_id, "pass group")
     try:
         cascade = _run_group_module(spark, group_inputs, False, snapshot)
     finally:
+        mp.undo()
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
@@ -1143,15 +1150,20 @@ def test_pass_group_links_equal_sequential(spark, group_inputs, group_run):
 
 
 def test_pass_group_runs_one_materialisation(group_run):
-    """Proved passes after a module's first (which runs the reference
-    profile) start no Spark job; the pass outside the config flushes the
-    group and runs as a group of one; the next proved pass starts a new
-    group."""
+    """The module's first pass runs the statistics query (for itself and
+    the later passes that may group); the next two passes join its group
+    and start no Spark job; the pass outside the config (an explicit
+    salt) flushes the group and runs as a group of one, with a query of
+    its own at the census the flush left; the next pass starts a new
+    group at a new census state, so it runs one statistics query and no
+    other job."""
     _, after = group_run
     jobs = [a["jobs"] for a in after]
+    queries = [a["queries"] for a in after]
+    assert [len(q) for q in queries] == [1, 1, 1, 2, 3]
     assert jobs[1] == jobs[2] == jobs[0]
     assert jobs[3] > jobs[2]
-    assert jobs[4] == jobs[3]
+    assert jobs[4] - jobs[3] == queries[4][-1] > 0
     assert [a["group"] for a in after] == [True, True, True, False, True]
 
 
@@ -1211,8 +1223,8 @@ def test_empty_seeds_prune_from_plans(spark, group_inputs, group_run):
 
 def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,
                                           monkeypatch):
-    """A proved pass that would take its group past PASS_GROUP_MAX_PAIRS
-    starts a new group; a group holding a single proved pass keeps the
+    """A pass that would take its group past PASS_GROUP_MAX_PAIRS starts a
+    new group; a group holding a single pass keeps the
     pairs over its threshold without a window; the links do not change."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
 
@@ -1237,7 +1249,7 @@ def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,
 def test_pass_group_plans_once_when_read(spark, group_inputs, group_run,
                                          monkeypatch):
     """Without reads between passes, a group is planned once: GROUP_RUN_ORDER
-    makes three groups (three proved passes, the pass outside the config
+    makes three groups (three knob-free passes, the pass outside the config
     as a group of one, the loose geokey pass), so ``score_pairs`` runs
     three times, not once per pass, and the links are group_run's."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
@@ -1255,11 +1267,46 @@ def test_pass_group_plans_once_when_read(spark, group_inputs, group_run,
     assert links == grouped
 
 
-def test_pass_bound_builds_no_frame(spark, group_inputs, monkeypatch):
-    """The pass bound reads its sides' schemas from the census' and the
-    reference's, read once: it builds no pass side and no blocked join,
-    and the schemas it works out (the name switch a rename) are the ones
-    the pass's frames have."""
+def test_stats_query_covers_the_passes_that_may_group(spark, group_inputs,
+                                                      monkeypatch):
+    """On a miss, the statistics query covers the asking pass and the
+    module's later passes that may join a group (OUTSIDE's explicit knob
+    keeps it out, so it queries on its own). A pass that cannot group, as
+    every pass with stats on, queries only itself: the census changes
+    right after it."""
+    import dataclasses
+
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    census, geobase = group_inputs
+    covered = []
+    real_stats = cascade_mod.block_statistics
+    monkeypatch.setattr(
+        cascade_mod, "block_statistics",
+        lambda left, right, passes: covered.append(len(passes))
+        or real_stats(left, right, passes),
+    )
+    module = dataclasses.replace(
+        GROUP_MODULE, passes=[GEOKEY_STRICT, OUTSIDE, NAME_1_SWITCHED, BIRTH_YEAR]
+    )
+    for collect_stats in (False, True):
+        cascade = PersonLinkageCascade(
+            spark, census, {"geobase_reference_file": geobase}, make_model(),
+            collect_stats=collect_stats,
+        )
+        cascade.start_module(module)
+        for p in module.passes:
+            cascade._pass_stats(p)
+        cascade.release()
+    assert covered == [3, 1, 1, 1, 1, 1]
+
+
+def test_pass_stats_build_no_frame(spark, group_inputs, monkeypatch):
+    """The passes' statistics read the census and the reference with
+    their sides' columns worked out from the two schemas, read once:
+    computing them (and the plans they derive) builds no pass side and no
+    blocked join, and the schemas worked out (the name switch a rename)
+    are the ones the pass's frames have."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
 
     census, geobase = group_inputs
@@ -1283,8 +1330,8 @@ def test_pass_bound_builds_no_frame(spark, group_inputs, monkeypatch):
         cascade_mod, "blocked_pairs",
         lambda *a, **k: built.append("pairs") or real_blocked(*a, **k),
     )
-    proved = [cascade._bound_rules_out_knobs(p) for p in GROUP_RUN_ORDER]
-    assert proved == [True, True, True, False, True]
+    plans = [cascade.resolve_pass_plan(p) for p in GROUP_RUN_ORDER]
+    assert all(plan.stats is not None for plan in plans)
     assert built == []
     assert [cascade._pass_schemas(p) for p in GROUP_MODULE.passes] == sides
 
@@ -1333,38 +1380,6 @@ def test_reference_prefix_strip_is_one_projection(fixture):
     assert _frame_facts(preprocess_reference_file(geobase)) == _frame_facts(
         preprocess_reference_file(renamed)
     )
-
-
-def test_large_census_forms_no_group(spark, group_inputs, monkeypatch):
-    """A census too large for the bound at r = 1 (the RI-scale and 8×
-    rungs' ~1.2M records need a salt there) runs no reference profile and
-    forms no group: every pass runs its exact pair estimate and today's
-    two checkpoints."""
-    from person_linkage_case_study_spark.plans import cascade as cascade_mod
-
-    estimates, profiles = [], []
-    real_estimate = cascade_mod.estimate_pair_stats
-    real_profile = cascade_mod.max_key_multiplicity
-    monkeypatch.setattr(
-        cascade_mod, "estimate_pair_stats",
-        lambda *a, **k: estimates.append(1) or real_estimate(*a, **k),
-    )
-    monkeypatch.setattr(
-        cascade_mod, "max_key_multiplicity",
-        lambda *a, **k: profiles.append(1) or real_profile(*a, **k),
-    )
-    census, geobase = group_inputs
-    cascade = PersonLinkageCascade(
-        spark, census, {"geobase_reference_file": geobase}, make_model(),
-        collect_stats=False,
-    )
-    cascade._census_profile = (1_200_000, 0)
-    cascade.start_module(GROUP_MODULE)
-    for p in GROUP_RUN_ORDER:
-        cascade.run_matching_pass(p)
-        assert getattr(cascade, "_group", None) is None, p.name
-    assert len(estimates) == len(GROUP_RUN_ORDER)
-    assert profiles == []
 
 
 def test_stats_cascade_leaves_no_persisted_rdds(spark, fixture):

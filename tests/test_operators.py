@@ -91,44 +91,98 @@ def test_estimate_pair_count(spark):
     assert estimate_pair_stats(l, r, ["blk"]).pairs == 4
 
 
-def test_max_key_multiplicity_bounds_pairs(spark):
-    """One GROUPING SETS aggregate yields, per key set, the most rows
-    sharing one non-NULL key value (NULL-keyed groups and groups of the
-    other sets never count) plus the largest per-row string payload;
-    left rows × that multiplicity bounds both the pass's pairs and its
-    hottest key's pairs."""
+def test_block_statistics_match_blocked_pairs(spark):
+    """One block_statistics query gives each pass the figures counted on
+    its actual blocked_pairs join: pairs, the hottest key's pairs, each
+    side's rows with no NULL key and those rows' string payloads (the
+    left's every string column, the right's non-key ones). The passes
+    include NULL keys, a name-switched pass (its left keys read the
+    transposed columns), two passes on one key set with different
+    columns, and the same passes with an empty left side."""
     from person_linkage_case_study_spark.operators.blocking import (
-        max_key_multiplicity,
+        BlockPass,
+        PairStats,
+        block_statistics,
+    )
+    from person_linkage_case_study_spark.plans.cascade import (
+        switch_first_and_last_names,
     )
 
-    ref = spark.createDataFrame(
-        [
-            ("a", "x", "long-name"),
-            ("a", "x", None),
-            ("a", "y", "n"),
-            ("b", None, "nn"),
-            (None, None, "nnn"),
-            (None, None, "nnnn"),
-            (None, None, "nnnnn"),
-        ],
-        "k1 string, k2 string, name string",
-    )
-    prof = max_key_multiplicity(ref, [["k1"], ["k1", "k2"], ["k2"], ["k1"]])
-    # k1: a x3 (the three NULLs never join); (k1,k2): (a,x) x2; k2: x x2
-    assert prof.max_multiplicity == {("k1",): 3, ("k1", "k2"): 2, ("k2",): 2}
-    assert prof.max_str_payload == 1 + 1 + len("long-name")
-    # k1: groups of 3 and 1 -> (9 + 1) / 4; (k1,k2): 2 and 1; k2: 2 and 1
-    assert prof.mean_multiplicity == {
-        ("k1",): 2.5, ("k1", "k2"): 5 / 3, ("k2",): 5 / 3
-    }
     left = spark.createDataFrame(
-        [("a", "x"), ("a", "y"), ("b", "x")], "k1 string, k2 string"
+        [
+            ("l1", "a", "x", "ANN", "LEE"),
+            ("l2", "a", "y", "LEE", "ANN"),
+            ("l3", "b", None, "BO", "KIM"),
+            ("l4", None, "x", "ANN", "KIM"),
+        ],
+        "id string, k1 string, k2 string, first_name string, last_name string",
     )
-    for keys, r in prof.max_multiplicity.items():
-        st = estimate_pair_stats(left, ref.select(*keys), list(keys))
-        assert st.pairs <= 3 * r and st.max_key_pairs <= 3 * r
-    empty = max_key_multiplicity(ref.limit(0), [["k1"]])
-    assert empty == ({("k1",): 0}, 0, {("k1",): 0.0})
+    right = spark.createDataFrame(
+        [
+            ("r1", "a", "x", "ANN", "LEE", "1 Main Street"),
+            ("r2", "a", "x", "LEE", "ANN", None),
+            ("r3", "a", "y", "ANN", "LEE", "2 Hill Road"),
+            ("r4", "b", "z", "KIM", "BO", "3 Elm"),
+            ("r5", None, "x", "ANN", "KIM", "4 Oak"),
+        ],
+        "id string, k1 string, k2 string, first_name string, last_name string, "
+        "addr string",
+    )
+    switch = {"first_name": "last_name", "last_name": "first_name"}
+
+    def own(df):
+        return {c: c for c in df.columns}
+
+    def counted(l, r, keys):
+        # the pass's own sides, counted on the join and row by row
+        per_key = [
+            row["count"]
+            for row in blocked_pairs(l, r, list(keys)).groupBy(*keys).count().collect()
+        ]
+        joinable = " AND ".join(f"{k} IS NOT NULL" for k in keys)
+
+        def payload(df, skip=()):
+            cols = [
+                f.name
+                for f in df.schema.fields
+                if f.dataType.typeName() == "string" and f.name not in skip
+            ]
+            rows = df.where(joinable).collect()
+            return len(rows), sum(len(row[c] or "") for row in rows for c in cols)
+
+        (nl, sl), (nr, sr) = payload(l), payload(r, keys)
+        return PairStats(sum(per_key), nl, nr, max(per_key, default=0), sl, sr)
+
+    def check(left):
+        narrow_r = right.select("id", "k1")
+        passes = [  # (keys, the pass's left side, its right side, BlockPass)
+            (("k1",), left, right, BlockPass(("k1",), own(left), own(right))),
+            (("k1", "k2"), left, right, BlockPass(("k1", "k2"), own(left), own(right))),
+            (
+                ("k1", "first_name"),
+                switch_first_and_last_names(left),
+                right,
+                BlockPass(
+                    ("k1", "first_name"),
+                    {c: switch.get(c, c) for c in left.columns},
+                    own(right),
+                ),
+            ),
+            (("k1",), left, narrow_r, BlockPass(("k1",), own(left), own(narrow_r))),
+        ]
+        got = block_statistics(left, right, [p for *_, p in passes])
+        assert got == [counted(l, r, keys) for keys, l, r, _ in passes]
+        return got
+
+    stats = check(left)
+    # k1: a 2x3, b 1x1; the switched pass: (a, LEE) 1x1, (a, ANN) 1x2,
+    # (b, KIM) 1x1; the narrow right side carries only the id's payload
+    assert [s.pairs for s in stats] == [7, 3, 4, 7]
+    assert [s.max_key_pairs for s in stats] == [6, 2, 2, 6]
+    assert stats[0].str_bytes_r != stats[3].str_bytes_r
+    empty = check(left.limit(0))
+    assert [(s.pairs, s.n_left, s.str_bytes_l) for s in empty] == [(0, 0, 0)] * 4
+    assert [s.n_right for s in empty] == [s.n_right for s in stats]
 
 
 def test_blocked_pairs_pin_preserves_pairs(spark):

@@ -36,7 +36,6 @@ from person_linkage_case_study_spark.plans.cascade import (
     ModuleConfig,
     PassConfig,
     PersonLinkageCascade,
-    switch_first_and_last_names,
 )
 from person_linkage_case_study_spark.session import get_spark
 
@@ -395,7 +394,7 @@ def main() -> None:
                         "geokey name switch",
                         ["geokey_for_blocking"],
                         0.9,
-                        input_data_transformation=switch_first_and_last_names,
+                        switch_names=True,
                         salt_partitions=salt, num_partitions=pin,
                     ),
                 ],

@@ -241,8 +241,8 @@ def main() -> None:
         casc.census.unpersist()
 
     print("== cascade pass group ==")
-    # Two spread passes of the module's config, both proved small: they
-    # run as one group — one Window (earliest linking pass per record)
+    # Two spread passes of the module's config, both derive no knob from
+    # their statistics: they run as one group — one Window (earliest linking pass per record)
     # above the Union of the branches, and no threshold Filter below the
     # Union (pushed into every branch, it made constraint propagation
     # over the Union take seconds per module).

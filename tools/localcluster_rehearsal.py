@@ -64,7 +64,6 @@ from person_linkage_case_study_spark.plans.cascade import (  # noqa: E402
     ModuleConfig,
     PassConfig,
     PersonLinkageCascade,
-    switch_first_and_last_names,
 )
 from person_linkage_case_study_spark.session import (  # noqa: E402
     get_spark,
@@ -114,7 +113,7 @@ def cascade_config() -> CascadeConfig:
                         "geokey name switch",
                         ["geokey_for_blocking"],
                         0.9,
-                        input_data_transformation=switch_first_and_last_names,
+                        switch_names=True,
                     ),
                 ],
             ),
