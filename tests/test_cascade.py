@@ -922,8 +922,9 @@ def test_one_stats_query_per_group_start(spark, fixture):
     assert links_off == links_on and links_on
 
 
-def test_derived_knobs_run_as_group_of_one(spark, monkeypatch):
-    """A pass whose statistics derive a knob runs as a group of one with
+def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
+    """Sizing passes from exact statistics keeps the hot-key derivation,
+    and a pass whose statistics derive a knob runs as a group of one with
     those knobs: the hot-key pass of test_auto_pin_resolution, in the
     module's config and run without stats, reads one statistics query,
     blocks with pin = shuffle.partitions and salt = 5 and leaves no group
@@ -1380,6 +1381,51 @@ def test_reference_prefix_strip_is_one_projection(fixture):
     assert _frame_facts(preprocess_reference_file(geobase)) == _frame_facts(
         preprocess_reference_file(renamed)
     )
+
+
+def test_large_census_forms_no_group(spark, group_inputs, group_run, monkeypatch):
+    """A census whose passes explode forms no group: with every pass's
+    statistics those of the same inputs with each census and reference
+    record repeated 1,000 times (pairs and hottest key x 10^6, rows and
+    string sums x 10^3), every pass derives a pin, runs as a group of one
+    with it and reads its own statistics query, and the links equal the
+    grouped run's."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    reps = 1_000
+    queries, pins = [], []
+    real_stats = cascade_mod.block_statistics
+    real_blocked = cascade_mod.blocked_pairs
+
+    def repeated(left, right, passes):
+        queries.append(len(passes))
+        return [
+            s._replace(
+                pairs=s.pairs * reps * reps,
+                n_left=s.n_left * reps,
+                n_right=s.n_right * reps,
+                max_key_pairs=s.max_key_pairs * reps * reps,
+                str_bytes_l=s.str_bytes_l * reps,
+                str_bytes_r=s.str_bytes_r * reps,
+            )
+            for s in real_stats(left, right, passes)
+        ]
+
+    monkeypatch.setattr(cascade_mod, "block_statistics", repeated)
+    monkeypatch.setattr(
+        cascade_mod, "blocked_pairs",
+        lambda *a, **k: pins.append(k.get("num_partitions"))
+        or real_blocked(*a, **k),
+    )
+
+    def no_group(cascade, pass_cfg):
+        assert cascade._group is None, pass_cfg.name
+
+    cascade = _run_group_module(spark, group_inputs, False, on_pass=no_group)
+    assert len(queries) == len(GROUP_RUN_ORDER)
+    assert len(pins) == len(GROUP_RUN_ORDER) and None not in pins
+    grouped, _ = group_run
+    assert _link_rows(cascade._provisional_links) == grouped
 
 
 def test_stats_cascade_leaves_no_persisted_rdds(spark, fixture):
