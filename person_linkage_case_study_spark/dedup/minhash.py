@@ -159,7 +159,12 @@ def minhash_signatures(
       spread of the *raw* (id, text) rows for single-file local inputs;
       on a real cluster the parquet scan splits already provide
       parallelism and that spread is skipped work, not a correctness
-      need.
+      need. Without ``tokens_col``, sizing that spread runs
+      ``df.count()`` while this function builds the plan, before any
+      caller action: a Spark job over ``df``'s whole plan (for a derived
+      frame, its whole upstream pipeline; only a parquet scan answers
+      from metadata), counting rows whose NULL text the plan drops
+      later. Materialise a derived ``df`` first to pay that once.
     - "agg": the explode → groupBy(id) 64-min-agg formulation (kept as
       the whole-stage-codegen reference; equality is pinned in
       tests/test_dedup.py). Shuffles the token arrays once.

@@ -1,33 +1,34 @@
-from .phonetics import nysiis_udf, reverse_soundex, soundex
+from .phonetics import nysiis_sql_function, nysiis_udf, reverse_soundex, soundex
 from .similarity import (
     cosine_similarity,
     jaccard_tokens,
     jaro_winkler_udf,
 )
 from .standardize import (
-    add_first_last_initial_categories,
-    add_geokey,
-    add_truncated_name_cols,
-    add_zip3,
+    dob_parts,
+    geokey,
     initial_cut,
+    initial_cut_cols,
     normalize_missing,
-    split_dob,
     standardize_address_part,
+    truncated_name_cols,
+    zip3,
 )
 
 __all__ = [
+    "nysiis_sql_function",
     "nysiis_udf",
     "reverse_soundex",
     "soundex",
     "cosine_similarity",
     "jaccard_tokens",
     "jaro_winkler_udf",
-    "add_first_last_initial_categories",
-    "add_geokey",
-    "add_truncated_name_cols",
-    "add_zip3",
+    "dob_parts",
+    "geokey",
     "initial_cut",
+    "initial_cut_cols",
     "normalize_missing",
-    "split_dob",
     "standardize_address_part",
+    "truncated_name_cols",
+    "zip3",
 ]

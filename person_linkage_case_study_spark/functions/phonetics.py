@@ -7,12 +7,14 @@ Python loop per Dask partition. Here:
 - **Soundex** uses Spark's built-in ``soundex()`` (JVM, codegen — the fast
   path).
 - **Reverse Soundex** is ``soundex(reverse(col))`` — still fully JVM-side.
-- **NYSIIS** has no Spark built-in, so it is an Arrow-batched pandas UDF over
-  a pure-Python implementation of the standard NYSIIS algorithm (Taft 1970,
-  as popularized by the New York State Identification and Intelligence
-  System). Vectorized transfer, scalar compute: acceptable because NYSIIS is
-  applied once per input column during preprocessing, not in the pairwise
-  hot path.
+- **NYSIIS** has no Spark built-in. :func:`nysiis` is a pure-Python
+  implementation of the standard NYSIIS algorithm (Taft 1970, as
+  popularized by the New York State Identification and Intelligence
+  System); jvm/sparklinkage.jar carries a code-point-exact Java port
+  (``sparklinkage.Nysiis``). :func:`nysiis_sql_function` names the one a
+  session runs: the JVM UDF when the jar loads, else :func:`nysiis_udf`,
+  an Arrow-batched pandas UDF over :func:`nysiis` (Python workers, Arrow
+  transfer). Both return the same codes.
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from . import jvm_udfs
 
 _VOWELS = set("AEIOU")
 
@@ -135,3 +139,32 @@ def nysiis_udf(names: pd.Series) -> pd.Series:
     """F9/X1: Arrow-vectorized NYSIIS (NULL → NULL, matching the
     reference's NA pass-through at 03_link_datasets.ipynb:952-959)."""
     return names.map(lambda v: nysiis(v) if v is not None else None)
+
+
+#: the SQL name :func:`nysiis_sql_function` registers the pandas UDF under on
+#: a session without the jar
+PY_NYSIIS_NAME = "nysiis_py"
+
+
+def nysiis_sql_function(spark) -> str:
+    """The SQL name of the session's NYSIIS function: the JVM UDF
+    (``sparklinkage.Nysiis``) when the jar loads, else :func:`nysiis_udf`
+    under :data:`PY_NYSIIS_NAME`. Both give :func:`nysiis`'s codes, so
+    callers emit one SQL string whichever runs."""
+    return jvm_udfs.sql_function(
+        spark, jvm_udfs.JVM_NYSIIS_NAME, PY_NYSIIS_NAME, nysiis_udf
+    )
+
+
+def phonetic_cols(spark, street: bool = True) -> dict[str, str]:
+    """X1: the SQL of NYSIIS and reverse Soundex on the first and last
+    names and, with ``street``, Soundex on ``street_name_for_blocking``
+    (reference 03_link_datasets.ipynb:944-1001), by output column."""
+    nysiis_fn = nysiis_sql_function(spark)
+    out = {}
+    for col in ["first_name", "last_name"]:
+        out[f"{col}_nysiis"] = f"{nysiis_fn}({col})"
+        out[f"{col}_reverse_soundex"] = f"soundex(reverse({col}))"
+    if street:
+        out["street_name_for_blocking_soundex"] = "soundex(street_name_for_blocking)"
+    return out

@@ -17,11 +17,13 @@ expressions (JVM-side, codegen) — the fast path for document dedup and ANN.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+from . import jvm_udfs
+from .jvm_udfs import JVM_JW_NAME
 
 
 def jaro_similarity(s1: str, s2: str) -> float:
@@ -200,46 +202,18 @@ def jaro_winkler_udf(left: pd.Series, right: pd.Series) -> pd.Series:
 # evaluation node; results are unchanged.
 jaro_winkler_udf = jaro_winkler_udf.asNondeterministic()
 
-JVM_JW_NAME = "jaro_winkler_jvm"
 #: the SQL name :func:`jaro_winkler_sql_function` registers the pandas UDF
 #: under on a session without the jar
 PY_JW_NAME = "jaro_winkler_py"
 
 
-def ensure_jvm_jw(spark) -> bool:
-    """Register the native JVM Jaro-Winkler UDF (jvm/sparklinkage.jar) on
-    this session if the jar is on the classpath; returns availability.
-
-    The session's own catalog records the registration: a function
-    already registered there is reused. Registration loads the class, so
-    it fails on a session without the jar.
-
-    The JVM implementation is semantics-identical to the pandas UDF
-    (fuzz-tested against DuckDB); it removes the Arrow round-trip entirely,
-    which dominates pair-scoring cost at scale.
-    """
-    if spark.catalog.functionExists(JVM_JW_NAME):
-        return True
-    try:
-        spark.udf.registerJavaFunction(
-            JVM_JW_NAME, "sparklinkage.JaroWinkler", DoubleType()
-        )
-    except AnalysisException:  # the class is not on the classpath
-        return False
-    return True
-
-
 def jaro_winkler_sql_function(spark) -> str:
     """The SQL name of the session's Jaro-Winkler function: the JVM UDF
-    when :func:`ensure_jvm_jw` holds, else the Arrow pandas UDF
-    (:func:`jaro_winkler_udf`), registered under :data:`PY_JW_NAME` — the
-    only path on a session without the jar. Both return the same doubles,
-    so callers emit one SQL string whichever runs."""
-    if ensure_jvm_jw(spark):
-        return JVM_JW_NAME
-    if not spark.catalog.functionExists(PY_JW_NAME):
-        spark.udf.register(PY_JW_NAME, jaro_winkler_udf)
-    return PY_JW_NAME
+    (:data:`JVM_JW_NAME`) when the jar loads, else the Arrow pandas UDF
+    (:func:`jaro_winkler_udf`) under :data:`PY_JW_NAME`. The JVM UDF
+    returns the same doubles (fuzz-tested against DuckDB) without the
+    Arrow round trip, which dominates pair-scoring cost at scale."""
+    return jvm_udfs.sql_function(spark, JVM_JW_NAME, PY_JW_NAME, jaro_winkler_udf)
 
 
 def jaccard_tokens(left: Column, right: Column) -> Column:

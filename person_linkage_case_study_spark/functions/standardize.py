@@ -1,51 +1,57 @@
 """Standardization / derived-variable functions (SURVEY.md §2.8, F1-F14).
 
-All JVM-side built-ins — no Python in the hot path. Each function mirrors a
-derived variable from the reference's preprocessing
-(03_link_datasets.ipynb:406-1051); semantics (including null handling) match
-the pandas originals, with ``""`` normalized to NULL the way the reference
-normalizes to ``pandas.NA``.
+Each function emits the Spark SQL of one derived variable from the
+reference's preprocessing (03_link_datasets.ipynb:406-1051), over SQL
+operand expressions, as ``operators/gamma.py`` does for gammas: a stage of
+``plans/preprocess.py`` is then one ``selectExpr`` of these strings
+instead of a chain of ``withColumn`` calls, each a py4j round trip. All of
+it is JVM built-ins — no Python in the hot path. Semantics (including null
+handling) match the pandas originals, with ``""`` normalized to NULL the
+way the reference normalizes to ``pandas.NA``. The regex literals are
+Spark raw strings (``r'\\s+'``), read as such under Spark's default
+``spark.sql.parser.escapedStringLiterals=false``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+ADDRESS_PARTS = ["street_number", "street_name", "unit_number", "city", "state", "zipcode"]
 
 
-def normalize_missing(col: Column) -> Column:
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def normalize_missing(sql: str) -> str:
     """P9: represent missingness consistently — empty string → NULL
     (reference 03_link_datasets.ipynb:546,760)."""
-    return F.nullif(col, F.lit(""))
+    return f"nullif({sql}, '')"
 
 
-def standardize_address_part(col: Column) -> Column:
+def standardize_address_part(sql: str) -> str:
     """F1-F3: trim, collapse whitespace, uppercase, STREET|STR → ST,
     "" → NULL (reference 03_link_datasets.ipynb:533-547)."""
-    c = F.trim(col)
-    c = F.regexp_replace(c, r"\s+", " ")
-    c = F.upper(c)
-    c = F.regexp_replace(c, r"\b(STREET|STR)\b", "ST")
-    return normalize_missing(c)
+    c = f"upper(regexp_replace(trim({sql}), r'\\s+', ' '))"
+    return normalize_missing(f"regexp_replace({c}, r'\\b(STREET|STR)\\b', 'ST')")
 
 
-def add_geokey(df: DataFrame, out_col: str = "geokey") -> DataFrame:
-    """F7: space-joined address key, whitespace-normalized, NULL if empty
-    (reference 03_link_datasets.ipynb:739-761).
+def geokey(parts: list[str]) -> str:
+    """F7: space-joined address key over the SQL of the
+    :data:`ADDRESS_PARTS`, whitespace-normalized, NULL if empty (reference
+    03_link_datasets.ipynb:739-761).
 
     ``concat_ws`` skips NULLs (matching the reference's NA-filled
     ``add_strings``); collapsing whitespace then handles the double spaces
     left by missing middle parts.
     """
-    parts = ["street_number", "street_name", "unit_number", "city", "state", "zipcode"]
-    c = F.concat_ws(" ", *[F.col(p) for p in parts])
-    c = F.trim(F.regexp_replace(c, r"\s+", " "))
-    return df.withColumn(out_col, normalize_missing(c))
+    joined = f"concat_ws(' ', {', '.join(parts)})"
+    return normalize_missing(f"trim(regexp_replace({joined}, r'\\s+', ' '))")
 
 
-def split_dob(df: DataFrame, date_format: str = "yyyyMMdd") -> DataFrame:
-    """D1-D2: parse date_of_birth with coercion → day/month/year_of_birth ints,
-    then drop the source column (reference 03_link_datasets.ipynb:703-720).
+def dob_parts(sql: str, date_format: str = "yyyyMMdd") -> dict[str, str]:
+    """D1-D2: month/year/day_of_birth ints of the date of birth ``sql``,
+    parsed with coercion (reference 03_link_datasets.ipynb:703-720); the
+    caller drops the source column.
 
     ``try_to_date`` returns NULL on unparseable input — the same semantics
     as ``pd.to_datetime(errors="coerce")``. Plain ``to_date`` is NOT that:
@@ -54,47 +60,48 @@ def split_dob(df: DataFrame, date_format: str = "yyyyMMdd") -> DataFrame:
     separator, '12/24/1970' → '12424/1970'). Spark's nullable IntegerType
     avoids the reference's float upcast (SURVEY.md §1.4).
     """
-    dob = F.try_to_date(F.col("date_of_birth"), date_format)
-    return (
-        df.withColumn("month_of_birth", F.month(dob))
-        .withColumn("year_of_birth", F.year(dob))
-        .withColumn("day_of_birth", F.dayofmonth(dob))
-        .drop("date_of_birth")
-    )
+    dob = f"try_to_date({sql}, {sql_string(date_format)})"
+    return {
+        "month_of_birth": f"month({dob})",
+        "year_of_birth": f"year({dob})",
+        "day_of_birth": f"dayofmonth({dob})",
+    }
 
 
-def add_zip3(df: DataFrame) -> DataFrame:
+def zip3(sql: str) -> str:
     """F5: zip3 cut column (reference 03_link_datasets.ipynb:1020-1021)."""
-    return df.withColumn("zip3", F.substring(F.col("zipcode"), 1, 3))
+    return f"substring({sql}, 1, 3)"
 
 
-def initial_cut(col: Column) -> Column:
+def initial_cut(sql: str) -> str:
     """F13: NORC name-cut buckets — first char of name; A-or-blank, B..T,
     U-Z (reference 03_link_datasets.ipynb:1024-1036)."""
-    first = F.substring(F.coalesce(col, F.lit("A")), 1, 1)
+    first = f"substring(coalesce({sql}, 'A'), 1, 1)"
     return (
-        F.when(first == "A", F.lit("A-or-blank"))
-        .when(first.isin("U", "V", "W", "X", "Y", "Z"), F.lit("U-Z"))
-        .otherwise(first)
+        f"CASE WHEN {first} = 'A' THEN 'A-or-blank'"
+        f" WHEN {first} IN ('U', 'V', 'W', 'X', 'Y', 'Z') THEN 'U-Z'"
+        f" ELSE {first} END"
     )
 
 
-def add_first_last_initial_categories(df: DataFrame) -> DataFrame:
-    return df.withColumn("first_initial_cut", initial_cut(F.col("first_name"))).withColumn(
-        "last_initial_cut", initial_cut(F.col("last_name"))
-    )
+def initial_cut_cols() -> dict[str, str]:
+    """The first- and last-name cut columns."""
+    return {
+        "first_initial_cut": initial_cut("first_name"),
+        "last_initial_cut": initial_cut("last_name"),
+    }
 
 
-def add_truncated_name_cols(df: DataFrame) -> DataFrame:
-    """F5: PVS truncated matching/blocking name columns
-    (reference 03_link_datasets.ipynb:913-927)."""
-    df = df.withColumn("first_name_15", F.substring("first_name", 1, 15)).withColumn(
-        "last_name_12", F.substring("last_name", 1, 12)
-    )
-    if "middle_name" in df.columns and "middle_initial" not in df.columns:
-        df = df.withColumn("middle_initial", F.substring("middle_name", 1, 1))
+def truncated_name_cols(columns: list[str]) -> dict[str, str]:
+    """F5: PVS truncated matching/blocking name columns of a frame with
+    ``columns`` (reference 03_link_datasets.ipynb:913-927)."""
+    out = {
+        "first_name_15": "substring(first_name, 1, 15)",
+        "last_name_12": "substring(last_name, 1, 12)",
+    }
+    if "middle_name" in columns and "middle_initial" not in columns:
+        out["middle_initial"] = "substring(middle_name, 1, 1)"
     for n in (1, 2, 3):
-        df = df.withColumn(f"first_name_{n}", F.substring("first_name", 1, n)).withColumn(
-            f"last_name_{n}", F.substring("last_name", 1, n)
-        )
-    return df
+        out[f"first_name_{n}"] = f"substring(first_name, 1, {n})"
+        out[f"last_name_{n}"] = f"substring(last_name, 1, {n})"
+    return out

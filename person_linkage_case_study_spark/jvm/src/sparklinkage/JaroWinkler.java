@@ -10,8 +10,8 @@ import org.apache.spark.sql.api.java.UDF2;
  * integer-halved transpositions, 0.0 for empty-vs-empty, Winkler boost
  * threshold 0.7, 4-char prefix cap, null-safe.
  *
- * Registered by session.get_spark via spark.udf.registerJavaFunction when
- * the packaged jar is on the classpath; scoring falls back to the Arrow
+ * Registered with the NYSIIS UDF by functions/jvm_udfs.py when the
+ * packaged jar is on the classpath; scoring falls back to the Arrow
  * pandas UDF otherwise.
  */
 public class JaroWinkler implements UDF2<String, String, Double> {

@@ -31,6 +31,7 @@ the stage.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 from collections.abc import Iterator
@@ -695,25 +696,27 @@ _ZIGZAG = tuple(
     )
 )
 
-_DCT_BASIS = None
+def _dct_basis_n(n: int):
+    """n-point DCT-II basis matrix A with A[u, x] = sqrt(2/n)·c(u)·
+    cos((2x+1)uπ/2n) (c(0) = 1/√2, else 1): forward F = A·f·Aᵀ, inverse
+    f = Aᵀ·F·A. JPEG decoding uses the 8-point one (:func:`_dct_basis`),
+    pHash the 32-point one."""
+    import numpy as np
+
+    u = np.arange(n).reshape(n, 1)
+    x = np.arange(n).reshape(1, n)
+    a = np.sqrt(2.0 / n) * np.cos((2 * x + 1) * u * np.pi / (2 * n))
+    a[0] /= np.sqrt(2.0)
+    return a
 
 
+@functools.cache
 def _dct_basis():
-    """8x8 DCT-II basis matrix A with A[u, x] = c(u)/2 · cos((2x+1)uπ/16)
-    (c(0) = 1/√2, else 1): forward F = A·f·Aᵀ, inverse f = Aᵀ·F·A — the
-    matrix form lets numpy batch the IDCT over every block of an image
-    at once (einsum), the same vectorization move as the r10 PNG
-    Sub-filter work."""
-    global _DCT_BASIS
-    if _DCT_BASIS is None:
-        import numpy as np
-
-        u = np.arange(8).reshape(8, 1)
-        x = np.arange(8).reshape(1, 8)
-        a = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-        a[0] /= np.sqrt(2.0)
-        _DCT_BASIS = a
-    return _DCT_BASIS
+    """The 8x8 DCT-II basis (A[u, x] = c(u)/2 · cos((2x+1)uπ/16)), built
+    once: the matrix form lets numpy batch the IDCT over every block of
+    an image at once (einsum), the same vectorization move as the r10 PNG
+    Sub-filter work. Shared: callers must not write to it."""
+    return _dct_basis_n(8)
 
 
 # the standard Huffman tables from ITU T.81 Annex K §K.3.3 (the tables

@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .media import _PNG_SIG, parse_bmp, parse_gif, parse_jpeg, parse_png
+from .media import _PNG_SIG, _dct_basis_n, parse_bmp, parse_gif, parse_jpeg, parse_png
 
 #: downsample target and retained low-frequency block (the classic
 #: pHash geometry: 32x32 luma -> 2D DCT -> low block -> median bits).
@@ -65,18 +65,6 @@ from .media import _PNG_SIG, parse_bmp, parse_gif, parse_jpeg, parse_png
 _RESAMPLE = 32
 _LOWFREQ = 8
 _LOWFREQ_WIDE = 16
-
-
-def _dct_basis_n(n: int):
-    """n-point DCT-II basis (the 32-point sibling of media._dct_basis's
-    cached 8x8): A[u, x] = sqrt(2/n)·c(u)·cos((2x+1)uπ/2n)."""
-    import numpy as np
-
-    u = np.arange(n).reshape(n, 1)
-    x = np.arange(n).reshape(1, n)
-    a = np.sqrt(2.0 / n) * np.cos((2 * x + 1) * u * np.pi / (2 * n))
-    a[0] /= np.sqrt(2.0)
-    return a
 
 
 def _decode_gray(payload: bytes):

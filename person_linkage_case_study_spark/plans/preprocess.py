@@ -1,24 +1,35 @@
 """Input-file preprocessing (SURVEY.md §7.1 step 7; reference notebook 03
 front half, 03_link_datasets.ipynb:406-1051).
 
-Everything here is a narrow, shuffle-free projection except GQ detection
-(one groupBy on geokey) and the fake-name lookup (broadcast join) — on a
-cluster this whole stage is a single scan over the input file.
+Each stage is one projection of SQL strings (``selectExpr``) emitted by
+``functions/standardize.py`` and ``functions/phonetics.py``, so planning a
+file costs a few py4j round trips per column, not several per derived
+column; NYSIIS is the jar's JVM UDF when it loads, so no Python worker runs.
+The census stages are rename and nickname expansion, the re-key window,
+fake-name blanking, standardisation with the DOB split and geokey, GQ
+suppression, and the truncations, phonetics, zip3 and initial cuts.
+
+Two operators shuffle: GQ detection (one groupBy on geokey) and the
+census re-key's ``row_number`` window, partitioned by the raw record id.
+The fake-name lookup and the GQ suppression are broadcast joins; the rest
+is narrow projection.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.phonetics import nysiis_udf, reverse_soundex, soundex
+from ..functions.phonetics import phonetic_cols
 from ..functions.standardize import (
-    add_first_last_initial_categories,
-    add_geokey,
-    add_truncated_name_cols,
-    add_zip3,
-    split_dob,
+    ADDRESS_PARTS,
+    dob_parts,
+    geokey,
+    initial_cut_cols,
+    sql_string,
     standardize_address_part,
+    truncated_name_cols,
+    zip3,
 )
 from ..operators.blocking import sql_ident
 
@@ -30,20 +41,53 @@ NICKNAME_STANDARDIZATIONS = {
     "Matt": "Matthew",
 }
 
-ADDRESS_COLS = ["street_number", "street_name", "unit_number", "city", "state", "zipcode"]
+NAME_COLS = ["first_name", "last_name"]
+
+#: blocking column → the column it copies (blanked for probable-GQ geokeys)
+BLOCKING_COPIES = {
+    "geokey_for_blocking": "geokey",
+    "street_number_for_blocking": "street_number",
+    "street_name_for_blocking": "street_name",
+}
+
+# re-key: raw id + a name-variant discriminator keeps ids deterministic
+_REKEY = (
+    "concat_ws('_', 'census_2030_preprocessed', record_id_raw_input_file,"
+    " CAST(row_number() OVER (PARTITION BY record_id_raw_input_file"
+    " ORDER BY coalesce(first_name, '')) - 1 AS STRING))"
+)
 
 
-def expand_nicknames(census: DataFrame, spark=None) -> DataFrame:
+def _with(df: DataFrame, exprs: dict[str, str], drop: tuple[str, ...] = ()) -> DataFrame:
+    """``df`` with each ``name: sql`` of ``exprs`` set in one projection,
+    as a chain of ``withColumn`` calls would set it: a column ``df`` has
+    keeps its place, a new one is appended in order, and the ``drop``
+    columns are left out. Every SQL string reads ``df``'s columns."""
+    columns = df.columns
+    return df.selectExpr(
+        *[
+            f"{exprs[c]} AS {sql_ident(c)}" if c in exprs else sql_ident(c)
+            for c in columns
+            if c not in drop
+        ],
+        *[f"{sql} AS {sql_ident(c)}" for c, sql in exprs.items() if c not in columns],
+    )
+
+
+def expand_nicknames(census: DataFrame) -> DataFrame:
     """Append extra rows with nickname → formal first_name
     (reference 03_link_datasets.ipynb:406-435). The original rows stay; the
     duplicate-record_id bookkeeping is handled by re-keying in
     :func:`preprocess_census`."""
-    mapping = F.create_map(
-        *[F.lit(x) for kv in NICKNAME_STANDARDIZATIONS.items() for x in kv]
+    nicknames = ", ".join(sql_string(k) for k in NICKNAME_STANDARDIZATIONS)
+    formal = " ".join(
+        f"WHEN {sql_string(k)} THEN {sql_string(v)}"
+        for k, v in NICKNAME_STANDARDIZATIONS.items()
     )
-    expanded = census.filter(
-        F.col("first_name").isin(*NICKNAME_STANDARDIZATIONS.keys())
-    ).withColumn("first_name", mapping[F.col("first_name")])
+    expanded = _with(
+        census.where(f"first_name IN ({nicknames})"),
+        {"first_name": f"CASE first_name {formal} END"},
+    )
     return census.unionByName(expanded)
 
 
@@ -53,82 +97,75 @@ def blank_fake_names(census: DataFrame, fake_names: DataFrame) -> DataFrame:
     (``fake_name``) table, normalized here and broadcast — a 770-row dim.
     """
     fn = (
-        fake_names.select(F.upper(F.trim(F.col("fake_name"))).alias("fake_name"))
-        .na.drop()
+        fake_names.selectExpr("upper(trim(fake_name)) AS fake_name")
+        .where("fake_name IS NOT NULL")
         .distinct()
     )
     out = census
-    for col in ["first_name", "last_name"]:
-        out = (
-            out.join(
-                F.broadcast(fn),
-                F.upper(F.col(col)) == fn["fake_name"],
-                "left",
-            )
-            .withColumn(
-                col,
-                F.when(F.col("fake_name").isNotNull(), F.lit(None)).otherwise(
-                    F.col(col)
-                ),
-            )
-            .drop("fake_name")
+    for col in NAME_COLS:
+        out = out.join(
+            F.broadcast(fn.withColumnRenamed("fake_name", f"fake_{col}")),
+            F.expr(f"upper({col}) = fake_{col}"),
+            "left",
         )
-    return out
+    return _with(
+        out,
+        {c: f"CASE WHEN fake_{c} IS NOT NULL THEN NULL ELSE {c} END" for c in NAME_COLS},
+        drop=tuple(f"fake_{c}" for c in NAME_COLS),
+    )
 
 
-def suppress_gq_geokeys(
-    df: DataFrame,
-    gq_geokeys: DataFrame,
-) -> DataFrame:
-    """Blank the *_for_blocking address columns for probable-GQ geokeys
-    (reference 03_link_datasets.ipynb:830-888). The reference does this with
+def standardize(df: DataFrame, dob_format: str, address: bool = True) -> DataFrame:
+    """Address parts standardized in place, the DOB split into its parts
+    and, with ``address``, the geokey of the standardized parts: one
+    projection."""
+    std = {}
+    if address:
+        std = {
+            c: standardize_address_part(sql_ident(c))
+            for c in ADDRESS_PARTS
+            if c in df.columns
+        }
+    exprs = {**std, **dob_parts("date_of_birth", dob_format)}
+    if address:
+        exprs["geokey"] = geokey([std.get(c, sql_ident(c)) for c in ADDRESS_PARTS])
+    return _with(df, exprs, drop=("date_of_birth",))
+
+
+def suppress_gq_geokeys(df: DataFrame, gq_geokeys: DataFrame | None) -> DataFrame:
+    """The :data:`BLOCKING_COPIES` of the address columns, blank for
+    probable-GQ geokeys (reference 03_link_datasets.ipynb:830-888), or
+    plain copies when ``gq_geokeys`` is None. The reference does this with
     a split-concat; a single conditional projection does the same with no
     shuffle (SURVEY.md P10)."""
+    if gq_geokeys is None:
+        return _with(df, BLOCKING_COPIES)
     marked = df.join(
-        F.broadcast(gq_geokeys.select("geokey").withColumn("is_gq", F.lit(True))),
+        F.broadcast(gq_geokeys.selectExpr("geokey", "TRUE AS is_gq")),
         on="geokey",
         how="left",
     )
-    is_gq = F.coalesce(F.col("is_gq"), F.lit(False))
-    out = marked
-    for src, dst in [
-        ("geokey", "geokey_for_blocking"),
-        ("street_number", "street_number_for_blocking"),
-        ("street_name", "street_name_for_blocking"),
-    ]:
-        out = out.withColumn(
-            dst, F.when(is_gq, F.lit(None).cast("string")).otherwise(F.col(src))
-        )
-    return out.drop("is_gq")
+    return _with(
+        marked,
+        {dst: f"CASE WHEN is_gq THEN NULL ELSE {src} END" for dst, src in BLOCKING_COPIES.items()},
+        drop=("is_gq",),
+    )
 
 
 def detect_gq_geokeys(census: DataFrame, threshold: int) -> DataFrame:
     """A2: probable group-quarters geokeys — per geokey, ≥ threshold records
     reporting GQ housing AND ≥70% GQ share
     (reference 03_link_datasets.ipynb:775-818)."""
+    reported_gq = "CAST(housing_type != 'Household' AS INT)"
     return (
-        census.filter(F.col("housing_type").isNotNull())
-        .withColumn("reported_gq", (F.col("housing_type") != "Household").cast("int"))
+        census.where("housing_type IS NOT NULL")
         .groupBy("geokey")
-        .agg(F.sum("reported_gq").alias("gq_sum"), F.avg("reported_gq").alias("gq_mean"))
-        .filter((F.col("gq_sum") >= threshold) & (F.col("gq_mean") >= 0.70))
-    )
-
-
-def add_phonetics(df: DataFrame, street: bool = True, names: bool = True) -> DataFrame:
-    """X1: NYSIIS + reverse Soundex on names, Soundex on street name
-    (reference 03_link_datasets.ipynb:944-1001)."""
-    if names:
-        for col in ["first_name", "last_name"]:
-            df = df.withColumn(f"{col}_nysiis", nysiis_udf(F.col(col))).withColumn(
-                f"{col}_reverse_soundex", reverse_soundex(F.col(col))
-            )
-    if street and "street_name_for_blocking" in df.columns:
-        df = df.withColumn(
-            "street_name_for_blocking_soundex",
-            soundex(F.col("street_name_for_blocking")),
+        .agg(
+            F.expr(f"sum({reported_gq}) AS gq_sum"),
+            F.expr(f"avg({reported_gq}) AS gq_mean"),
         )
-    return df
+        .where(f"gq_sum >= {int(threshold)} AND gq_mean >= 0.7D")
+    )
 
 
 def preprocess_census(
@@ -144,35 +181,25 @@ def preprocess_census(
     nickname expansion — dedup downstream must key on the raw id,
     SURVEY.md §7.3.5) and a fresh unique ``record_id``.
     """
-    df = census_raw.withColumnRenamed("record_id", "record_id_raw_input_file")
-    df = expand_nicknames(df)
-    # re-key: raw id + a name-variant discriminator keeps ids deterministic
-    w = Window.partitionBy("record_id_raw_input_file").orderBy(
-        F.coalesce(F.col("first_name"), F.lit(""))
+    df = expand_nicknames(
+        census_raw.withColumnRenamed("record_id", "record_id_raw_input_file")
     )
-    df = df.withColumn(
-        "record_id",
-        F.concat_ws(
-            "_",
-            F.lit("census_2030_preprocessed"),
-            F.col("record_id_raw_input_file"),
-            (F.row_number().over(w) - 1).cast("string"),
-        ),
-    )
-    df = blank_fake_names(df, fake_names)
-    for c in ADDRESS_COLS:
-        df = df.withColumn(c, standardize_address_part(F.col(c)))
+    df = _with(df, {"record_id": _REKEY})
     # drop records with no name at all (reference 03:661-663)
-    df = df.filter(F.col("first_name").isNotNull() | F.col("last_name").isNotNull())
-    df = split_dob(df, dob_format)
-    df = add_geokey(df)
-    gq = detect_gq_geokeys(df, gq_threshold)
-    df = suppress_gq_geokeys(df, gq)
-    df = add_truncated_name_cols(df)
-    df = add_phonetics(df)
-    df = add_zip3(df)
-    df = add_first_last_initial_categories(df)
-    return df
+    df = blank_fake_names(df, fake_names).where(
+        "first_name IS NOT NULL OR last_name IS NOT NULL"
+    )
+    df = standardize(df, dob_format)
+    df = suppress_gq_geokeys(df, detect_gq_geokeys(df, gq_threshold))
+    return _with(
+        df,
+        {
+            **truncated_name_cols(df.columns),
+            **phonetic_cols(df.sparkSession),
+            "zip3": zip3("zipcode"),
+            **initial_cut_cols(),
+        },
+    )
 
 
 def preprocess_reference_file(
@@ -191,24 +218,17 @@ def preprocess_reference_file(
             for c in ref_raw.columns
         ]
     )
-    df = split_dob(df, dob_format)
+    df = standardize(df, dob_format, address=has_address)
+    exprs = {}
     if has_address:
-        for c in ADDRESS_COLS:
-            if c in df.columns:
-                df = df.withColumn(c, standardize_address_part(F.col(c)))
-        df = add_geokey(df)
-        if gq_geokeys is not None:
-            df = suppress_gq_geokeys(df, gq_geokeys)
-        else:
-            # no GQ suppression: blocking columns are plain copies
-            for src, dst in [
-                ("geokey", "geokey_for_blocking"),
-                ("street_number", "street_number_for_blocking"),
-                ("street_name", "street_name_for_blocking"),
-            ]:
-                df = df.withColumn(dst, F.col(src))
-        df = add_zip3(df)
-    df = add_truncated_name_cols(df)
-    df = add_phonetics(df, street=has_address)
-    df = add_first_last_initial_categories(df)
-    return df
+        df = suppress_gq_geokeys(df, gq_geokeys)
+        exprs["zip3"] = zip3("zipcode")
+    return _with(
+        df,
+        {
+            **exprs,
+            **truncated_name_cols(df.columns),
+            **phonetic_cols(df.sparkSession, street=has_address),
+            **initial_cut_cols(),
+        },
+    )

@@ -543,12 +543,12 @@ def a8_order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def f_standardized_part_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.standardize import initial_cut, normalize_missing
+    from .functions.standardize import geokey, normalize_missing
 
     p = _t(spark, sf_dir, "part")
-    messy = F.concat(F.lit("  "), F.col("p_name"), F.lit(" street "))
-    std = F.regexp_replace(
-        F.upper(F.trim(messy)), r"\b(STREET|STR)\b", "ST"
+    std = (
+        "regexp_replace(upper(trim(concat('  ', p_name, ' street '))),"
+        " r'\\b(STREET|STR)\\b', 'ST')"
     )
     # initial_cut in the reference operates on raw (lowercase here) names;
     # replicate its fillna("A") + bucket logic on the raw first char.
@@ -558,21 +558,12 @@ def f_standardized_part_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(first.isin("u", "v", "w", "x", "y", "z"), F.lit("U-Z"))
         .otherwise(first)
     )
-    geokey = normalize_missing(
-        F.trim(
-            F.regexp_replace(
-                F.concat_ws(" ", F.col("p_brand"), F.col("p_type"), F.col("p_name")),
-                r"\s+",
-                " ",
-            )
-        )
-    )
     return p.select(
         "p_partkey",
-        normalize_missing(std).alias("std_name"),
+        F.expr(normalize_missing(std)).alias("std_name"),
         F.substring("p_brand", 1, 3).alias("brand3"),
         name_cut.alias("name_cut"),
-        geokey.alias("partkey_geokey"),
+        F.expr(geokey(["p_brand", "p_type", "p_name"])).alias("partkey_geokey"),
     )
 
 
@@ -906,7 +897,8 @@ def text_analysis_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # F8+F9 phonetics in one entry: Spark built-in soundex vs a hand-written
-# SQL port, and NYSIIS (pure-Python pandas UDF) vs a golden word→code map
+# SQL port, and the session's NYSIIS (the jar's JVM UDF, else the
+# pure-Python pandas UDF) vs a golden word→code map
 # computed at ORACLE-BUILD time by the same pure-Python NYSIIS (itself
 # golden-tested against jellyfish-pinned vectors in
 # tests/test_phonetics.py) over the ACTUAL distinct first words of every
@@ -964,14 +956,14 @@ def _f89_oracle() -> str:
 
 @query("f89_phonetic_part_names", oracle=_f89_oracle)  # lazy: built at gate time
 def f89_phonetic_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.phonetics import nysiis_udf, reverse_soundex, soundex
+    from .functions.phonetics import nysiis_sql_function, reverse_soundex, soundex
 
     p = _t(spark, sf_dir, "part")
     first_word = F.upper(F.split(F.col("p_name"), " ").getItem(0))
     return p.groupBy(
         soundex(first_word).alias("name_soundex"),
         reverse_soundex(first_word).alias("name_rsoundex"),  # F6+F10
-        nysiis_udf(first_word).alias("name_nysiis"),
+        F.call_function(nysiis_sql_function(spark), first_word).alias("name_nysiis"),
     ).agg(F.count(F.lit(1)).alias("n"))
 
 

@@ -6,15 +6,17 @@ import string
 import pytest
 from pyspark.sql import functions as F
 
-from person_linkage_case_study_spark.functions.similarity import (
+from person_linkage_case_study_spark.functions.jvm_udfs import (
     JVM_JW_NAME,
-    ensure_jvm_jw,
+    ensure_jvm_udfs,
+)
+from person_linkage_case_study_spark.functions.similarity import (
     jaro_winkler_similarity,
 )
 
 
 def test_jvm_jw_matches_python(spark):
-    if not ensure_jvm_jw(spark):
+    if not ensure_jvm_udfs(spark):
         pytest.skip("sparklinkage.jar not on classpath (run jvm/build.sh)")
     rng = random.Random(4)
     rows = [
@@ -37,10 +39,10 @@ def _plan(df) -> str:
 
 
 def test_pandas_fallback_gamma_parity(spark, monkeypatch):
-    """On a session without the jar (``ensure_jvm_jw`` False) add_gammas
+    """On a session without the jar (``ensure_jvm_udfs`` False) add_gammas
     runs the Arrow pandas UDF, registered under a SQL name, and gives the
     JVM path's gammas row for row."""
-    from person_linkage_case_study_spark.functions import similarity
+    from person_linkage_case_study_spark.functions import jvm_udfs
     from person_linkage_case_study_spark.operators.gamma import (
         add_gammas,
         jw_comparison,
@@ -52,7 +54,7 @@ def test_pandas_fallback_gamma_parity(spark, monkeypatch):
     )
     comp = jw_comparison("name", thresholds=(0.9, 0.7))
     session_path = add_gammas(pairs, [comp])
-    monkeypatch.setattr(similarity, "ensure_jvm_jw", lambda spark: False)
+    monkeypatch.setattr(jvm_udfs, "ensure_jvm_udfs", lambda spark: False)
     fallback = add_gammas(pairs, [comp])
     assert "ArrowEvalPython" in _plan(fallback)
     a = [r["gamma_name"] for r in session_path.collect()]
@@ -64,14 +66,14 @@ def test_ensure_jvm_jw_asks_the_session_catalog(spark):
     """Registration is the session's own: a new session registers the
     function and resolves it, and a function dropped from a session is
     registered again rather than remembered as present."""
-    if not ensure_jvm_jw(spark):
+    if not ensure_jvm_udfs(spark):
         pytest.skip("sparklinkage.jar not on classpath (run jvm/build.sh)")
     other = spark.newSession()
-    assert ensure_jvm_jw(other)
+    assert ensure_jvm_udfs(other)
     assert other.sql(f"SELECT {JVM_JW_NAME}('MARTHA', 'MARTHA')").first()[0] == 1.0
     other.sql(f"DROP TEMPORARY FUNCTION {JVM_JW_NAME}")
     assert not other.catalog.functionExists(JVM_JW_NAME)
-    assert ensure_jvm_jw(other)
+    assert ensure_jvm_udfs(other)
     assert other.sql(f"SELECT {JVM_JW_NAME}('AB', 'AB')").first()[0] == 1.0
 
 
@@ -79,7 +81,7 @@ def test_training_and_scoring_plan_no_python_udf(spark, monkeypatch):
     """With the jar loaded, u/m training and scoring take the same JVM
     Jaro-Winkler: neither ``estimate_u`` nor ``gamma_pattern_counts`` (EM)
     nor ``score_pairs`` plans an ArrowEvalPython node."""
-    if not ensure_jvm_jw(spark):
+    if not ensure_jvm_udfs(spark):
         pytest.skip("sparklinkage.jar not on classpath (run jvm/build.sh)")
     from person_linkage_case_study_spark.operators import estimation
     from person_linkage_case_study_spark.operators.gamma import jw_comparison

@@ -1,10 +1,11 @@
-"""Session factory: cluster-submit-aware master resolution.
+"""Session factory: cluster-submit-aware master resolution, and the
+session's string defaults.
 
 The same entry points (driver contract, bench, tests) must run under
 plain python (→ local[$SPARK_GRAFT_CPUS]) AND under ``spark-submit
 --master yarn/k8s`` (→ the submit's master wins; forcing local[] there
 would silently collapse a 1000-executor job onto the driver box).
-Pure-python tests — no session is built.
+The master-resolution tests are pure python — no session is built.
 """
 
 from pyspark import SparkConf
@@ -59,3 +60,20 @@ def test_shuffle_partitions_tolerates_non_integer_conf():
     assert shuffle_partitions(FakeSpark("auto")) == 200
     assert shuffle_partitions(FakeSpark("auto"), default=32) == 32
     assert shuffle_partitions(FakeSpark(None)) == 200
+
+
+def test_case_mapping_matches_python(spark):
+    """Under the session default (the JVM's case mapping, not ICU's) upper
+    and lower of ASCII and accented Latin names are Python's str.upper /
+    str.lower, which the reference's pandas ``.str.upper()`` uses."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    names = ["smith", "O'Brien", "José", "ÉLODIE", "Müller", "Straße",
+             "STRASSE", "Peña", "ÑÚÑEZ", "çedille ÿ", "", None]
+    df = spark.createDataFrame([(n,) for n in names], "name string")
+    got = df.select("name", F.upper("name").alias("u"), F.lower("name").alias("l"))
+    for r in got.collect():
+        n = r["name"]
+        assert r["u"] == (None if n is None else n.upper()), n
+        assert r["l"] == (None if n is None else n.lower()), n
