@@ -30,8 +30,8 @@ that needs them runs ONE query for itself and for the module's later
 passes that may join a group, and the passes read them from a cache until
 the records still eligible change. Consecutive passes whose plan derives
 no knob from those statistics (no pin, no salt, and pairs that do not
-escalate the checkpoint storage level; no statistics collected, both knobs
-left to derivation) collect into a pending *group* that reads the census
+escalate the checkpoint storage level; both knobs left to derivation)
+collect into a pending *group* that reads the census
 as it stood when the group began: one ``blocked_pairs`` branch per pass,
 ONE ``score_pairs`` over their union, and a window that keeps a pair when
 it clears its pass's threshold and its pass is the record's first linking
@@ -46,19 +46,38 @@ group is materialised — once, when the next group or a pass outside any
 group runs (links + anti-join) or at ``confirm_piks`` (links only) — or
 when the state (``_provisional_links``, ``_census_to_match``) is read
 mid-group, which plans the group as it stands and keeps that plan until
-another pass joins. Any other pass runs as a *group of one*: today's links
-checkpoint and anti-join checkpoint, no window — so ``collect_stats=True``
-(every pass a group of one) keeps ``PassStats`` exact, and a pass whose
+another pass joins. Any other pass runs as a *group of one*: its links
+checkpoint and anti-join checkpoint, no window — so a pass whose
 statistics derive a knob (every pass of the RI-scale rungs) runs exactly
-its sequential queries.
+its sequential queries, and ``auto_pin=False`` (every pass a group of
+one) is sequential elimination itself.
+
+Statistics. ``PassStats`` and ``ConfirmStats`` are the figures sequential
+elimination gives, observed (``DataFrame.observe``) inside the actions
+that run anyway, so they cost no job. A group's window makes them exact
+for each of its passes: pass k blocks the pairs of its branch whose
+record's first linking pass is k or later (or none), links those whose
+first linking pass it is, and removes the records whose first linking
+pass it is, counted once each (each of a record's n rows adds 1/n).
+Records still eligible are counted on each census checkpoint (module
+start and each flush). A single-pass group has no
+window: it counts its pairs and links on its scored pairs, and its
+records left on the anti-join checkpoint after it, which ``confirm_piks``
+therefore runs for it. Confirm counts the deceased links on its
+links ⋈ ``dates_of_death`` frame and the multi-PIK records on its gate's
+window, once each by the same rule. In the lazy checkpoint modes
+('persist', 'off') the figures arrive with the first action that reads
+the cascade's output; reading them before raises.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
@@ -139,6 +158,25 @@ def _switch_schema(schema: StructType) -> StructType:
 #: ``pvs_cascade`` world makes ~37k. A pass that would take a group past
 #: the cap starts a new group.
 PASS_GROUP_MAX_PAIRS = 80_000
+
+
+#: observation names, unique in the process: two metric nodes of one name
+#: in a plan (in the 'persist' / 'off' modes a later plan holds every
+#: earlier node) fail only in the listener thread, and neither's metrics
+#: arrive
+_OBSERVATION_IDS = itertools.count()
+
+
+def _observation() -> Observation:
+    return Observation(f"cascade_{next(_OBSERVATION_IDS)}")
+
+
+_NOT_OBSERVED = (
+    "the cascade's statistics are observed by the actions that run its "
+    "frames, and none has run yet: with checkpoint='persist' or 'off', run "
+    "an action that reads the cascade's output whole (e.g. "
+    "confirmed_piks.count()) before reading them"
+)
 
 
 def _sql_string(value: str) -> str:
@@ -288,9 +326,10 @@ def derive_checkpoint_storage(
     deserialized bytes exceed half the executor heap. ``row_bytes``
     defaults to the bracket's calibrated constant, but the cascade now
     passes :func:`estimate_checkpoint_row_bytes` of the links frame's
-    ACTUAL schema (r11 — a wide links frame flips at proportionally
-    fewer rows; the template schema derives 368, within 11% of the
-    observed 330). On a multi-executor cluster the comparison (TOTAL rows vs ONE
+    schema, :data:`LINKS_FRAME_TEMPLATE` (r11 — a wide links frame flips
+    at proportionally fewer rows; the template derives 368, within 11% of
+    the observed 330; a test pins it to the real links schema). On a
+    multi-executor cluster the comparison (TOTAL rows vs ONE
     executor's heap) is conservative — it flips to disk sooner than
     strictly needed, which at 100 TB is the posture you want anyway
     (node-local-disk checkpoints, zero MemoryStore pressure).
@@ -300,12 +339,12 @@ def derive_checkpoint_storage(
     UNDERCOUNT for a pass whose links multiply census rows (nickname-
     style record multiplication) or whose row width exceeds
     ``row_bytes``. The cascade therefore RE-derives per pass with
-    ``max(census_rows, K8 pair estimate)`` and escalates to DISK_ONLY
-    mid-run the moment any pass's pair bound flips the gate (escalation
-    is one-way — a level already derived never downgrades mid-run, so
-    checkpoint behavior stays monotone). The pair estimate upper-bounds
-    the links frame (links ⊆ scored pairs), so the escalated gate can
-    only fire early — the conservative side."""
+    ``max(census_rows, the pass's exact pairs)`` (``block_statistics``)
+    and escalates to DISK_ONLY mid-run the moment any pass's pairs flip
+    the gate (escalation is one-way — a level already derived never
+    downgrades mid-run, so checkpoint behavior stays monotone). The pairs
+    upper-bound the links frame (links ⊆ scored pairs), so the escalated
+    gate can only fire early — the conservative side."""
     if not frame_rows or not heap_bytes:
         return None
     if frame_rows * row_bytes > heap_fraction * heap_bytes:
@@ -324,8 +363,8 @@ class PassConfig:
     # splits hot blocking keys across n salt lanes (blocked_pairs
     # salt_partitions — the reference's salting_partitions,
     # 03_link_datasets.ipynb:1971-1975). None (default) = AUTO-DERIVE
-    # from the per-key max pair product in the K8 estimate (r9:
-    # derive_salt — the pin below spreads DISTINCT keys but hash
+    # from the hottest key's pairs in the pass's exact block statistics
+    # (r9: derive_salt — the pin below spreads DISTINCT keys but hash
     # partitioning still sends one monster key's every pair to ONE
     # task, so a pass author who forgot this knob re-entered the
     # serial regime even with the r8 auto-pin); an explicit int
@@ -341,10 +380,11 @@ class PassConfig:
     # with a 176M-pair hot block ran 932s no-pin vs ~the same WITH salt
     # but no pin; pinning restores the spread). Big inputs don't need it
     # — their own bytes keep AQE partition counts high (the 512x ladder).
-    # None (default) = AUTO-DERIVE from the K8 pair estimate (r8:
-    # derive_pair_pin — the manual knob silently re-entered the serial
-    # regime when forgotten); an explicit int overrides; the cascade's
-    # auto_pin=False disables derivation entirely.
+    # None (default) = AUTO-DERIVE from the pass's exact pairs (its
+    # block statistics; r8: derive_pair_pin — the manual knob silently
+    # re-entered the serial regime when forgotten); an explicit int
+    # overrides; the cascade's auto_pin=False disables derivation
+    # entirely.
     num_partitions: int | None = None
 
 
@@ -376,28 +416,29 @@ class PassPlan:
 
 
 @dataclass
-class _PassGroup:
-    """Passes that derive no knob, run as one scored union (see the module
-    docstring), or a group of one: a pass's thresholded links, no
-    branches. The frames built from the branches are planned on first
-    read and dropped when another pass joins."""
-
-    census: DataFrame  # the census to match when the group began
-    links_before: DataFrame  # the module's links from earlier passes
-    branches: list[DataFrame] = field(default_factory=list)
-    pairs: int = 0  # the sum of its passes' pairs at ``census``
-    links: DataFrame | None = None  # the group's links (lazy)
-    provisional: DataFrame | None = None  # links_before + links
-    census_left: DataFrame | None = None  # census minus the linked records
-
-
-@dataclass
 class PassStats:
+    """A pass's figures as sequential elimination gives them (the
+    reference prints them per pass, 03 cells 86-143), observed in the
+    actions the cascade runs anyway (module docstring):
+    ``n_pairs_estimated`` is the exact number of pairs the pass blocks at
+    the records still eligible when it runs (the name is kept from when
+    it was an estimate), ``n_links`` its links and ``n_still_eligible``
+    the records eligible after it.
+
+    ``num_partitions``, ``salt_partitions`` and ``storage_level`` are
+    the knobs of a pass run as a group of one: its resolved pin and salt
+    (``PassPlan``) and, in 'local' mode, the storage level its
+    checkpoints use (None: Spark's default). They are None for a pass run
+    in a group."""
+
     module: str
     pass_name: str
     n_pairs_estimated: int
     n_links: int
     n_still_eligible: int
+    num_partitions: int | None = None
+    salt_partitions: int | None = None
+    storage_level: StorageLevel | None = None
 
 
 @dataclass
@@ -412,6 +453,40 @@ class ConfirmStats:
     module: str
     n_deceased_dropped: int | None
     n_multi_pik_dropped: int
+
+
+@dataclass
+class _PassGroup:
+    """Passes that derive no knob, run as one scored union (see the module
+    docstring), or a group of one: one branch, with its pass's knobs. The
+    frames built from the branches are planned on first read and dropped
+    when another pass joins."""
+
+    census: DataFrame  # the census to match when the group began
+    census_rows: Observation  # counts ``census``
+    links_before: DataFrame  # the module's links from earlier passes
+    branches: list[DataFrame] = field(default_factory=list)
+    # each pass's PassStats, given its pairs, links and records left
+    passes: list[Callable[[int, int, int], PassStats]] = field(default_factory=list)
+    pairs: int = 0  # the sum of its passes' pairs at ``census``
+    links: DataFrame | None = None  # the group's links (lazy)
+    metrics: Observation | None = None  # observes the plan of ``links``
+    provisional: DataFrame | None = None  # links_before + links
+    census_left: DataFrame | None = None  # census minus the linked records
+
+
+@dataclass
+class _ObservedGroup:
+    """A flushed group's statistics, read from its observations when
+    ``PersonLinkageCascade.stats`` is read."""
+
+    passes: list[Callable[[int, int, int], PassStats]]
+    census_rows: Observation  # the records eligible when the group began
+    metrics: Observation  # per pass: pairs, links (and records linked)
+    # a single-pass group's records left, or in the lazy modes the frame
+    # to count them on when read (no later frame reads a module's last)
+    rows_left: Observation | None = None
+    census_left: DataFrame | None = None
 
 
 class PersonLinkageCascade:
@@ -436,13 +511,12 @@ class PersonLinkageCascade:
                      which sizes by shuffle INPUT bytes — cannot see the
                      explosion (the r7 932s-serial regime,
                      SKEW_BENCH_r07), and ``derive_salt``. Passes below
-                     the gates keep their exact unpinned plan. With
-                     ``collect_stats=False`` such passes run as pass
-                     GROUPS (module docstring): consecutive passes that
-                     derive no knob, up to ``PASS_GROUP_MAX_PAIRS``
-                     pairs, share one scored union and one
-                     materialisation. ``auto_pin=False`` forms no groups:
-                     every pass is a group of one.
+                     the gates keep their exact unpinned plan, and run
+                     as pass GROUPS (module docstring): consecutive
+                     passes that derive no knob, up to
+                     ``PASS_GROUP_MAX_PAIRS`` pairs, share one scored
+                     union and one materialisation. ``auto_pin=False``
+                     forms no groups: every pass is a group of one.
     checkpoint:      'local' (default) truncates lineage with
                      localCheckpoint at every group boundary — after a
                      group of one, its links and the records left; after
@@ -484,7 +558,6 @@ class PersonLinkageCascade:
         reference_files: dict[str, DataFrame],
         model: LinkageModel,
         dates_of_death: DataFrame | None = None,
-        collect_stats: bool = True,
         checkpoint: str = "local",
         auto_pin: bool = True,
         checkpoint_storage_level: StorageLevel | None = None,
@@ -512,15 +585,20 @@ class PersonLinkageCascade:
         self.reference_files = reference_files
         self.model = model
         self.dates_of_death = dates_of_death
-        self.collect_stats = collect_stats
-        self.stats: list[PassStats] = []
-        self.confirm_stats: list[ConfirmStats] = []
+        # what ``stats`` and ``confirm_stats`` read: one entry per flushed
+        # group, and per confirm its module and its deceased (None
+        # without a dates_of_death table) and multi-PIK observations
+        self._observed_groups: list[_ObservedGroup] = []
+        self._observed_confirms: list[
+            tuple[str, Observation | None, Observation]
+        ] = []
         # accumulator: ≤1 row per record_id_raw_input_file after each module
         self.confirmed_piks: DataFrame = _empty_frame(spark, CONFIRMED_FRAME_TEMPLATE)
         self._module: ModuleConfig | None = None
         # the module's state as of the last group flushed (a pending
         # group's is built when read: _census_to_match, _provisional_links)
         self._census_flushed: DataFrame | None = None
+        self._census_rows: Observation | None = None  # counts it
         self._links_flushed: DataFrame | None = None
         self._reference_file: DataFrame | None = None
         self._group: _PassGroup | None = None
@@ -594,21 +672,22 @@ class PersonLinkageCascade:
     def _note_frame_rows(
         self, rows: int | None, row_bytes: int | None = None
     ) -> None:
-        """Escalate the derived checkpoint level when a pass's K8 pair
-        estimate bounds a bigger links frame than the census-row proxy
+        """Escalate the derived checkpoint level when a pass's exact pairs
+        (its block statistics) bound a bigger links frame than the
+        census-row proxy
         (r10, advisor: a pass emitting MULTIPLES of census rows —
         nickname-style record multiplication — could blow past half-heap
         while the census-seeded gate still said on-heap, the exact 1024×
         failure reached via row explosion instead of corpus size). The
-        pair estimate upper-bounds the links frame, so this only flips
+        pairs upper-bound the links frame, so this only flips
         EARLY, and only one way: an auto-derived level never downgrades
         mid-run. Explicit levels and ``auto_pin=False`` are untouched.
 
-        r11: takes the frame's schema-derived ``row_bytes`` (the caller
-        passes :func:`estimate_checkpoint_row_bytes` of the actual links
-        plan) and compares estimated BYTES, not rows — a wide pass
-        escalates at fewer rows than a narrow one (r10 verdict
-        top-next); ``None`` falls back to the template width."""
+        r11: takes the frame's schema-derived ``row_bytes`` and compares
+        estimated BYTES, not rows — a wide frame escalates at fewer rows
+        than a narrow one (r10 verdict top-next); ``None`` is the links
+        frame's width (:data:`LINKS_FRAME_TEMPLATE`, which a test pins to
+        the real links schema)."""
         if not rows or not self._derives_storage():
             return
         # in 'local' mode start_module's first _truncate already resolved
@@ -630,9 +709,8 @@ class PersonLinkageCascade:
         self._group = None
         self._reference_file = self.reference_files[cfg.reference_file_name]
         self._reference_schema = None
-        self._block_stats = {}
         # exclude raw input records already PIKed by earlier modules (J3)
-        self._census_flushed = self._truncate(
+        self._flush_census(
             anti_join(
                 self.census,
                 self.confirmed_piks.select("record_id_raw_input_file"),
@@ -640,6 +718,16 @@ class PersonLinkageCascade:
             )
         )
         self._links_flushed = _empty_frame(self.spark, LINKS_FRAME_TEMPLATE)
+
+    def _flush_census(self, census: DataFrame) -> None:
+        """Make ``census`` the module's records still eligible, a new
+        census state: materialised (``_truncate``), and its rows counted
+        by the action that materialises it."""
+        self._census_rows = _observation()
+        self._census_flushed = self._truncate(
+            census.observe(self._census_rows, F.expr("count(1)").alias("rows"))
+        )
+        self._block_stats = {}
 
     @property
     def _census_to_match(self) -> DataFrame | None:
@@ -727,37 +815,24 @@ class PersonLinkageCascade:
         salt_partitions: int | None = None,
     ) -> DataFrame:
         """The (lazy) new-links pipeline for a pass: block-join → gamma →
-        score → threshold → select. Exposed so plan pins can audit a pass
-        without executing it — e.g. a bucketed reference file must show no
-        shuffle exchange on its side of the block join. Stays fully lazy
-        (no auto-pin estimation jobs here — ``run_matching_pass`` resolves
-        the knobs via ``resolve_pass_plan`` and passes them in);
-        ``num_partitions`` / ``salt_partitions`` override the pass
-        config's when given."""
+        score → threshold → select, as a group of one runs it (its
+        statistics observed under a fresh observation). Exposed so plan
+        pins can audit a pass without executing it — e.g. a bucketed
+        reference file must show no shuffle exchange on its side of the
+        block join. Stays fully lazy (no auto-pin estimation jobs here —
+        ``run_matching_pass`` resolves the knobs via
+        ``resolve_pass_plan``); ``num_partitions`` / ``salt_partitions``
+        override the pass config's when given."""
         assert self._module is not None, "start_module first"
-        census_side, ref_side, block_on = self._pass_sides(pass_cfg)
-        pairs = blocked_pairs(
-            census_side,
-            ref_side,
-            block_on,
-            salt_partitions=(
-                salt_partitions
-                if salt_partitions is not None
-                else pass_cfg.salt_partitions
-            ),
-            num_partitions=(
-                num_partitions
-                if num_partitions is not None
-                else pass_cfg.num_partitions
-            ),
+        if num_partitions is None:
+            num_partitions = pass_cfg.num_partitions
+        if salt_partitions is None:
+            salt_partitions = pass_cfg.salt_partitions
+        g = _PassGroup(
+            self._census_to_match, self._census_rows, self._provisional_links
         )
-        pass_model = self._pass_model()
-        scored = score_pairs(
-            pairs.selectExpr(*self._pair_columns(pass_model, block_on)),
-            pass_model,
-            threshold_match_probability=pass_cfg.probability_threshold,
-        )
-        return scored.selectExpr(*self._links_projection(_sql_string(pass_cfg.name)))
+        self._add_branch(g, pass_cfg, PassPlan(None, num_partitions, salt_partitions))
+        return self._group_links(g)
 
     def _pass_model(self) -> LinkageModel:
         """The module's pass model: comparisons restricted to its matching
@@ -790,7 +865,7 @@ class PersonLinkageCascade:
             ],
         ]
 
-    def _links_projection(self, pass_name_sql: str) -> list[str]:
+    def _links_projection(self) -> list[str]:
         """The scored pairs' projection to :data:`LINKS_FRAME_TEMPLATE`."""
         return [
             "record_id_l AS record_id_census_2030",
@@ -799,7 +874,7 @@ class PersonLinkageCascade:
             "match_weight",
             "match_probability",
             f"{_sql_string(self._module.name)} AS module_name",
-            f"{pass_name_sql} AS pass_name",
+            "pass_name",
         ]
 
     def resolve_pass_plan(self, pass_cfg: PassConfig) -> PassPlan:
@@ -845,11 +920,10 @@ class PersonLinkageCascade:
         return PassPlan(stats, pin, salt)
 
     def _may_group(self, pass_cfg: PassConfig) -> bool:
-        """Whether the pass may run in a group: no statistics collected
-        and both knobs left to derivation (its plan decides the rest)."""
+        """Whether the pass may run in a group: both knobs left to
+        derivation (its plan decides the rest)."""
         return (
-            not self.collect_stats
-            and self.auto_pin
+            self.auto_pin
             and pass_cfg.num_partitions is None
             and pass_cfg.salt_partitions is None
         )
@@ -933,93 +1007,143 @@ class PersonLinkageCascade:
                 self._flush_group()
                 plan = self.resolve_pass_plan(pass_cfg)
             if self._groupable(plan):
-                self._add_to_group(pass_cfg, plan.stats.pairs)
+                self._add_to_group(pass_cfg, plan)
                 return
         self._flush_group()
-        cfg = self._module
         plan = self.resolve_pass_plan(pass_cfg)
-        stats = self._pass_stats(pass_cfg) if self.collect_stats else plan.stats
-        links_plan = self.build_pass_links(
-            pass_cfg,
-            num_partitions=plan.num_partitions,
-            salt_partitions=plan.salt_partitions,
-        )
         # escalate the checkpoint storage gate BEFORE this pass's links
-        # frame is checkpointed — the pass's pairs bound its rows, and
-        # the lazy plan's ACTUAL schema sizes its row width (r11)
-        self._note_frame_rows(
-            stats.pairs if stats is not None else None,
-            row_bytes=estimate_checkpoint_row_bytes(links_plan.schema),
+        # frame is checkpointed — the pass's pairs bound its rows
+        self._note_frame_rows(plan.stats.pairs if plan.stats is not None else None)
+        self._add_to_group(
+            pass_cfg,
+            plan,
+            storage_level=self._ckpt_level if self.checkpoint == "local" else None,
         )
-        self._group = _PassGroup(
-            self._census_to_match, self._provisional_links, links=links_plan
-        )
-        new_links = self._flush_group()
+        self._flush_group()
 
-        if self.collect_stats:
-            # with the eager checkpoints the counts are free, but under a
-            # non-eager checkpoint mode each would be a whole extra job
-            self.stats.append(
-                PassStats(
-                    cfg.name,
-                    pass_cfg.name,
-                    stats.pairs,
-                    new_links.count(),
-                    self._census_to_match.count(),
-                )
+    def _add_to_group(
+        self,
+        pass_cfg: PassConfig,
+        plan: PassPlan,
+        storage_level: StorageLevel | None = None,
+    ) -> None:
+        """Add a pass to the pending group, or start one (see
+        :meth:`_add_branch`)."""
+        if self._group is None:
+            self._group = _PassGroup(
+                self._census_to_match, self._census_rows, self._provisional_links
             )
+        self._add_branch(self._group, pass_cfg, plan, storage_level)
 
-    def _add_to_group(self, pass_cfg: PassConfig, pairs: int) -> None:
-        """Add a pass (``pairs`` at the group's census) to the pending
-        group: only its ``blocked_pairs`` branch is built. The group's
+    def _add_branch(
+        self,
+        g: _PassGroup,
+        pass_cfg: PassConfig,
+        plan: PassPlan,
+        storage_level: StorageLevel | None = None,
+    ) -> None:
+        """Add a pass to ``g``: only its ``blocked_pairs`` branch is built,
+        at the group's census, with the plan's knobs (none in a group of
+        several: its statistics derived pin, salt and the checkpoint
+        storage level all None, and its pairs, at the group's census,
+        bound its links there), and tagged with its index in the group
+        (``__pass``), its threshold (``__t``) and its name. The group's
         scored union, window, links and anti-join are planned once, when
         read (:meth:`_group_links`, ``_provisional_links``,
         ``_census_to_match``) or flushed, so a group of k passes is
-        planned once, not k times. No knob is needed: the pass's
-        statistics derived pin, salt and the checkpoint storage level all
-        None, and its pairs bound its links in the group."""
-        g = self._group
-        if g is None:
-            g = self._group = _PassGroup(self._census_to_match, self._provisional_links)
-        g.pairs += pairs
+        planned once, not k times."""
+        if plan.stats is not None:
+            g.pairs += plan.stats.pairs
         census_side, ref_side, block_on = self._pass_sides(pass_cfg, g.census)
+        pairs = blocked_pairs(
+            census_side,
+            ref_side,
+            block_on,
+            salt_partitions=plan.salt_partitions,
+            num_partitions=plan.num_partitions,
+        )
         g.branches.append(
-            blocked_pairs(census_side, ref_side, block_on).selectExpr(
+            pairs.selectExpr(
                 *self._pair_columns(self._pass_model(), block_on),
                 f"{len(g.branches)} AS __pass",
                 f"CAST('{float(pass_cfg.probability_threshold)!r}' AS DOUBLE) AS __t",
                 f"{_sql_string(pass_cfg.name)} AS pass_name",
             )
         )
+        g.passes.append(
+            functools.partial(
+                PassStats,
+                self._module.name,
+                pass_cfg.name,
+                num_partitions=plan.num_partitions,
+                salt_partitions=plan.salt_partitions,
+                storage_level=storage_level,
+            )
+        )
         g.links = g.provisional = g.census_left = None
 
     def _group_links(self, g: _PassGroup) -> DataFrame:
         """The group's links: one ``score_pairs`` over the union of its
-        branches, planned on first read and kept until a pass joins."""
+        branches, planned on first read and kept until a pass joins. Each
+        plan observes its passes' statistics (module docstring) under a
+        fresh observation: a plan read mid-group may never run."""
         if g.links is not None:
             return g.links
         scored = score_pairs(
             functools.reduce(DataFrame.union, g.branches), self._pass_model()
         )
+        g.metrics = _observation()
+
+        def observed(df: DataFrame, **metrics: str) -> DataFrame:
+            # each metric: one aggregate per pass k, the template's {k}
+            return df.observe(
+                g.metrics,
+                *[
+                    F.expr(
+                        "array({})".format(
+                            ", ".join(
+                                template.format(k=k) for k in range(len(g.branches))
+                            )
+                        )
+                    ).alias(name)
+                    for name, template in metrics.items()
+                ],
+            )
+
         if len(g.branches) == 1:
             # a single pass: its links are the pairs over its threshold,
-            # and the group costs what the pass alone costs
-            kept = scored.where("match_probability >= __t")
+            # and the group costs what the pass alone costs. The observed
+            # node also keeps the threshold Filter above the scoring
+            # projection: without it the optimizer pushed the Filter,
+            # with the whole score inlined (33 Jaro-Winkler calls where
+            # the projection makes 3), into the block join's condition;
+            # at the 8x rung (tools/bench_linkage.py, 186M pairs in one
+            # pass, local[4]) that cascade took 555.6 s against 100.1 s
+            kept = observed(
+                scored, pairs="count(1)", links="count_if(match_probability >= __t)"
+            ).where("match_probability >= __t")
         else:
             # the threshold stays inside the window: a probability Filter
             # below it would be pushed through the Union into every
             # branch, where constraint propagation over the twice-aliased
-            # key columns took the optimizer seconds per module
-            kept = (
-                scored.selectExpr(
-                    "*", "CASE WHEN match_probability >= __t THEN __pass END AS __hit"
-                )
-                .selectExpr(
-                    "*", "min(__hit) OVER (PARTITION BY record_id_l) AS __first"
-                )
-                .where("__hit = __first")
+            # key columns took the optimizer seconds per module. A record's
+            # __rows rows add 1/__rows each, so summing them over the
+            # records whose first linking pass is k counts those records
+            # once each (rounded: no DISTINCT in an observation)
+            windowed = scored.selectExpr(
+                "*", "CASE WHEN match_probability >= __t THEN __pass END AS __hit"
+            ).selectExpr(
+                "*",
+                "min(__hit) OVER (PARTITION BY record_id_l) AS __first",
+                "count(1) OVER (PARTITION BY record_id_l) AS __rows",
             )
-        g.links = kept.selectExpr(*self._links_projection("pass_name"))
+            kept = observed(
+                windowed,
+                pairs="count_if(__pass = {k} AND coalesce(__first >= {k}, true))",
+                links="count_if(__pass = {k} AND __hit = __first)",
+                records="coalesce(sum(IF(__first = {k}, 1.0D / __rows, 0.0D)), 0.0D)",
+            ).where("__hit = __first")
+        g.links = kept.selectExpr(*self._links_projection())
         return g.links
 
     def _flush_group(self, census: bool = True) -> DataFrame | None:
@@ -1027,19 +1151,27 @@ class PersonLinkageCascade:
         its links and, with ``census``, the records still eligible after
         it; returns the group's links (None when no group is pending). The
         one place the cross-pass state moves past a group, of one pass or
-        of several."""
+        of several. A single-pass group has no window to count the records
+        it links, so it always materialises that census and counts them
+        there."""
         g, self._group = self._group, None
         if g is None:
             return None
+        single = len(g.branches) == 1
         links = self._truncate(self._group_links(g))
         self._links_flushed = g.links_before.unionByName(links)
-        if census:
+        if census or single:
             # drop linked linkage records, NOT raw records — a nickname
             # variant matching doesn't stop the canonical record
-            self._census_flushed = self._truncate(
+            self._flush_census(
                 anti_join(g.census, _linked_records(links), on="record_id")
             )
-            self._block_stats = {}  # a new census state
+        observed = _ObservedGroup(g.passes, g.census_rows, g.metrics)
+        if single and self.checkpoint in ("persist", "off"):
+            observed.census_left = self._census_flushed
+        elif single:
+            observed.rows_left = self._census_rows
+        self._observed_groups.append(observed)
         return links
 
     def confirm_piks(self) -> DataFrame:
@@ -1050,7 +1182,8 @@ class PersonLinkageCascade:
         accumulator."""
         assert self._module is not None
         cfg = self._module
-        # the records still eligible are not needed past this point
+        # the records still eligible are not needed past this point (a
+        # single-pass group still counts them: _flush_group)
         self._flush_group(census=False)
 
         piks = self._reference_file.select(
@@ -1060,63 +1193,54 @@ class PersonLinkageCascade:
             piks, on="record_id_reference_file", how="left"
         )
 
-        # frames cached for the stats counts only, released at the end
-        stats_caches: list[DataFrame] = []
-        n_deceased_dropped = None
+        deceased = None
         if self.dates_of_death is not None:
             dod = self.dates_of_death.select("pik", "date_of_death")
-            alive = F.col("date_of_death").isNull() | (
-                F.col("date_of_death") > F.lit(CENSUS_DAY).cast("date")
+            deceased = _observation()
+            census_day = f"DATE'{CENSUS_DAY}'"
+            links = (
+                links.join(F.broadcast(dod), on="pik", how="left")
+                .observe(
+                    deceased,
+                    F.expr(f"count_if(date_of_death <= {census_day})").alias("rows"),
+                )
+                .where(f"date_of_death IS NULL OR date_of_death > {census_day}")
+                .drop("date_of_death")
             )
-            links = links.join(F.broadcast(dod), on="pik", how="left")
-            if self.collect_stats:
-                # the deceased count and the alive path both consume the
-                # full provisional-links+piks+dod join: cache it so the
-                # stats action doesn't recompute the module's whole link
-                # pipeline a second time
-                links = links.persist(StorageLevel.MEMORY_AND_DISK)
-                stats_caches.append(links)
-                n_deceased_dropped = links.filter(~alive).count()
-            links = links.filter(alive).drop("date_of_death")
 
         # best links per raw input record (ties kept), then drop records
         # whose tied best links name >1 distinct PIK (reference 03:2171-2207)
         best = max_per_group_with_ties(
             links, ["record_id_raw_input_file"], "match_probability"
         )
-        if self.collect_stats:
-            # consumed by the n_multi count and the confirmed pipeline —
-            # cache the window result once
-            best = best.persist(StorageLevel.MEMORY_AND_DISK)
-            stats_caches.append(best)
         # single-PIK gate as a WINDOW over the same partition key the
         # best-window and the keep_best row_number already use (r15,
         # guide §2.4/§3.3): the former groupBy(count_distinct) + left_semi
-        # self-join put `best` under TWO consumers, and with stats off
-        # (nothing persisted) the whole module link pipeline — blocking,
-        # gammas, scoring — executed twice, once per semi-join side
-        # (measured: the duplicated subtree was both 1.25s broadcast
-        # builds in the sf0.1 plan). collect_set drops NULL piks exactly
-        # as count_distinct ignored them, so the kept record set is
-        # identical; one exchange now feeds max → gate → row_number.
-        w_rec = Window.partitionBy("record_id_raw_input_file")
+        # self-join put `best` under TWO consumers, and with nothing
+        # persisted the whole module link pipeline — blocking, gammas,
+        # scoring — executed twice, once per semi-join side (measured: the
+        # duplicated subtree was both 1.25s broadcast builds in the sf0.1
+        # plan). collect_set drops NULL piks exactly as count_distinct
+        # ignored them, so the kept record set is identical; one exchange
+        # now feeds max → gate → row_number. A raw record's __nbest rows
+        # add 1/__nbest each, so the sum over the records it drops counts
+        # them once each.
+        multi_pik = _observation()
         gated = (
-            best.withColumn(
-                "__npik", F.size(F.collect_set("pik").over(w_rec))
+            best.selectExpr(
+                "*",
+                "size(collect_set(pik) OVER (PARTITION BY record_id_raw_input_file))"
+                " AS __npik",
+                "count(1) OVER (PARTITION BY record_id_raw_input_file) AS __nbest",
             )
-            .filter(F.col("__npik") <= 1)
-            .drop("__npik")
+            .observe(
+                multi_pik,
+                F.expr(
+                    "coalesce(sum(IF(__npik > 1, 1.0D / __nbest, 0.0D)), 0.0D)"
+                ).alias("rows"),
+            )
+            .where("__npik <= 1")
         )
-        if self.collect_stats:
-            n_multi = (
-                best.groupBy("record_id_raw_input_file")
-                .agg(F.count_distinct("pik").alias("num_unique_piks"))
-                .filter(F.col("num_unique_piks") > 1)
-                .count()
-            )
-            self.confirm_stats.append(
-                ConfirmStats(cfg.name, n_deceased_dropped, n_multi)
-            )
         confirmed = keep_best(
             gated,
             keys=["record_id_raw_input_file"],
@@ -1131,18 +1255,63 @@ class PersonLinkageCascade:
             "pass_name",
             "match_probability",
         )
+        self._observed_confirms.append((cfg.name, deceased, multi_pik))
 
         self.confirmed_piks = self._truncate(
             self.confirmed_piks.unionByName(confirmed)
         )
-        # after the fold: a lazy fold (persist / off modes) recomputes
-        # from the uncached plan, the same rows
-        for c in stats_caches:
-            c.unpersist()
         self._module = None
         self._census_flushed = None
         self._links_flushed = None
         return confirmed
+
+    # -- statistics ---------------------------------------------------------
+
+    @property
+    def stats(self) -> list[PassStats]:
+        """Each pass's :class:`PassStats`, in the order the passes ran; a
+        pending group's passes appear once it is flushed. Raises
+        ``RuntimeError`` when no action has run the frames they are
+        observed on yet (the 'persist' / 'off' modes)."""
+        out = []
+        for g in self._observed_groups:
+            m = self._metrics(g.metrics)
+            eligible = self._metrics(g.census_rows)["rows"]
+            if "records" in m:
+                linked = [round(n) for n in m["records"]]
+            elif g.census_left is not None:
+                linked = [eligible - g.census_left.count()]
+            else:
+                linked = [eligible - self._metrics(g.rows_left)["rows"]]
+            for stats, pairs, links, n in zip(g.passes, m["pairs"], m["links"], linked):
+                eligible -= n
+                out.append(stats(pairs, links, eligible))
+        return out
+
+    @property
+    def confirm_stats(self) -> list[ConfirmStats]:
+        """Each module's :class:`ConfirmStats`; raises as :attr:`stats`."""
+        return [
+            ConfirmStats(
+                module,
+                None if deceased is None else self._metrics(deceased)["rows"],
+                round(self._metrics(multi_pik)["rows"]),
+            )
+            for module, deceased, multi_pik in self._observed_confirms
+        ]
+
+    def _metrics(self, observation: Observation) -> dict:
+        """What ``observation`` observed. Raises instead of waiting when no
+        action has run its frame: ``Observation.get`` blocks until one
+        does, forever if none will."""
+        done = observation._jo.future().isCompleted
+        if not done():
+            # the action that ran the frame has posted its end event; the
+            # listener bus hands the metrics over from it
+            self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            if not done():
+                raise RuntimeError(_NOT_OBSERVED)
+        return observation.get
 
     # -- whole-cascade driver ----------------------------------------------
 

@@ -26,7 +26,7 @@ def run_full_pvs_cascade(
     dates_of_death: DataFrame | None = None,
     config: CascadeConfig | None = None,
     census_raw: DataFrame | None = None,
-    collect_stats: bool = True,
+    collect_stats: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, PersonLinkageCascade]:
     """Run all four modules; returns (confirmed_piks, census_piked, cascade).
 
@@ -36,6 +36,13 @@ def run_full_pvs_cascade(
     ``census_raw`` (for the final attach) defaults to distinct raw ids of
     the preprocessed input. The cascade keeps the census cached for the
     returned frames; ``cascade.release()`` drops it once they are consumed.
+
+    ``collect_stats`` is accepted and ignored: the cascade has one
+    execution path and always observes its statistics (``cascade.stats``,
+    ``cascade.confirm_stats``) inside the actions it runs anyway. The
+    keyword stays so that callers written for the former second mode,
+    such as the benchmark's pvs workload (``collect_stats=False``), run
+    unchanged.
     """
     census = add_pseudo_household_id(census)
     config = config or default_cascade_config()
@@ -54,7 +61,6 @@ def run_full_pvs_cascade(
         },
         model,
         dates_of_death=dates_of_death,
-        collect_stats=collect_stats,
     )
     for mod in config.modules:
         if mod.reference_file_name == "hhcomp_reference_file":

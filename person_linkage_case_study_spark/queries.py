@@ -4294,7 +4294,6 @@ def cascade_mini(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"ref": ref},
         model,
         dates_of_death=None,
-        collect_stats=False,
         # single pass — lineage can't grow, so skip the checkpoint jobs
         checkpoint="off",
     )

@@ -5,6 +5,7 @@ variables), geosearch geokey pass + namesearch, deceased-link dropping,
 multi-PIK conflict dropping, ≤1-PIK invariant, final 1:1 attach.
 """
 
+import dataclasses
 import re
 
 import pytest
@@ -126,6 +127,41 @@ def make_model() -> LinkageModel:
     return LinkageModel(comps, lambda_prior=1e-3)
 
 
+#: two modules of one pass each: each module's lone pass runs as a group
+#: of its own that flushes at confirm
+TWO_MODULES = CascadeConfig(
+    modules=[
+        ModuleConfig(
+            name="geosearch",
+            reference_file_name="geobase_reference_file",
+            cut_columns=["zip3"],
+            matching_columns=[
+                "first_name_15", "last_name_12", "middle_initial",
+                "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
+            ],
+            passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
+        ),
+        ModuleConfig(
+            name="namesearch",
+            reference_file_name="name_dob_reference_file",
+            cut_columns=["first_initial_cut", "last_initial_cut"],
+            matching_columns=[
+                "first_name_15", "last_name_12", "middle_initial",
+                "day_of_birth", "month_of_birth", "year_of_birth",
+            ],
+            passes=[
+                PassConfig(
+                    "dob and nysiis",
+                    ["day_of_birth", "month_of_birth", "year_of_birth",
+                     "first_name_nysiis", "last_name_nysiis"],
+                    0.9,
+                ),
+            ],
+        ),
+    ]
+)
+
+
 @pytest.fixture(scope="module")
 def cascade_result(spark, fixture):
     census, geobase, name_dob, fake_names, dod = fixture
@@ -133,37 +169,6 @@ def cascade_result(spark, fixture):
     prepped_geobase = preprocess_reference_file(geobase)
     prepped_name_dob = preprocess_reference_file(name_dob, has_address=False)
 
-    config = CascadeConfig(
-        modules=[
-            ModuleConfig(
-                name="geosearch",
-                reference_file_name="geobase_reference_file",
-                cut_columns=["zip3"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
-                ],
-                passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
-            ),
-            ModuleConfig(
-                name="namesearch",
-                reference_file_name="name_dob_reference_file",
-                cut_columns=["first_initial_cut", "last_initial_cut"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth",
-                ],
-                passes=[
-                    PassConfig(
-                        "dob and nysiis",
-                        ["day_of_birth", "month_of_birth", "year_of_birth",
-                         "first_name_nysiis", "last_name_nysiis"],
-                        0.9,
-                    ),
-                ],
-            ),
-        ]
-    )
     cascade = PersonLinkageCascade(
         spark,
         prepped_census,
@@ -174,7 +179,7 @@ def cascade_result(spark, fixture):
         make_model(),
         dates_of_death=dod,
     )
-    confirmed = cascade.run(config)
+    confirmed = cascade.run(TWO_MODULES)
     return cascade, confirmed.collect()
 
 
@@ -236,7 +241,6 @@ def test_full_pvs_pipeline(spark, fixture):
         make_model(),
         dates_of_death=dod,
         census_raw=census,
-        collect_stats=False,
     )
     rows = confirmed.collect()
     by_raw = {r["record_id_raw_input_file"]: r["pik"] for r in rows}
@@ -246,8 +250,9 @@ def test_full_pvs_pipeline(spark, fixture):
     raws = [r["record_id_raw_input_file"] for r in rows]
     assert len(raws) == len(set(raws))  # ≤1 PIK per raw record
     assert census_piked.count() == census.count()
-    # 15 passes ran across 4 modules (stats disabled -> check module flow
-    # completed by confirmed accumulator schema intact)
+    # 15 passes ran across 4 modules, and the accumulator schema is intact
+    assert [s.module for s in cascade.stats] == ["geosearch"] * 5 + [
+        "namesearch"] * 4 + ["dobsearch"] * 4 + ["hhcompsearch"] * 2
     assert set(confirmed.columns) >= {
         "record_id_raw_input_file", "pik", "module_name", "pass_name",
     }
@@ -259,37 +264,6 @@ def test_checkpoint_off_matches_local(spark, fixture, cascade_result):
     mode on the 2-module fixture cascade."""
     census, geobase, name_dob, fake_names, dod = fixture
     prepped_census = preprocess_census(census, fake_names, gq_threshold=99)
-    config = CascadeConfig(
-        modules=[
-            ModuleConfig(
-                name="geosearch",
-                reference_file_name="geobase_reference_file",
-                cut_columns=["zip3"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
-                ],
-                passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
-            ),
-            ModuleConfig(
-                name="namesearch",
-                reference_file_name="name_dob_reference_file",
-                cut_columns=["first_initial_cut", "last_initial_cut"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth",
-                ],
-                passes=[
-                    PassConfig(
-                        "dob and nysiis",
-                        ["day_of_birth", "month_of_birth", "year_of_birth",
-                         "first_name_nysiis", "last_name_nysiis"],
-                        0.9,
-                    ),
-                ],
-            ),
-        ]
-    )
     off = PersonLinkageCascade(
         spark,
         prepped_census,
@@ -305,7 +279,7 @@ def test_checkpoint_off_matches_local(spark, fixture, cascade_result):
     )
     got = {
         (r["record_id_raw_input_file"], r["pik"])
-        for r in off.run(config).collect()
+        for r in off.run(TWO_MODULES).collect()
     }
     _, confirmed_rows = cascade_result
     want = {(r["record_id_raw_input_file"], r["pik"]) for r in confirmed_rows}
@@ -688,40 +662,9 @@ def test_checkpoint_disk_only_matches_local(spark, fixture, cascade_result):
         for i in new
     ), [i.storageLevel().toString() for i in new]
     assert kept.count() == 10_000
-    config = CascadeConfig(
-        modules=[
-            ModuleConfig(
-                name="geosearch",
-                reference_file_name="geobase_reference_file",
-                cut_columns=["zip3"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
-                ],
-                passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
-            ),
-            ModuleConfig(
-                name="namesearch",
-                reference_file_name="name_dob_reference_file",
-                cut_columns=["first_initial_cut", "last_initial_cut"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth",
-                ],
-                passes=[
-                    PassConfig(
-                        "dob and nysiis",
-                        ["day_of_birth", "month_of_birth", "year_of_birth",
-                         "first_name_nysiis", "last_name_nysiis"],
-                        0.9,
-                    ),
-                ],
-            ),
-        ]
-    )
     got = {
         (r["record_id_raw_input_file"], r["pik"])
-        for r in disk.run(config).collect()
+        for r in disk.run(TWO_MODULES).collect()
     }
     _, confirmed_rows = cascade_result
     want = {(r["record_id_raw_input_file"], r["pik"]) for r in confirmed_rows}
@@ -847,12 +790,17 @@ def test_unknown_checkpoint_mode_rejected(spark, fixture):
         )
 
 
-def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
+def _run_default_cascade(spark, fixture, auto_pin, on_pass=None):
     """run_full_pvs_cascade (default 4-module / 15-pass config) on the
-    hand-built fixture, counting the block-statistics queries the cascade
-    runs; ``on_pass(cascade, pass_cfg)`` is called before each pass."""
+    hand-built fixture, its cascade built with ``auto_pin`` (False: every
+    pass a group of one, sequential elimination), counting the
+    block-statistics queries the cascade runs; ``on_pass(cascade,
+    pass_cfg)`` is called before each pass. Returns the confirmed links,
+    the number of queries and the cascade."""
+    import functools
+
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
-    from person_linkage_case_study_spark.plans.pipeline import run_full_pvs_cascade
+    from person_linkage_case_study_spark.plans import pipeline
 
     census, geobase, name_dob, fake_names, dod = fixture
     calls = []
@@ -871,8 +819,12 @@ def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
     mp = pytest.MonkeyPatch()
     mp.setattr(cascade_mod, "block_statistics", stats)
     mp.setattr(PersonLinkageCascade, "run_matching_pass", run_pass)
+    mp.setattr(
+        pipeline, "PersonLinkageCascade",
+        functools.partial(PersonLinkageCascade, auto_pin=auto_pin),
+    )
     try:
-        confirmed, _, _ = run_full_pvs_cascade(
+        confirmed, _, cascade = pipeline.run_full_pvs_cascade(
             spark,
             preprocess_census(census, fake_names, gq_threshold=99),
             preprocess_reference_file(geobase),
@@ -880,7 +832,6 @@ def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
             make_model(),
             dates_of_death=dod,
             census_raw=census,
-            collect_stats=collect_stats,
         )
         links = {
             (r["record_id_raw_input_file"], r["pik"], r["pass_name"])
@@ -888,16 +839,16 @@ def _run_default_cascade(spark, fixture, collect_stats, on_pass=None):
         }
     finally:
         mp.undo()
-    return links, len(calls)
+    return links, len(calls), cascade
 
 
 def test_one_stats_query_per_group_start(spark, fixture):
-    """Without stats, the default cascade on a small world runs one
-    block-statistics query per group start (each module is one group),
-    not one per pass. Each pass's statistics equal estimate_pair_stats
-    over the pass's own sides at the census it reads, so its plan is the
-    one they derive (no knob), and the links match a stats-on run's
-    (every pass a group of one, with a query of its own)."""
+    """The default cascade on a small world runs one block-statistics
+    query per group start (each module is one group), not one per pass.
+    Each pass's statistics equal estimate_pair_stats over the pass's own
+    sides at the census it reads, so its plan is the one they derive (no
+    knob), and the links match sequential elimination's (auto_pin=False:
+    every pass a group of one, which reads no statistics)."""
     from person_linkage_case_study_spark.operators.blocking import (
         estimate_pair_stats,
     )
@@ -911,22 +862,22 @@ def test_one_stats_query_per_group_start(spark, fixture):
         )
         plans.append((pass_cfg.name, plan, own))
 
-    links_off, n_off = _run_default_cascade(spark, fixture, False, compare)
-    assert n_off == 4
+    links_grouped, n_grouped, _ = _run_default_cascade(spark, fixture, True, compare)
+    assert n_grouped == 4
     assert len(plans) == 15
     for name, plan, own in plans:
         assert plan.stats == own, name
         assert (plan.num_partitions, plan.salt_partitions) == (None, None), name
-    links_on, n_on = _run_default_cascade(spark, fixture, True)
-    assert n_on == 15
-    assert links_off == links_on and links_on
+    links_sequential, n_sequential, _ = _run_default_cascade(spark, fixture, False)
+    assert n_sequential == 0
+    assert links_grouped == links_sequential and links_sequential
 
 
 def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
     """Sizing passes from exact statistics keeps the hot-key derivation,
     and a pass whose statistics derive a knob runs as a group of one with
     those knobs: the hot-key pass of test_auto_pin_resolution, in the
-    module's config and run without stats, reads one statistics query,
+    module's config, reads one statistics query,
     blocks with pin = shuffle.partitions and salt = 5 and leaves no group
     pending. The spread pass (one reference row per key) derives neither
     and starts a group."""
@@ -970,8 +921,7 @@ def test_bound_gate_keeps_hot_key_derivation(spark, monkeypatch):
     def run(census_df, ref_df):
         # checkpoints off: the pass's plan is built, not run
         c = PersonLinkageCascade(
-            spark, census_df, {"ref": ref_df}, make_model(),
-            collect_stats=False, checkpoint="off",
+            spark, census_df, {"ref": ref_df}, make_model(), checkpoint="off",
         )
         c.start_module(
             ModuleConfig(
@@ -1045,13 +995,14 @@ def group_inputs(spark, fixture):
     )
 
 
-def _run_group_module(spark, group_inputs, collect_stats, on_pass=None):
-    """Start GROUP_MODULE and run GROUP_RUN_ORDER; ``on_pass(cascade,
+def _run_group_module(spark, group_inputs, auto_pin, on_pass=None):
+    """Start GROUP_MODULE and run GROUP_RUN_ORDER (``auto_pin=False``:
+    every pass a group of one, sequential elimination); ``on_pass(cascade,
     pass_cfg)`` is called after each pass."""
     census, geobase = group_inputs
     cascade = PersonLinkageCascade(
         spark, census, {"geobase_reference_file": geobase}, make_model(),
-        collect_stats=collect_stats,
+        auto_pin=auto_pin,
     )
     cascade.start_module(GROUP_MODULE)
     for p in GROUP_RUN_ORDER:
@@ -1071,7 +1022,7 @@ def _link_rows(df):
 
 @pytest.fixture(scope="module")
 def group_run(spark, group_inputs):
-    """GROUP_MODULE without stats, with the Spark jobs run so far, the
+    """GROUP_MODULE as it runs by default, with the Spark jobs run so far, the
     jobs of each statistics query so far, the links frame's schema and its
     optimized plan after every pass."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
@@ -1105,7 +1056,7 @@ def group_run(spark, group_inputs):
     mp.setattr(cascade_mod, "block_statistics", stats)
     sc.setJobGroup(group_id, "pass group")
     try:
-        cascade = _run_group_module(spark, group_inputs, False, snapshot)
+        cascade = _run_group_module(spark, group_inputs, True, snapshot)
     finally:
         mp.undo()
         for key in ("spark.jobGroup.id", "spark.job.description",
@@ -1116,13 +1067,13 @@ def group_run(spark, group_inputs):
 
 def test_pass_group_links_equal_sequential(spark, group_inputs, group_run):
     """The passes run as groups link exactly what sequential elimination
-    (stats on: every pass a group of one) links: a record linked by two
+    (auto_pin=False: every pass a group of one) links: a record linked by two
     passes keeps the earlier pass's links, each pass applies its own
     threshold, the name-switch pass links the transposed record, and a
     pass outside the config flushes the group before the next one."""
     grouped, _ = group_run
     sequential = _link_rows(
-        _run_group_module(spark, group_inputs, True)._provisional_links
+        _run_group_module(spark, group_inputs, False)._provisional_links
     )
     assert grouped == sequential
 
@@ -1177,9 +1128,11 @@ def test_pass_group_schema_is_links_template(group_run):
 def test_pass_group_plan_shape(group_run):
     """The three-pass group's optimized plan: one Window, above the Union
     of the three branches, and no probability Filter below the Union
-    (pushed into every branch it made constraint propagation blow up)."""
+    (pushed into every branch it made constraint propagation blow up);
+    one CollectMetrics node observes the group's statistics."""
     _, after = group_run
     assert pass_group_plan_problems(after[2]["plan"], branches=3) == []
+    assert after[2]["plan"].count("CollectMetrics ") == 1
 
 
 def _logical_rdd_columns(tree: str) -> list[list[str]]:
@@ -1207,7 +1160,7 @@ def test_empty_seeds_prune_from_plans(spark, group_inputs, group_run):
     census, geobase = group_inputs
     cascade = PersonLinkageCascade(
         spark, census, {"geobase_reference_file": geobase}, make_model(),
-        collect_stats=False, checkpoint="off",
+        checkpoint="off",
     )
     cascade.start_module(GROUP_MODULE)
     for p in GROUP_MODULE.passes:
@@ -1226,7 +1179,9 @@ def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,
                                           monkeypatch):
     """A pass that would take its group past PASS_GROUP_MAX_PAIRS starts a
     new group; a group holding a single pass keeps the
-    pairs over its threshold without a window; the links do not change."""
+    pairs over its threshold without a window, and its threshold Filter
+    stays out of the block join's condition (pushed there, the whole
+    inlined score ran in the join); the links do not change."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
 
     monkeypatch.setattr(cascade_mod, "PASS_GROUP_MAX_PAIRS", 1)
@@ -1240,9 +1195,12 @@ def test_pass_group_cap_starts_new_groups(spark, group_inputs, group_run,
                 .optimizedPlan().treeString()
             )
 
-    cascade = _run_group_module(spark, group_inputs, False, snapshot)
+    cascade = _run_group_module(spark, group_inputs, True, snapshot)
     assert len(plans) == 4
     assert not [p for p in plans if "Window " in p]
+    joins = [line for p in plans for line in p.splitlines() if "Join " in line]
+    assert len(joins) == 4
+    assert not [line for line in joins if "POWER(" in line or "jaro_winkler" in line]
     grouped, _ = group_run
     assert _link_rows(cascade._provisional_links) == grouped
 
@@ -1261,7 +1219,7 @@ def test_pass_group_plans_once_when_read(spark, group_inputs, group_run,
         cascade_mod, "score_pairs",
         lambda *a, **k: calls.append(1) or real_score(*a, **k),
     )
-    cascade = _run_group_module(spark, group_inputs, False)
+    cascade = _run_group_module(spark, group_inputs, True)
     links = _link_rows(cascade._provisional_links)
     assert len(calls) == 3
     grouped, _ = group_run
@@ -1273,10 +1231,8 @@ def test_stats_query_covers_the_passes_that_may_group(spark, group_inputs,
     """On a miss, the statistics query covers the asking pass and the
     module's later passes that may join a group (OUTSIDE's explicit knob
     keeps it out, so it queries on its own). A pass that cannot group, as
-    every pass with stats on, queries only itself: the census changes
-    right after it."""
-    import dataclasses
-
+    every pass with auto_pin=False, queries only itself: the census
+    changes right after it."""
     from person_linkage_case_study_spark.plans import cascade as cascade_mod
 
     census, geobase = group_inputs
@@ -1290,10 +1246,10 @@ def test_stats_query_covers_the_passes_that_may_group(spark, group_inputs,
     module = dataclasses.replace(
         GROUP_MODULE, passes=[GEOKEY_STRICT, OUTSIDE, NAME_1_SWITCHED, BIRTH_YEAR]
     )
-    for collect_stats in (False, True):
+    for auto_pin in (True, False):
         cascade = PersonLinkageCascade(
             spark, census, {"geobase_reference_file": geobase}, make_model(),
-            collect_stats=collect_stats,
+            auto_pin=auto_pin,
         )
         cascade.start_module(module)
         for p in module.passes:
@@ -1313,7 +1269,6 @@ def test_pass_stats_build_no_frame(spark, group_inputs, monkeypatch):
     census, geobase = group_inputs
     cascade = PersonLinkageCascade(
         spark, census, {"geobase_reference_file": geobase}, make_model(),
-        collect_stats=False,
     )
     cascade.start_module(GROUP_MODULE)
     sides = []
@@ -1421,7 +1376,7 @@ def test_large_census_forms_no_group(spark, group_inputs, group_run, monkeypatch
     def no_group(cascade, pass_cfg):
         assert cascade._group is None, pass_cfg.name
 
-    cascade = _run_group_module(spark, group_inputs, False, on_pass=no_group)
+    cascade = _run_group_module(spark, group_inputs, True, on_pass=no_group)
     assert len(queries) == len(GROUP_RUN_ORDER)
     assert len(pins) == len(GROUP_RUN_ORDER) and None not in pins
     grouped, _ = group_run
@@ -1429,9 +1384,10 @@ def test_large_census_forms_no_group(spark, group_inputs, group_run, monkeypatch
 
 
 def test_stats_cascade_leaves_no_persisted_rdds(spark, fixture):
-    """A cascade with stats (its confirm caches two frames per module for
-    the counts) persists nothing past the run once its frames are
-    dropped: getPersistentRDDs returns to the ids it had before."""
+    """A cascade, whose statistics are observed in its own actions (its
+    confirm caches nothing for them), persists nothing past the run once
+    its frames are dropped: getPersistentRDDs returns to the ids it had
+    before."""
     import gc
     import time
 
@@ -1467,7 +1423,6 @@ def test_stats_cascade_leaves_no_persisted_rdds(spark, fixture):
         },
         make_model(),
         dates_of_death=dod,
-        collect_stats=True,
     )
     config = CascadeConfig(
         modules=[
@@ -1490,3 +1445,107 @@ def test_stats_cascade_leaves_no_persisted_rdds(spark, fixture):
         collect_garbage()
         left = persisted() - before
     assert not left
+
+
+def _two_module_cascade(spark, fixture, **cascade_kw):
+    """The TWO_MODULES cascade on the hand-built fixture, not yet run."""
+    census, geobase, name_dob, fake_names, dod = fixture
+    return PersonLinkageCascade(
+        spark,
+        preprocess_census(census, fake_names, gq_threshold=99),
+        {
+            "geobase_reference_file": preprocess_reference_file(geobase),
+            "name_dob_reference_file": preprocess_reference_file(
+                name_dob, has_address=False
+            ),
+        },
+        make_model(),
+        dates_of_death=dod,
+        **cascade_kw,
+    )
+
+
+def test_observed_stats_equal_sequential(spark, fixture, group_inputs, monkeypatch):
+    """Every PassStats and ConfirmStats a run observes equals sequential
+    elimination's (auto_pin=False: every pass a group of one, its pairs
+    and links counted on its own frames): on the default 15-pass config
+    (each module one group), on GROUP_MODULE (a three-pass group, OUTSIDE
+    as a group of one, then a single-pass group), with the single-pass
+    groups a cap of one pair forces, and on TWO_MODULES, whose lone
+    passes flush at confirm."""
+    from person_linkage_case_study_spark.plans import cascade as cascade_mod
+
+    _, _, grouped = _run_default_cascade(spark, fixture, True)
+    _, _, sequential = _run_default_cascade(spark, fixture, False)
+    assert len(grouped.stats) == 15 and len(grouped.confirm_stats) == 4
+    assert grouped.stats == sequential.stats
+    assert grouped.confirm_stats == sequential.confirm_stats
+
+    def group_module(auto_pin):
+        cascade = _run_group_module(spark, group_inputs, auto_pin)
+        cascade.confirm_piks()
+        return cascade.stats, cascade.confirm_stats
+
+    want = group_module(False)
+    # (pass, pairs, links, records left) of the 9 linkage records: c5 and
+    # c9 link twice each (P5A, P5B)
+    assert [
+        (s.pass_name, s.n_pairs_estimated, s.n_links, s.n_still_eligible)
+        for s in want[0]
+    ] == [
+        ("geokey", 10, 5, 5), ("name_1 switched", 2, 2, 4), ("birth year", 2, 2, 2),
+        ("name_2 outside", 1, 0, 2), ("geokey loose", 1, 1, 1),
+    ]
+    assert [s.salt_partitions for s in want[0]] == [None, None, None, 1, None]
+    assert group_module(True) == want
+    monkeypatch.setattr(cascade_mod, "PASS_GROUP_MAX_PAIRS", 1)
+    assert group_module(True) == want
+
+    def two_modules(auto_pin):
+        cascade = _two_module_cascade(spark, fixture, auto_pin=auto_pin)
+        cascade.run(TWO_MODULES)
+        return cascade.stats, cascade.confirm_stats
+
+    assert two_modules(True) == two_modules(False)
+
+
+@pytest.mark.parametrize("checkpoint", ["off", "persist"])
+def test_lazy_checkpoint_stats_arrive_with_first_action(
+    spark, group_inputs, checkpoint
+):
+    """In the lazy checkpoint modes the statistics arrive with the
+    caller's first action on the cascade's output. Read before it, they
+    raise rather than wait (an observation waits for its frame's first
+    action, forever when none comes). After it, a two-module run's (a
+    three-pass group, then a one-pass module whose census no later frame
+    reads) equal the 'local' run's: every observed node has a name of its
+    own, though each later plan holds the earlier plans' nodes."""
+    census, geobase = group_inputs
+    config = CascadeConfig(
+        modules=[
+            dataclasses.replace(
+                GROUP_MODULE, passes=[GEOKEY_STRICT, NAME_1_SWITCHED, BIRTH_YEAR]
+            ),
+            dataclasses.replace(
+                GROUP_MODULE, name="geokey loose", passes=[GEOKEY_LOOSE]
+            ),
+        ]
+    )
+
+    def run(mode):
+        cascade = PersonLinkageCascade(
+            spark, census, {"geobase_reference_file": geobase}, make_model(),
+            checkpoint=mode,
+        )
+        return cascade, cascade.run(config)
+
+    local, _ = run("local")
+    lazy, confirmed = run(checkpoint)
+    with pytest.raises(RuntimeError, match="none has run yet"):
+        lazy.stats
+    with pytest.raises(RuntimeError, match="none has run yet"):
+        lazy.confirm_stats
+    assert confirmed.count() > 0
+    assert len(local.stats) == 4
+    assert lazy.stats == local.stats
+    assert lazy.confirm_stats == local.confirm_stats

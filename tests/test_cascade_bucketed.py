@@ -88,7 +88,6 @@ def _pass_plan(spark, census_pre, geobase_pre) -> tuple[str, int]:
         census_pre,
         {"geobase_reference_file": geobase_pre},
         make_model(),
-        collect_stats=False,
     )
     cascade.start_module(mod)
     links = cascade.build_pass_links(p)
@@ -202,7 +201,6 @@ def test_late_cascade_pass_flips_to_broadcast(spark):
         census_pre,
         {"geobase_reference_file": geobase_pre},
         make_model(),
-        collect_stats=False,
         checkpoint="persist",
     )
     cascade.start_module(mod)
@@ -238,7 +236,6 @@ def test_late_cascade_pass_flips_to_broadcast(spark):
             census_pre,
             {"geobase_reference_file": geobase_pre},
             make_model(),
-            collect_stats=False,
             checkpoint="persist",
         )
         fresh.start_module(mod)

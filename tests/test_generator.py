@@ -241,7 +241,7 @@ def test_generator_feeds_full_pipeline(spark):
         spark, prepped_census,
         {"geobase_reference_file": prepped_geobase,
          "name_dob_reference_file": prepped_name_dob},
-        model, dates_of_death=dod, collect_stats=False,
+        model, dates_of_death=dod,
     )
     confirmed = cascade.run(config).cache()
     n_census = census_raw.count()

@@ -9,13 +9,17 @@ namesearch-style pass) with the full comparison set: JW names, banded DOB
 parts, exact middle initial.
 
 Prints one JSON line: {"metric": "cascade_wall", "value": sec,
-"records": N, "links": M, "sf": ...}.
+"records": N, "links": M, "sf": ..., "passes": [...], "confirm": [...]},
+where ``passes`` is the per-pass table the cascade observed (module,
+pass, pairs, links, records still eligible, pin, salt, checkpoint
+storage level) and ``confirm`` each module's confirm drops.
 
 Usage: python tools/bench_linkage.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import sys
@@ -45,6 +49,27 @@ FIRST = ["JAMES", "MARY", "ROBERT", "PATRICIA", "JOHN", "JENNIFER", "MICHAEL",
 LAST = ["SMITH", "JOHNSON", "WILLIAMS", "BROWN", "JONES", "GARCIA", "MILLER",
         "DAVIS", "RODRIGUEZ", "MARTINEZ", "HERNANDEZ", "LOPEZ", "GONZALEZ",
         "WILSON", "ANDERSON", "THOMAS", "TAYLOR", "MOORE", "JACKSON", "MARTIN"]
+
+
+def cascade_report(cascade: PersonLinkageCascade) -> dict:
+    """The run's per-pass table and confirm drops, as the cascade
+    observed them in the actions it ran (reading them runs no job)."""
+    return {
+        "passes": [
+            {
+                "module": s.module,
+                "pass": s.pass_name,
+                "pairs": s.n_pairs_estimated,
+                "links": s.n_links,
+                "eligible": s.n_still_eligible,
+                "pin": s.num_partitions,
+                "salt": s.salt_partitions,
+                "storage": None if s.storage_level is None else str(s.storage_level),
+            }
+            for s in cascade.stats
+        ],
+        "confirm": [dataclasses.asdict(c) for c in cascade.confirm_stats],
+    }
 
 
 def synthesize(spark, sf_dir, scale_mult: int = 1, moduli_mult: int | None = None):
@@ -335,7 +360,7 @@ def main() -> None:
         )
         t0 = time.time()
         cascade = PersonLinkageCascade(
-            spark, census, {"ref": ref}, make_model(), collect_stats=False
+            spark, census, {"ref": ref}, make_model()
         )
         confirmed = cascade.run(
             CascadeConfig(
@@ -375,6 +400,7 @@ def main() -> None:
             ),
             "mult": scale_mult,
             "sf": sf,
+            **cascade_report(cascade),
         }))
         return
 
@@ -429,7 +455,7 @@ def main() -> None:
     # the zero-knob path end-to-end, like skew-full-auto does for
     # salt+pin.
     cascade = PersonLinkageCascade(
-        spark, census, {"ref": ref}, make_model(), collect_stats=False,
+        spark, census, {"ref": ref}, make_model(),
         auto_pin=(mode != "skew"),
     )
     confirmed = cascade.run(config)
@@ -444,6 +470,7 @@ def main() -> None:
         "links": n_links,
         "link_rate": round(n_links / n_records, 4),
         "sf": sf,
+        **cascade_report(cascade),
     }
     if mode in ("skew", "skew-salted", "skew-full-auto"):
         hot_c = census.filter(F.col("zip3") == "H00").count()

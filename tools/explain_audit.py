@@ -7,7 +7,8 @@ Checks, per audited query:
 - WholeStageCodegen spans exist around the scoring arithmetic;
 - the cascade derives salt and pin for a hot pass only, and runs proved
   passes as one group: one Window above the Union of the branches, no
-  threshold Filter below it.
+  threshold Filter below it, and one CollectMetrics node observing the
+  group's statistics.
 
 Usage: python tools/explain_audit.py [sf_dir]
 Exits non-zero if an invariant fails; prints a short report.
@@ -217,7 +218,7 @@ def main() -> None:
             "pik", F.concat(F.lit("P"), F.col("record_id"))
         )
         casc = PersonLinkageCascade(
-            spark, census, {"ref": ref}, model, collect_stats=False
+            spark, census, {"ref": ref}, model
         )
         casc.start_module(module)
         plan = casc.resolve_pass_plan(zero_knob)
@@ -265,18 +266,18 @@ def main() -> None:
         census.withColumn("alt_key", F.col("geokey_for_blocking")),
         {"ref": ref.withColumn("alt_key", F.col("geokey_for_blocking"))},
         model,
-        collect_stats=False,
     )
     casc.start_module(group_module)
     for p in group_module.passes:
         casc.run_matching_pass(p)
-    problems = pass_group_plan_problems(
-        casc._provisional_links._jdf.queryExecution().optimizedPlan().treeString(),
-        branches=len(group_module.passes),
-    )
+    tree = casc._provisional_links._jdf.queryExecution().optimizedPlan().treeString()
+    problems = pass_group_plan_problems(tree, branches=len(group_module.passes))
     check("group", not problems,
           "one Window above the branches' Union, no threshold Filter below it"
           + (f" ({'; '.join(problems)})" if problems else ""))
+    observed = tree.count("CollectMetrics ")
+    check("group", observed == 1,
+          f"the group's statistics observed in its plan (got {observed} CollectMetrics)")
     casc.census.unpersist()
 
     if failures:

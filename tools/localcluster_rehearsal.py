@@ -180,7 +180,7 @@ def main() -> None:
     salt = derive_salt(st.max_key_pairs, pair_row_bytes=rb)
 
     cascade = PersonLinkageCascade(
-        spark, census, {"ref": ref}, make_model(), collect_stats=False
+        spark, census, {"ref": ref}, make_model()
     )
     t0 = time.time()
     confirmed = cascade.run(cascade_config())
