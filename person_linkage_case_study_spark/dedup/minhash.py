@@ -4,11 +4,14 @@ Pipeline: word shingles → crc32 base hash (JVM built-in) → k seeded
 affine permutations min-reduced per doc → band keys → bucket self-join →
 candidate pairs with estimated Jaccard.
 
-Scale shape: one explode (docs × shingles), one groupBy(doc) for
-signatures, one groupBy(band) join for candidates. No Python in the row
-path; permutation constants are plan literals. Band buckets are the
-classic LSH guarantee: two docs with Jaccard ≥ t collide in ≥1 band with
-probability 1-(1-t^r)^b.
+Scale shape: the default ("arrow") engine hashes shingles in one JVM
+projection and min-reduces the permutations per document in a numpy
+pandas UDF, a Python stage sized by ``session.task_width``; the "agg"
+engine stays in the JVM (one explode of docs × shingles, one groupBy(doc)).
+Either way permutation constants are plan literals, and one groupBy(band)
+join makes the candidates. Band buckets are the classic LSH guarantee:
+two docs with Jaccard ≥ t collide in ≥1 band with probability
+1-(1-t^r)^b.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import task_width
 from ..textops.analysis import tokens
 
 # prime just above 2^32 (crc32 range)
@@ -35,16 +39,9 @@ _A_MAX = 2**31
 # 32-core run 2.6×). Measured ladder at sf0.1 (tools/profile_r16.py):
 # 1 part 1.16s / 2 0.66 / 4 0.52 / 8 0.43 / 16 0.51 / 32 0.62 — minimum
 # at ~625 rows/task, flat 4-16. 512 keeps every sf near the flat bottom
-# and the defaultParallelism cap restores full width at corpus scale
-# (the same rows_per_task-capped-at-par shape as the mm tier ladder,
-# queries.py _mm_tier_frames.parts()).
+# and the defaultParallelism cap of session.task_width, the one sizing
+# rule, restores full width at corpus scale.
 _SPREAD_ROWS_PER_TASK = 512
-
-
-def _spread_parts(n_rows: int, parallelism: int) -> int:
-    """Partition count for the raw-row parallelism spread: corpus-derived
-    (ceil(n / _SPREAD_ROWS_PER_TASK)), capped at ``parallelism``, floor 2."""
-    return max(2, min(parallelism, -(-n_rows // _SPREAD_ROWS_PER_TASK)))
 
 
 def _permutation_constants(k: int, seed: int) -> list[tuple[int, int]]:
@@ -276,8 +273,7 @@ def _minhash_signatures_arrow(
         # defaultParallelism: a fixed full-width spread anti-scaled at
         # small corpora (r16; see _SPREAD_ROWS_PER_TASK), while the cap
         # keeps crawl-scale behavior identical to the r15 shape
-        sc = df.sparkSession.sparkContext
-        n_parts = _spread_parts(df.count(), sc.defaultParallelism)
+        n_parts = task_width(df.sparkSession, df.count(), _SPREAD_ROWS_PER_TASK)
         spread = (
             df.select(id_col, text_col)
             .filter(F.col(text_col).isNotNull())

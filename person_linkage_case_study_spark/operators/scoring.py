@@ -20,6 +20,7 @@ agree bit-for-bit before any rounding.
 from __future__ import annotations
 
 import math
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -187,5 +188,14 @@ def score_pairs(
         " + power(CAST(2.0 AS DOUBLE), -match_weight)) AS match_probability",
     )
     if threshold_match_probability is not None:
-        df = df.filter(F.col("match_probability") >= threshold_match_probability)
+        # The Filter sits above an observation, whose count nothing reads,
+        # because Catalyst pushes no Filter through one. Pushed, the
+        # threshold went into the block join's condition with the whole
+        # score inlined, a Jaro-Winkler call per gamma level where the
+        # projection makes one per comparison; the cascade's single-pass
+        # groups ran 5.5x slower that way (plans/cascade.py). The name is
+        # unique because one plan may union several such frames.
+        df = df.observe(
+            f"score_pairs_{uuid.uuid4().hex}", F.expr("count(1)").alias("pairs")
+        ).filter(F.col("match_probability") >= threshold_match_probability)
     return df

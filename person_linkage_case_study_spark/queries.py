@@ -29,6 +29,7 @@ from .operators.dedup import keep_best, max_per_group_with_ties
 from .operators.gamma import DUCKDB, banded_comparison, jw_comparison
 from .operators.joins import anti_join, semi_join, validated_one_to_one_join
 from .operators.scoring import LinkageModel, match_weight_sql, score_pairs
+from .session import task_width
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -2927,9 +2928,10 @@ def _mm_tier_frames(spark: SparkSession, sf_dir: str):
       ms/row). The measured per-python-task dispatch overhead on this
       host is ~7-10 ms and largely serialized, so a 32-partition stage
       of a trivial kernel cost ~0.7 s wall while 4 partitions cost
-      ~0.2 s — python-task count must track actual CPU. Caps are
-      ``defaultParallelism``, so on a real cluster every tier degrades
-      to full-width — nothing here is local[32]-specific.
+      ~0.2 s — python-task count must track actual CPU. Each tier's
+      width is ``session.task_width`` of its rows per task, the one
+      sizing rule, whose ``defaultParallelism`` cap sends every tier to
+      full width on a real cluster — nothing here is local[32]-specific.
     """
     import numpy as np
     import pandas as pd
@@ -2950,17 +2952,12 @@ def _mm_tier_frames(spark: SparkSession, sf_dir: str):
     media = attach_media_payload(
         d, bytes_col="text", id_col="doc_id", media_type="text/plain", source_col="source"
     )
-    par = spark.sparkContext.defaultParallelism
     # corpus size (parquet metadata-only count, one cheap job) drives the
     # partition ladder; the defaultParallelism cap keeps it scale-adaptive
     n_docs = d.count()
-
-    def parts(rows_per_task: int) -> int:
-        return max(2, min(par, -(-n_docs // rows_per_task)))
-
-    heavy_n = parts(150)  # FLAC encode+decode ≈ 4 ms/row
-    mid_n = parts(400)  # JPEG / MPEG L1+L2 / pHash-PNG ≈ 1-1.3 ms/row
-    light_n = parts(1250)  # metadata walks / tiny codecs ≤ 0.3 ms/row
+    heavy_n = task_width(spark, n_docs, 150)  # FLAC encode+decode ≈ 4 ms/row
+    mid_n = task_width(spark, n_docs, 400)  # JPEG / MPEG L1+L2 / pHash-PNG ≈ 1-1.3 ms/row
+    light_n = task_width(spark, n_docs, 1250)  # metadata walks / tiny codecs ≤ 0.3 ms/row
 
     # text-payload feature pass + source carry: light CPU. At crawl scale
     # the source arrives multi-split and this is a no-op-sized shuffle.

@@ -52,12 +52,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import task_width
 from .ann import (  # noqa: F401  (auto_planes re-exported)
     _buckets_udf,
     _pair_cosine_udf,
     auto_planes,
     seeded_int_planes,
 )
+
+# keyed rows (vectors × tables) per task of the bucket scorer's Python
+# stages: the target of session.task_width, the one sizing rule. Measured
+# ladder, both exchanges pinned at N, semantic_dedup warm at local[4] on
+# the dedup_corpus corpus (perfbench/dedup.py, seed 7, 6,412 vectors,
+# ~25.6k keyed rows; median of 4 runs, wall / process-tree CPU):
+#   N   1 2.87s/4.66s · 2 2.18/5.07 · 4 1.80/5.42 · 8 2.03/6.69
+#       16 2.80/9.55 · 32 3.81/13.88
+# and on a quarter of it (1,606 vectors; median of 5):
+#   N   1 1.35s/2.14s · 2 1.33/2.63 · 4 1.37/3.42 · 8 1.61/4.63
+#       16 2.15/6.45 · 32 3.30/11.44
+# Each partition costs ~0.3 CPU-s however few rows it holds, a keyed row
+# ~0.13 CPU-ms; the wall is flat from ~1.6k to ~6.4k rows a task and
+# rises below. 4096 rows keep a partition's fixed cost under half its row
+# work and put both corpora in the flat band (4 and 2 tasks here); 32
+# cores are full from ~130k keyed rows (~33k vectors at 4 tables). It
+# sizes the keyed exchange only; the grid exchange takes the whole fleet.
+_SCORER_ROWS_PER_TASK = 4096
 
 
 def _project(corpus, id_col, vec_col, block_col):
@@ -137,14 +156,16 @@ def _keyed_buckets(
     target_occupancy: int,
 ):
     """Shared bucket-keying for the candidate generator and the bucketed
-    scorer: ``(keyed, join_keys, dim)`` where ``keyed`` carries ``__id``,
-    ``__vec`` and the bucket key columns, and ``dim`` is the embedding
-    width when a probe resolved it (None on the ``block_col`` path,
-    which needs no planes — the bucketed scorer probes it separately
-    when its cap derivation needs it). On an EMPTY corpus returns the
-    typed empty ``(id_l, id_r)`` frame with ``join_keys=None`` (the
-    empty schema is derived from the projected id column so it matches
-    the non-empty path for ANY id type)."""
+    scorer: ``(keyed, join_keys, dim, n)`` where ``keyed`` carries
+    ``__id``, ``__vec`` and the bucket key columns, ``dim`` is the
+    embedding width when a probe resolved it (None on the ``block_col``
+    path, which needs no planes — the bucketed scorer resolves it in
+    its own count job) and ``n`` the corpus row count when that probe
+    ran (None when ``n_planes`` and ``dim`` were both given, and on the
+    ``block_col`` path). On an EMPTY corpus returns the typed empty
+    ``(id_l, id_r)`` frame with ``join_keys=None`` (the empty schema is
+    derived from the projected id column so it matches the non-empty
+    path for ANY id type)."""
     c = _project(corpus, id_col, vec_col, block_col)
     empty = c.limit(0).select(
         F.col("__id").alias("id_l"), F.col("__id").alias("id_r")
@@ -158,23 +179,21 @@ def _keyed_buckets(
         keyed = c.filter(F.col("__blk").isNotNull()).select(
             "__id", "__vec", F.col("__blk").alias("__bucket")
         )
-        return keyed, ["__bucket"], dim
-    if n_planes is None:
-        # one cheap narrow pass gets n (for the plane count) and the
-        # dimensionality probe together
+        return keyed, ["__bucket"], dim, None
+    n = None
+    if n_planes is None or dim is None:
+        # one cheap narrow pass gets n (for the plane count and the
+        # scorer's width) and the dimensionality probe together
         probe = c.agg(
             F.count(F.lit(1)).alias("n"), F.first(F.size("__vec")).alias("d")
         ).collect()[0]
-        if probe["n"] == 0:
-            return empty, None, dim
-        n_planes = auto_planes(probe["n"], target_occupancy)
+        n = probe["n"]
+        if n == 0:
+            return empty, None, dim, n
+        if n_planes is None:
+            n_planes = auto_planes(n, target_occupancy)
         if dim is None:
             dim = probe["d"]
-    if dim is None:
-        row = c.select(F.size("__vec").alias("d")).limit(1).collect()
-        if not row:
-            return empty, None, dim
-        dim = row[0]["d"]
     planes = [
         seeded_int_planes(dim, n_planes, seed + t) for t in range(n_tables)
     ]
@@ -184,7 +203,7 @@ def _keyed_buckets(
         "__vec",
         F.posexplode(buckets(F.col("__vec"))).alias("__tbl", "__bucket"),
     )
-    return keyed, ["__tbl", "__bucket"], dim
+    return keyed, ["__tbl", "__bucket"], dim, n
 
 
 def semdedup_candidates(
@@ -211,7 +230,7 @@ def semdedup_candidates(
     ``n_planes`` for oracle-replayable determinism independent of n
     (the driver entry does), or to trade recall vs volume by hand.
     """
-    keyed, join_keys, _ = _keyed_buckets(
+    keyed, join_keys, _, _ = _keyed_buckets(
         corpus, id_col, vec_col, n_tables, n_planes, seed, quantize, dim,
         block_col, target_occupancy,
     )
@@ -306,6 +325,8 @@ def eps_similarity_edges_bucketed(
     pair_chunk: int = 1 << 20,
     max_bucket: int | None = None,
     max_grid_tasks: int = 100_000,
+    *,
+    _n_rows: int | None = None,
 ) -> DataFrame:
     """Same edge set as :func:`eps_similarity_edges`, different shuffle
     economics: pairs are scored INSIDE each LSH bucket by one
@@ -374,9 +395,9 @@ def eps_similarity_edges_bucketed(
     16384 → 256. Shrinking the cap harder than the measurement demands
     is not free — the same bench measured a 256 cap at dim 4096
     costing 4.2× wall in grid replication for zero safety gain. The
-    embedding dim is probed from one row when the LSH phase didn't
-    already resolve it (``block_col`` path). An explicit ``max_bucket``
-    int still overrides.
+    embedding dim comes from the scorer's row count job when the LSH
+    phase didn't already resolve it (``block_col`` path). An explicit
+    ``max_bucket`` int still overrides.
 
     **Degenerate-input ceiling (``max_grid_tasks``, r9).** The
     grid-split's work is quadratic in oversized-block size —
@@ -406,29 +427,48 @@ def eps_similarity_edges_bucketed(
     queries.py oracle discussion. ``pair_chunk`` bounds the in-task
     allocation: only a ≤ pair_chunk-element block of the cosine matrix
     ever exists (never O(|b|²) indices or cells — r6 advice closed), so
-    task memory is ≈ ``pair_chunk × 8`` bytes plus the bucket's rows."""
+    task memory is ≈ ``pair_chunk × 8`` bytes plus the bucket's rows.
+
+    **Width.** The keyed exchange below feeds Python stages whose work
+    per row is bounded by the bucket size, so its partition count is
+    ``session.task_width`` of the keyed rows (vectors × ``n_tables``).
+    The vectors are counted by ``_keyed_buckets``' probe when it runs,
+    else taken from ``_n_rows`` (private: :func:`semantic_dedup` passes
+    the count it took for auto planes, because counting its collapsed
+    frame here would run the collapse window's shuffle once more), else
+    counted by one narrow job here. The grid exchange gets the whole
+    fleet (``defaultParallelism``): its groups cost ~cap² pair scores
+    each, however few rows they carry."""
     import numpy as np
     import pandas as pd
 
-    keyed, join_keys, probed_dim = _keyed_buckets(
+    keyed, join_keys, probed_dim, n = _keyed_buckets(
         corpus, id_col, vec_col, n_tables, n_planes, seed, quantize, dim,
         block_col, target_occupancy,
     )
     if join_keys is None:
         return keyed.withColumn("cosine", F.lit(None).cast("double"))
-
-    if max_bucket is None:
-        if probed_dim is None:
-            # block_col path: the LSH phase never probed the width —
-            # one 1-row job resolves it (same bounded-probe shape as
-            # _keyed_buckets' own dim probe)
-            row = (
-                _project(corpus, id_col, vec_col, None)
-                .select(F.size("__vec").alias("d"))
-                .limit(1)
-                .collect()
+    if n is None:
+        n = _n_rows
+    if n is None:
+        # one narrow job counts the corpus and, on the block_col path
+        # (whose keying needs no planes), resolves the embedding width
+        probe = (
+            _project(corpus, id_col, vec_col, None)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.first(F.size("__vec")).alias("d"),
             )
-            probed_dim = row[0]["d"] if row else None
+            .collect()[0]
+        )
+        n = probe["n"]
+        if probed_dim is None:
+            probed_dim = probe["d"]
+    spark = corpus.sparkSession
+    width = task_width(
+        spark, n * (1 if block_col else n_tables), _SCORER_ROWS_PER_TASK
+    )
+    if max_bucket is None:
         max_bucket = derive_max_bucket(probed_dim)
     id_type = dict(keyed.dtypes)["__id"]
     out_schema = f"id_l {id_type}, id_r {id_type}, cosine double"
@@ -545,7 +585,10 @@ def eps_similarity_edges_bucketed(
     # exchanges by input bytes — could serialize sub-cap scoring into a
     # few tasks. A user-specified repartition is AQE-exempt; the window
     # and the small branch's groupBy().applyInPandas both reuse its
-    # hash distribution, so this is still ONE exchange.
+    # hash distribution, so this is still ONE exchange. Its width is
+    # the keyed-row width above: each partition is a Python task with a
+    # fixed cost, and a keyed row's work is bounded by its bucket
+    # (_SCORER_ROWS_PER_TASK).
     #
     # Plan construction here is SQL strings (selectExpr — r16, guide §4
     # driver-side): this kernel is built twice per semantic-dedup entry
@@ -555,10 +598,7 @@ def eps_similarity_edges_bucketed(
     # former Column form (ceil's `/` is fractional in SQL exactly as in
     # Column arithmetic; pmod/least/greatest/sequence are the same
     # functions).
-    from ..session import shuffle_partitions
-
-    n_shuffle = shuffle_partitions(corpus.sparkSession)
-    keyed = keyed.repartition(n_shuffle, *join_keys)
+    keyed = keyed.repartition(width, *join_keys)
     jk = ", ".join(join_keys)
     sized = keyed.selectExpr(
         "*", f"count(1) OVER (PARTITION BY {jk}) AS __bsz"
@@ -612,9 +652,12 @@ def eps_similarity_edges_bucketed(
     # input-vs-output mismatch blocked_pairs pins with num_partitions,
     # SCALING.md "Pair explosion ≠ input bytes"). An explicit
     # repartition(n, keys) is user-specified partitioning, which AQE
-    # honors; applyInPandas then reuses the distribution.
+    # honors; applyInPandas then reuses the distribution. Its width is
+    # the whole fleet (defaultParallelism, session.task_width's cap),
+    # not the keyed-row width: a chunk-pair group costs ~cap² pair
+    # scores whatever the corpus size, so rows are no measure of it.
     grid_keys = [*join_keys, "__gc_i", "__gc_j"]
-    big = big.repartition(n_shuffle, *grid_keys)
+    big = big.repartition(spark.sparkContext.defaultParallelism, *grid_keys)
     big_edges = big.groupBy(*grid_keys).applyInPandas(score_grid, out_schema)
 
     # multi-table OR: the same pair may be scored in several tables with
@@ -720,6 +763,7 @@ def semantic_dedup(
 
     blk = kwargs.get("block_col")
     proj = _project(corpus, id_col, vec_col, blk)
+    n_rows = None
     if blk is None and kwargs.get("n_planes") is None:
         # derive auto-planes from the PRE-collapse count: _keyed_buckets
         # would otherwise size the LSH from the post-collapse row count,
@@ -728,10 +772,16 @@ def semantic_dedup(
         # counts — a different approximate edge set, breaking the
         # decisions-IDENTICAL contract above (r7 advice; the r7 bench
         # checksums matched only because both sizes landed on the same
-        # ceil(log2(n/64))). One narrow count against the id projection.
+        # ceil(log2(n/64))). One narrow count against the id projection;
+        # the bucket scorer sizes its stages from it too (an upper bound
+        # of the rows it gets, and free: its own count would rerun the
+        # collapse window below).
+        n_rows = proj.count()
         kwargs["n_planes"] = auto_planes(
-            proj.count(), kwargs.get("target_occupancy", 64)
+            n_rows, kwargs.get("target_occupancy", 64)
         )
+        if edge_fn is eps_similarity_edges_bucketed:
+            kwargs["_n_rows"] = n_rows
     # The collapse plan below is built from SQL strings (selectExpr /
     # F.expr — r16, guide §4 applied driver-side): the Column-object
     # form issued one py4j round trip per operator node and this

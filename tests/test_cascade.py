@@ -31,6 +31,9 @@ from person_linkage_case_study_spark.plans.preprocess import (
     preprocess_census,
     preprocess_reference_file,
 )
+from person_linkage_case_study_spark.streaming.incremental_linkage import (
+    link_microbatch,
+)
 
 CENSUS_COLS = [
     "record_id", "first_name", "middle_initial", "last_name", "date_of_birth",
@@ -221,6 +224,39 @@ def test_final_attach_one_to_one(spark, fixture, cascade_result):
     got = {r["record_id"]: r["pik"] for r in piked.collect()}
     assert got["c1"] == "P1"
     assert got["c6"] is None
+
+
+def test_thresholded_scoring_keeps_the_score_out_of_the_join(fixture):
+    """``link_microbatch`` scores with a threshold, and its Filter stays
+    above the scoring projection: pushed into the block join's condition
+    it carried the whole score inline, a Jaro-Winkler call per gamma
+    level. Its links are the unthresholded scores' pairs over the
+    threshold."""
+    census, geobase, _, fake_names, _ = fixture
+    batch = preprocess_census(census, fake_names, gq_threshold=99)
+    reference = preprocess_reference_file(geobase)
+    links = link_microbatch(
+        batch, reference, make_model(), ["geokey_for_blocking"], 0.5
+    )
+    tree = links._jdf.queryExecution().optimizedPlan().treeString()
+    joins = [line for line in tree.splitlines() if "Join " in line]
+    assert joins
+    for join in joins:
+        assert not re.search(r"match_probability|jaro_winkler|power\(", join, re.I), join
+
+    from person_linkage_case_study_spark.operators.blocking import blocked_pairs
+    from person_linkage_case_study_spark.operators.scoring import score_pairs
+
+    scored = score_pairs(
+        blocked_pairs(batch, reference, ["geokey_for_blocking"]), make_model()
+    )
+    want = {
+        (r["record_id_l"], r["record_id_r"])
+        for r in scored.collect()
+        if r["match_probability"] >= 0.5
+    }
+    got = {(r[0], r[1]) for r in links.collect()}
+    assert got and got == want
 
 
 def test_full_pvs_pipeline(spark, fixture):

@@ -129,6 +129,62 @@ def test_no_cross_product_in_plan(spark, planted):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("n_planes", [None, 3])
+def test_bucket_scorer_exchanges_sized_by_task_width(spark, planted, n_planes):
+    """The bucket scorer's keyed exchange has ``task_width`` of the keyed
+    rows (vectors left after the exact collapse × ``n_tables``)
+    partitions, not ``spark.sql.shuffle.partitions``: each partition is
+    a Python task, which a small corpus does not fill. Its grid exchange
+    has ``defaultParallelism``: a grid group's work does not shrink with
+    the corpus. With auto planes the count comes from the scorer's dim
+    probe; with both ``n_planes`` and ``dim`` given, from a count of its
+    own."""
+    import re
+
+    from person_linkage_case_study_spark.session import shuffle_partitions, task_width
+    from person_linkage_case_study_spark.similarity.semdedup import (
+        _SCORER_ROWS_PER_TASK,
+    )
+
+    dim = None if n_planes is None else DIM
+    out = semantic_dedup(planted, threshold=0.95, seed=11, n_planes=n_planes, dim=dim)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    pins = re.findall(r"hashpartitioning\(([^()]*), (\d+)\), REPARTITION_BY_NUM", plan)
+    # the keyed exchange shows once per branch: a plan holding a Python
+    # UDF node is not deduplicated
+    widths = {("__gc_i" in keys, int(width)) for keys, width in pins}
+    collapsed = 3  # the exact copies 100..102
+    keyed = task_width(spark, (planted.count() - collapsed) * 4, _SCORER_ROWS_PER_TASK)
+    fleet = spark.sparkContext.defaultParallelism
+    assert widths == {(False, keyed), (True, fleet)}
+    assert keyed != shuffle_partitions(spark)
+
+
+
+def test_auto_planes_plan_counts_the_corpus_once(spark, planted):
+    """With auto planes and ``dim`` given, building the plan runs only the
+    corpus count the planes need: the bucket scorer sizes its stages from
+    that count rather than counting the collapsed frame, which would run
+    the collapse window's shuffle once more."""
+    sc = spark.sparkContext
+
+    def jobs_of(group_id, build):
+        sc.setJobGroup(group_id, group_id)
+        try:
+            build()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group_id))
+
+    n_plan = jobs_of(
+        "test-semdedup-plan",
+        lambda: semantic_dedup(planted, threshold=0.95, seed=11, dim=DIM),
+    )
+    n_count = jobs_of("test-semdedup-count", planted.count)
+    assert n_plan == n_count > 0
+
 def test_auto_planes_scaling():
     """Zero-knob default holds occupancy ≈ target: planes grow with
     log2(n), candidate volume Σ|bucket|² ≈ n×occupancy stays linear."""

@@ -62,6 +62,24 @@ def test_shuffle_partitions_tolerates_non_integer_conf():
     assert shuffle_partitions(FakeSpark(None)) == 200
 
 
+def test_task_width_rule():
+    """One task per ``rows_per_task`` rows, rounded up, at least 2 and at
+    most the session's ``defaultParallelism``."""
+    from types import SimpleNamespace
+
+    from person_linkage_case_study_spark.session import task_width
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=8))
+    assert task_width(spark, 300, 100) == 3
+    assert task_width(spark, 301, 100) == 4  # ceil
+    assert task_width(spark, 150, 100) == 2
+    assert task_width(spark, 1, 100) == 2  # floor
+    assert task_width(spark, 0, 100) == 2
+    assert task_width(spark, 800, 100) == 8
+    assert task_width(spark, 801, 100) == 8  # the defaultParallelism cap
+    assert task_width(spark, 10**12, 100) == 8
+
+
 def test_case_mapping_matches_python(spark):
     """Under the session default (the JVM's case mapping, not ICU's) upper
     and lower of ASCII and accented Latin names are Python's str.upper /
